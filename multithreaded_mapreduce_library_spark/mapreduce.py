@@ -32,6 +32,17 @@ idiom (SURVEY.md §7.2 "hard parts" (d)).
 This module is the fidelity layer; the DataFrame operators in
 ``operators/`` are the performance path (Tungsten, codegen, map-side
 combine). Use those unless you need arbitrary Python map/reduce logic.
+
+Fixed cost of a Python task: every map and reduce task here is a Python
+task. Before each one, PySpark calls ``importlib.invalidate_caches()``,
+which on CPython < 3.13 makes every zipimporter over pyspark.zip and the
+spark-core jar re-read its archive directory, 0.1-0.4 s of executor CPU
+per task, more than a distwc map task's own work. Sessions from
+``session.get_spark`` fork their workers from ``worker_daemon``, which
+skips that re-read while an archive is unchanged. An empty Python job on 4
+cores (Python 3.11.7, Spark 4.1.2) took a median 0.22 s -> 0.10 s at 1
+task, 0.62 s -> 0.24 s at 10 and 2.05 s -> 0.58 s at 40 (PERF.md, "Fixed
+per-task cost").
 """
 
 from __future__ import annotations

@@ -288,10 +288,18 @@ def _cogroup_buckets(spark: SparkSession) -> int:
     spark.graft.cogroup.buckets when a deployment wants a different
     batch/memory trade (each bucket is one Arrow stream in one task).
     Output is invariant to B — each custkey lands wholly in one bucket.
+    An override that is not an integer >= 1 raises ValueError naming the key.
     """
-    explicit = spark.conf.get("spark.graft.cogroup.buckets", None)
+    key = "spark.graft.cogroup.buckets"
+    explicit = spark.conf.get(key, None)
     if explicit is not None:
-        return int(explicit)
+        try:
+            buckets = int(explicit)
+        except ValueError:
+            buckets = 0
+        if buckets < 1:
+            raise ValueError(f"{key} must be an integer >= 1, got {explicit!r}")
+        return buckets
     return max(512, 16 * spark.sparkContext.defaultParallelism)
 
 

@@ -87,7 +87,7 @@ def register(
 # than only the first modules imported. Contains no names not registered
 # elsewhere; everything unlisted follows in registration order.
 _PRIORITY = (
-    # --- round-22 rotated 50-query gate prefix --------------------------
+    # --- round-23 rotated 50-query gate prefix --------------------------
     # Generated by scripts/rotate_prefix.py (which reproduces this list
     # bit-for-bit from the tracked CORRECTNESS files + the changed set).
     # The driver verifies a 50-query PREFIX of this order. Steady-state
@@ -99,14 +99,14 @@ _PRIORITY = (
     #   (2) the least-recently-verified remainder — fill to 50 from the
     #       oldest last-green CORRECTNESS_r*.json round, alphabetical
     #       within a round.
-    # Capacity arithmetic (r22, the SECOND OPTIMIZATION round): the r21
-    # driver run re-greened its 9-changed + 41-r17-green prefix
-    # (CORRECTNESS_r21.json, 50/50), so the r22 fill is the 9 displaced
-    # r17-greens (time_sliding .. wordcount) + the oldest r18-greens
-    # (35 with the 6-query changed set below) — this gives
-    # doc_ngram_novelty's r19-hardened text its first driver row,
-    # closing that open exception (VERDICT r19 #2 / r21 next-round
-    # item 2). Changed-set cap this round: 41 (rotate_prefix.py forecast).
+    # Capacity arithmetic (r23): the r22 gate run re-greened its
+    # 6-changed + 9-r17-green + 35-r18-green prefix (CORRECTNESS_r22.json,
+    # 50/50), so the r23 fill is the 11 displaced r18-greens
+    # (quarantine_malformed .. unpivot_measures) + the 39 oldest
+    # r19-greens, with an EMPTY changed set: this round's changes sit in
+    # shared helpers and the session factory, outside every registered
+    # builder's text. Changed-set cap this round: 39; forecast for r24:
+    # 41, for r25: 5 (rotate_prefix.py --preview).
     # The optimization-round regime (established r21): a gated query
     # whose builder text changes for PERFORMANCE (output-identical,
     # oracle-proven at sf0.01+sf0.1 before landing) takes a changed-set
@@ -118,31 +118,13 @@ _PRIORITY = (
     # staging queue stays empty. Pinned by
     # tests/test_registry_oracle.py::test_gate_prefix_bounds_staleness.
     # Do not pad with trivial variants.
-    # (1) new/changed in r22 (6):
-    "sim_topk_ivf_quantized", "profile_table", "sim_topk_pq",
-    "sim_topk_ivfpq", "dedup_simhash", "cogroup_reconcile",
-    # (2) last green in r17 (9):
-    "time_sliding", "top_supplier", "variant_extract", "volume_shipping",
-    "window_distribution", "window_first_last", "window_moving_avg",
-    "window_topk_per_group", "wordcount",
-    # (2) last green in r18 (35):
-    "agg_stats", "bm25_search", "bpe_train", "calendar_fill", "case_when",
-    "conditional_agg", "contamination_check", "corpus_curation",
-    "count_distinct", "dataset_split", "dedup_clusters", "dedup_exact",
-    "dedup_keep_first", "dedup_minhash_incremental", "dedup_ngram_jaccard",
-    "distinct_rows", "doc_fingerprint", "doc_ngram_novelty",
-    "embedding_centroids", "embedding_outliers", "filter_project",
-    "grouped_map_zscore", "having_filter", "hybrid_retrieval",
-    "incremental_agg", "join_anti", "join_asof_window", "lateral_posexplode",
-    "merge_upsert", "multi_count_distinct", "multimodal_features",
-    "multimodal_metadata", "multimodal_resize", "orderby_limit", "pii_redact",
-    # --- end of gate prefix (50) ----------------------------------------
-    # rotated out, last green r18 (11):
+    # (1) new/changed in r23 (0):
+    # (2) last green in r18 (11):
     "quarantine_malformed", "repetition_ngram", "sample_hash",
     "scalar_subquery", "source_divergence", "stream_dedup_docs",
     "stream_dedup_minhash", "stream_incremental_agg", "stream_lm_score",
     "stream_upsert", "unpivot_measures",
-    # rotated out, last green r19 (48):
+    # (2) last green in r19 (39):
     "compact_apply", "compact_plan", "corr_stats", "correlated_subquery",
     "dedup_semantic", "dedup_semantic_incremental", "dist_moments",
     "event_funnel", "group_cube", "grouping_sets", "ivf_train_centroids",
@@ -153,10 +135,12 @@ _PRIORITY = (
     "multimodal_frame_sample", "quality_score", "sample_stratified",
     "sequence_packing", "sessionize", "sim_lsh_buckets", "sim_near_dup",
     "sim_topk_bruteforce", "sim_topk_ivf_trained", "stream_dedup",
-    "stream_dedup_semantic", "stream_session", "stream_sliding_watermark",
-    "stream_stateful_running_max", "stream_static_join", "stream_stream_join",
-    "stream_tumbling", "time_tumbling", "token_stats", "udtf_tokenize",
-    "window_range_frame",
+    "stream_dedup_semantic", "stream_session",
+    # --- end of gate prefix (50) ----------------------------------------
+    # rotated out, last green r19 (9):
+    "stream_sliding_watermark", "stream_stateful_running_max",
+    "stream_static_join", "stream_stream_join", "stream_tumbling",
+    "time_tumbling", "token_stats", "udtf_tokenize", "window_range_frame",
     # rotated out, last green r20 (45):
     "agg_argmax", "anomaly_mad", "audio_frame_features",
     "customer_distribution", "dedup_substring", "embedding_quantize",
@@ -185,6 +169,22 @@ _PRIORITY = (
     "scalar_string", "scd2_merge", "setop_union", "sim_topk_ivf",
     "sim_topk_multiprobe", "small_qty_revenue", "split_contamination_gate",
     "sql_interface", "stream_transitions", "tf_idf", "waiting_orders",
+    # rotated out, last green r22 (50):
+    "agg_stats", "bm25_search", "bpe_train", "calendar_fill", "case_when",
+    "cogroup_reconcile", "conditional_agg", "contamination_check",
+    "corpus_curation", "count_distinct", "dataset_split", "dedup_clusters",
+    "dedup_exact", "dedup_keep_first", "dedup_minhash_incremental",
+    "dedup_ngram_jaccard", "dedup_simhash", "distinct_rows",
+    "doc_fingerprint", "doc_ngram_novelty", "embedding_centroids",
+    "embedding_outliers", "filter_project", "grouped_map_zscore",
+    "having_filter", "hybrid_retrieval", "incremental_agg", "join_anti",
+    "join_asof_window", "lateral_posexplode", "merge_upsert",
+    "multi_count_distinct", "multimodal_features", "multimodal_metadata",
+    "multimodal_resize", "orderby_limit", "pii_redact", "profile_table",
+    "sim_topk_ivf_quantized", "sim_topk_ivfpq", "sim_topk_pq", "time_sliding",
+    "top_supplier", "variant_extract", "volume_shipping",
+    "window_distribution", "window_first_last", "window_moving_avg",
+    "window_topk_per_group", "wordcount",
 )
 
 

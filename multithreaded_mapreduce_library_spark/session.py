@@ -13,6 +13,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+from multithreaded_mapreduce_library_spark import worker_daemon
+
+# Python workers must import this package (the daemon module, mr_run's
+# mappers) from any cwd, so its parent directory leads their PYTHONPATH.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -34,9 +40,17 @@ def get_spark(
     - UTC session timezone: parquet fixtures are tz-naive; pinning UTC makes
       timestamp semantics match the DuckDB oracle byte-for-byte.
     - Arrow: vectorized toPandas/pandas-UDF transfer.
+    - Python workers fork from ``worker_daemon``, which stops CPython < 3.13
+      re-reading pyspark.zip and the spark-core jar before every task
+      (0.1-0.4 s per task); the package's parent directory goes first on the
+      workers' ``PYTHONPATH``, ahead of any value ``extra_conf`` gives.
     """
     cpus = cpus or default_cpus()
     shuffle_partitions = shuffle_partitions or cpus
+    extra_conf = dict(extra_conf or {})
+    worker_path = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, extra_conf.pop("spark.executorEnv.PYTHONPATH", None)) if p
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -57,10 +71,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
+        .config("spark.python.daemon.module", worker_daemon.__name__)
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

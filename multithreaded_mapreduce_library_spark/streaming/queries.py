@@ -99,15 +99,24 @@ def run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into a
     memory sink and return the settled result as a batch DataFrame.
 
-    Streaming state stores are created one per shuffle partition; under a
-    default 200-partition session that is ~200 HDFS-backed stores per
-    stateful op for a single-file replay (6-11s of pure overhead at
-    sf0.1). Pin a modest state parallelism for the run, restore after.
+    A stateful operator gets one HDFS-backed state store per shuffle
+    partition, and every store costs a fixed load + commit + snapshot per
+    micro-batch whatever rows it holds. A 200-partition session would pay
+    that ~200 times per stateful op for a single-file replay (6-11s of pure
+    overhead at sf0.1), and any count above the task slots only queues more
+    fixed-cost tasks behind the slots without adding parallelism. So the run
+    pins state parallelism to ``defaultParallelism``: one store per task
+    slot. On 4 cores, stream_tumbling's run took a median 1.33 s with 16
+    stores, 0.87 s with 4 and 0.76 s with 1, with identical rows (PERF.md,
+    "Fixed per-task cost"). The session's own value is restored afterwards,
+    also when the stream fails.
     """
     spark = stream_df.sparkSession
     name = f"stream_sink_{next(_sink_ids)}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
     try:
         q = (
             stream_df.writeStream.format("memory")

@@ -36,7 +36,9 @@ from multithreaded_mapreduce_library_spark.session import get_spark
 # reversed "(<id>) <Name>"), so anchoring on the trailing "(<id>)"
 # counts tree nodes exactly once.
 NODE_PATTERNS = {
-    "shuffle_exchange": r"(?<!Broadcast)Exchange \(\d+\)",
+    # a ReusedExchange reads an exchange counted elsewhere: its own column
+    "shuffle_exchange": r"(?<!Broadcast)(?<!Reused)Exchange \(\d+\)",
+    "reused_exchange": r"ReusedExchange \(\d+\)",
     "broadcast_exchange": r"BroadcastExchange \(\d+\)",
     "parquet_scan": r"Scan parquet",
     "rdd_scan": r"Scan ExistingRDD",
@@ -88,7 +90,8 @@ def main() -> None:
     # top offenders, for the round doc
     top = sorted(sweep.items(), key=lambda kv: -kv[1]["shuffle_exchange"])[:12]
     for n, c in top:
-        print(f"{n}: shuffles={c['shuffle_exchange']} bcast={c['broadcast_exchange']} "
+        print(f"{n}: shuffles={c['shuffle_exchange']} reused={c['reused_exchange']} "
+              f"bcast={c['broadcast_exchange']} "
               f"scans={c['parquet_scan']} expand={c['expand']} python={c['python']}")
     spark.stop()
 

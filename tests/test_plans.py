@@ -1481,3 +1481,44 @@ def test_embedding_outliers_final_plan_scans_once(spark, sf_dir):
         load_all()["embedding_outliers"].builder(spark, sf_dir)
     )
     assert final.count("FileScan parquet") == 1, "embeddings must scan once"
+
+
+# The numbered tree of a formatted explain (AQE off) in which one side of a
+# self-join reads the other's exchange.
+_REUSED_EXCHANGE_TREE = """== Physical Plan ==
+* Project (12)
++- * SortMergeJoin Inner (11)
+   :- * Sort (7)
+   :  +- * HashAggregate (6)
+   :     +- Exchange (5)
+   :        +- * HashAggregate (4)
+   :           +- * Project (3)
+   :              +- * Filter (2)
+   :                 +- * Range (1)
+   +- * Sort (10)
+      +- * HashAggregate (9)
+         +- ReusedExchange (8)
+
+
+(5) Exchange
+Input [2]: [k#1L, count#10L]
+
+(8) ReusedExchange [Reuses operator id: 5]
+Output [2]: [k#7L, count#10L]
+"""
+
+
+def test_plan_sweep_counts_reused_exchange_apart():
+    """scripts/plan_sweep.py: a ReusedExchange is no second shuffle; it has
+    its own column, and the details section counts nothing."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+    from scripts.plan_sweep import count_tree_nodes
+
+    counts = count_tree_nodes(_REUSED_EXCHANGE_TREE)
+    assert counts["shuffle_exchange"] == 1
+    assert counts["reused_exchange"] == 1
+    assert counts["broadcast_exchange"] == 0
+    assert counts["smj"] == 1

@@ -2025,3 +2025,64 @@ def test_stream_lm_score_empty_corpus_split(spark, tmp_path):
     assert [f.name for f in got.schema.fields] == [
         "doc_id", "n_bigrams", "avg_bigram_p",
     ]
+
+
+def _started_queries(monkeypatch):
+    """Record every StreamingQuery that DataStreamWriter.start returns."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        q = start(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    return started
+
+
+def test_run_to_memory_one_state_store_per_task_slot(spark, sf_dir, monkeypatch):
+    """A stateful stream run by run_to_memory shuffles its state into
+    defaultParallelism partitions (one store per task slot), whatever the
+    session's own spark.sql.shuffle.partitions is."""
+    started = _started_queries(monkeypatch)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        SPECS["stream_tumbling"].builder(spark, sf_dir).collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    (q,) = started
+    ops = [op for p in q.recentProgress for op in p.stateOperators]
+    assert ops, "stream_tumbling reported no state operator"
+    slots = spark.sparkContext.defaultParallelism
+    assert {op.numShufflePartitions for op in ops} == {slots}
+
+
+def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir):
+    """The session's spark.sql.shuffle.partitions survives run_to_memory,
+    after a clean run and after a stream that fails mid-batch."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from multithreaded_mapreduce_library_spark.streaming.queries import (
+        events_stream,
+        run_to_memory,
+        tumbling_transform,
+    )
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        run_to_memory(tumbling_transform(events_stream(spark, sf_dir)), "complete")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        failing = tumbling_transform(events_stream(spark, sf_dir)).select(
+            "*", F.raise_error(F.lit("boom")).alias("fail")
+        )
+        with pytest.raises(Exception, match="boom"):
+            run_to_memory(failing, "complete")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -10,6 +10,8 @@ scale-adaptive (16 x defaultParallelism) and a deployment override
 
 from __future__ import annotations
 
+import pytest
+
 from multithreaded_mapreduce_library_spark.registry import load_all
 
 SPECS = load_all()
@@ -28,5 +30,20 @@ def test_cogroup_reconcile_invariant_to_bucket_count(spark, sf_dir):
         for b in ("7", "1"):
             spark.conf.set("spark.graft.cogroup.buckets", b)
             assert _rows(SPECS["cogroup_reconcile"].builder(spark, sf_dir)) == base, b
+    finally:
+        spark.conf.unset("spark.graft.cogroup.buckets")
+
+
+def test_cogroup_bucket_override_rejects_bad_values(spark):
+    """A non-integer or < 1 spark.graft.cogroup.buckets fails naming the key."""
+    from multithreaded_mapreduce_library_spark.operators.udfs import _cogroup_buckets
+
+    try:
+        for bad in ("many", "2.5", "0", "-3"):
+            spark.conf.set("spark.graft.cogroup.buckets", bad)
+            with pytest.raises(ValueError, match="spark.graft.cogroup.buckets"):
+                _cogroup_buckets(spark)
+        spark.conf.set("spark.graft.cogroup.buckets", "7")
+        assert _cogroup_buckets(spark) == 7
     finally:
         spark.conf.unset("spark.graft.cogroup.buckets")
