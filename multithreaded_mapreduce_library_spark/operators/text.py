@@ -11,7 +11,9 @@ reference lacks, SURVEY.md §2.2).
 
 from __future__ import annotations
 
+import heapq
 import time
+from collections import defaultdict
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -677,7 +679,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BPE merge-pair training
 # ---------------------------------------------------------------------------
 
-BPE_ROUNDS = 6  # merge rules learned; each extra round is one vocab-scale agg
+BPE_ROUNDS = 6  # merge rules learned; each extra round is one driver-side pass
 
 
 def _bpe_merge_col(syms, lhs: str, rhs: str):
@@ -751,24 +753,24 @@ def _duck_bpe_oracle(rounds: int = BPE_ROUNDS) -> str:
     doc=(
         "BPE tokenizer training — the classic iterative merge-pair "
         "algorithm (Sennrich et al. 2016) run the way SentencePiece/HF "
-        "trainers actually run it at corpus scale: ONE corpus-scale "
-        "wordcount shuffle collapses 100 TB of text into a vocab-sized "
-        "(word, freq, symbol-array) table, localCheckpoint'ed once; "
-        "every merge round after that is VOCAB-scale — adjacent-pair "
-        "explode (narrow), one (l, r) count exchange over freq-weighted "
-        "pairs, a 1-row argmax collect (scalar probe, the Lloyd-training "
-        "precedent), and a narrow literal-pair greedy fold rewriting the "
-        "symbol arrays. The folded vocab is RE-checkpointed every "
-        "BPE_CHECKPOINT_EVERY rounds (r14), bounding the fold layers any "
-        "round replays: work per round is O(vocab x word-length), "
-        "independent of corpus size AND of how many merges came before — "
-        "O(k) total fold layers over a k-merge run, the property that "
-        "makes a real 30k-merge vocab trainable on 100 TB at all "
-        "(flat-per-round probe: scripts/probe_bpe_rounds.py -> PERF.md "
-        "r14). Tiebreak (count DESC, lhs, rhs) is "
+        "trainers actually run it at corpus scale: ONE Spark round — the "
+        "corpus-scale wordcount shuffle collapses 100 TB of text into a "
+        "vocab-sized (word, freq) table, collected to the driver (vocab "
+        "grows sub-linearly with the corpus, Heaps' law). Every merge "
+        "after that runs on the driver over that table with an "
+        "incremental pair index (pair -> summed freq, pair -> words "
+        "holding it): per round a (count DESC, lhs, rhs) argmax over the "
+        "live pairs and a greedy left-to-right fold of only the words "
+        "holding the chosen pair (the _bpe_merge_col fold), so per-round "
+        "cost is independent of corpus size and of how many merges came "
+        "before, and a k-merge run launches the same jobs for any k "
+        "(flat-per-round probe and driver-memory ceiling: "
+        "scripts/probe_bpe_rounds.py -> PERF.md). "
+        "Tiebreak (count DESC, lhs, rhs) is "
         "total and counts are exact BIGINTs; the CONTRACT IS ASCII "
         "corpora (pinned by test_bpe_contract_corpora_are_ascii): on "
-        "ASCII every symbol is one byte, so Spark's and DuckDB's string "
+        "ASCII every symbol is one byte, so the driver's, Spark's and "
+        "DuckDB's string "
         "comparison, indexing and length all coincide and every round's "
         "argmax and rewrite agrees bit-for-bit with the unrolled oracle "
         "(which re-derives its own argmax per round rather than "
@@ -785,97 +787,86 @@ def _duck_bpe_oracle(rounds: int = BPE_ROUNDS) -> str:
 )
 def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    rules = _bpe_train_rules(spark, docs)
+    rules = _bpe_train_rules(docs)
     return spark.createDataFrame(
         rules, "step int, lhs string, rhs string, merged string, pair_count long"
     )
 
 
-# Re-checkpoint the folded vocab every N merge rounds. Without this,
-# round k's pair-count job replays k-1 literal-pair fold layers from the
-# single post-wordcount checkpoint — O(k^2) total fold evaluations over
-# a full training run, the scale gap a real 30k-merge vocab cannot
-# absorb. With it, at most CHECKPOINT_EVERY-1 fold layers are ever live
-# in a round's plan, so per-round cost is flat: O(vocab x word-length x
-# CHECKPOINT_EVERY) — amortized O(k) fold layers total. The value trades
-# lineage depth against checkpoint materializations (each one vocab-scale
-# write+read kept in executor memory/disk); 3 keeps the re-checkpoint
-# path EXERCISED by the default 6-round contract query rather than only
-# by the scale probe (scripts/probe_bpe_rounds.py logs the flat-per-round
-# evidence in PERF.md).
-BPE_CHECKPOINT_EVERY = 3
-
-
 def _bpe_train_rules(
-    spark: SparkSession,
-    docs: DataFrame,
-    rounds: int = BPE_ROUNDS,
-    checkpoint_every: int = BPE_CHECKPOINT_EVERY,
-    on_round=None,
+    docs: DataFrame, rounds: int = BPE_ROUNDS, on_round=None
 ) -> list[tuple]:
-    """The BPE merge-rule training loop shared by bpe_train (the
-    contract query, default rounds) and scripts/probe_bpe_rounds.py (the
-    per-round-flatness scale probe, many rounds). Returns [(step, lhs,
-    rhs, merged, pair_count), ...]. One corpus-scale wordcount shuffle
-    collapses the corpus into a vocab-sized (freq, symbol-array) table,
-    localCheckpoint'ed once; each merge round is then vocab-scale: pair
-    explode (narrow), one (l, r) count exchange, a 1-row argmax collect
-    (scalar probe), and a narrow literal-pair greedy fold. The folded
-    vocab is re-checkpointed every ``checkpoint_every`` rounds so the
-    fold-layer chain a round replays is bounded (see BPE_CHECKPOINT_EVERY
-    above). Superseded checkpoints drop their last driver-side reference
-    on rebind, so Spark's ContextCleaner reclaims their cached blocks —
-    live storage stays O(vocab), not O(rounds). ``on_round(step,
-    seconds)``, when given, receives each round's wall time measured
-    over the argmax job — where any live fold layers and the pending
-    lazy checkpoint actually materialize — feeding the flat-per-round
-    evidence probe (scripts/probe_bpe_rounds.py -> PERF.md)."""
-    vocab = (
-        docs.select(F.explode(tokens("text")).alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").cast("long").alias("f"))
-        .withColumn(
-            "syms",
-            F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))"),
-        )
-        .select("f", "syms")
-        .localCheckpoint(eager=False)
-    )
+    """The BPE merge-rule trainer shared by bpe_train (the contract
+    query, default rounds) and scripts/probe_bpe_rounds.py (the
+    driver-phase scale probe). ONE Spark round: the corpus-scale
+    tokenize + wordcount shuffle, collected as the vocab-sized (w, f)
+    table; every merge after that runs on the driver (_bpe_learn).
+    Returns [(step, lhs, rhs, merged, pair_count), ...]."""
+    vocab = docs.select(F.explode(tokens("text")).alias("w")).groupBy("w").count()
+    return _bpe_learn(vocab.collect(), rounds, on_round)
+
+
+def _bpe_fold(syms: list[str], lhs: str, rhs: str) -> list[str]:
+    """_bpe_merge_col's greedy left-to-right non-overlapping fold on a
+    Python symbol list."""
+    out: list[str] = []
+    for x in syms:
+        if out and out[-1] == lhs and x == rhs:
+            out[-1] = lhs + rhs
+        else:
+            out.append(x)
+    return out
+
+
+def _bpe_learn(vocab, rounds: int = BPE_ROUNDS, on_round=None) -> list[tuple]:
+    """Learn up to ``rounds`` merge rules from (word, freq) rows with an
+    incremental pair index: pair -> summed freq, pair -> ids of the
+    words holding it, and a heap keyed (-count, lhs, rhs) — Python's
+    code-point str order is Spark's UTF-8 byte order. Each round pushes
+    the new count of every pair whose count moved since the last round
+    (live, count > 0, pairs only), skips heap entries whose count has
+    since moved, and takes the top as the (count DESC, lhs, rhs) argmax;
+    it stops when none is left. Only the words holding the chosen pair are
+    re-folded, moving their freq from the old pairs to the new ones. A
+    word id may linger under a pair it no longer holds; re-folding it
+    then is the identity and nets to zero. ``on_round(step, seconds)``,
+    when given, receives each round's wall time
+    (scripts/probe_bpe_rounds.py -> PERF.md)."""
+    words = [(list(w), f) for w, f in vocab]
+    count: dict[tuple[str, str], int] = defaultdict(int)
+    holders: dict[tuple[str, str], set[int]] = defaultdict(set)
+    touched: dict[tuple[str, str], int] = {}  # pair -> count before
+    heap: list[tuple[int, tuple[str, str]]] = []
+
+    def tally(i: int, sign: int) -> None:
+        syms, f = words[i]
+        for pair in zip(syms, syms[1:]):
+            touched.setdefault(pair, count[pair])
+            count[pair] += sign * f
+            if sign > 0:
+                holders[pair].add(i)
+
+    for i in range(len(words)):
+        tally(i, 1)
     rules: list[tuple] = []
-    folds_live = 0  # fold layers applied since the last checkpoint
     for step in range(1, rounds + 1):
-        t0 = time.perf_counter() if on_round else 0.0
-        pairs = (
-            vocab.filter(F.size("syms") >= 2)
-            .select(
-                "f",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(syms)-1), i ->"
-                        " struct(element_at(syms, i) AS l,"
-                        " element_at(syms, i+1) AS r))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("f").cast("long").alias("c"))
-        )
-        best = pairs.orderBy(F.desc("c"), "l", "r").limit(1).collect()
+        t0 = time.perf_counter()
+        for pair, before in touched.items():
+            if count[pair] > 0 and count[pair] != before:
+                heapq.heappush(heap, (-count[pair], pair))
+        touched.clear()
+        while heap and -heap[0][0] != count[heap[0][1]]:
+            heapq.heappop(heap)
+        if not heap:
+            break
+        neg, (lhs, rhs) = heapq.heappop(heap)
+        rules.append((step, lhs, rhs, lhs + rhs, -neg))
+        for i in holders.pop((lhs, rhs)):
+            tally(i, -1)
+            words[i] = (_bpe_fold(words[i][0], lhs, rhs), words[i][1])
+            tally(i, 1)
         if on_round:
             on_round(step, time.perf_counter() - t0)
-        if not best:
-            break
-        lhs, rhs, cnt = best[0]["l"], best[0]["r"], best[0]["c"]
-        rules.append((step, lhs, rhs, lhs + rhs, cnt))
-        vocab = vocab.withColumn("syms", _bpe_merge_col(F.col("syms"), lhs, rhs))
-        folds_live += 1
-        if folds_live >= checkpoint_every:
-            # eager=False: the checkpoint materializes inside the NEXT
-            # round's argmax job (no extra job here), after which that
-            # round and all later ones read the folded vocab from the
-            # checkpoint instead of replaying the fold chain.
-            vocab = vocab.localCheckpoint(eager=False)
-            folds_live = 0
     return rules
 
 

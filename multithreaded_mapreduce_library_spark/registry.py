@@ -101,12 +101,12 @@ _PRIORITY = (
     #       within a round.
     # Capacity arithmetic (r23): the r22 gate run re-greened its
     # 6-changed + 9-r17-green + 35-r18-green prefix (CORRECTNESS_r22.json,
-    # 50/50), so the r23 fill is the 11 displaced r18-greens
-    # (quarantine_malformed .. unpivot_measures) + the 39 oldest
-    # r19-greens, with an EMPTY changed set: this round's changes sit in
-    # shared helpers and the session factory, outside every registered
-    # builder's text. Changed-set cap this round: 39; forecast for r24:
-    # 41, for r25: 5 (rotate_prefix.py --preview).
+    # 50/50), so the r23 prefix is 1 changed query (bpe_train: its
+    # merge rounds moved to the driver, which rewrote its @register
+    # doc) + the 11 displaced r18-greens (quarantine_malformed ..
+    # unpivot_measures) + the 38 oldest r19-greens. Changed-set cap this
+    # round: 39 (1 spent); forecast for r24: 40, for r25: 5
+    # (rotate_prefix.py --preview).
     # The optimization-round regime (established r21): a gated query
     # whose builder text changes for PERFORMANCE (output-identical,
     # oracle-proven at sf0.01+sf0.1 before landing) takes a changed-set
@@ -118,13 +118,14 @@ _PRIORITY = (
     # staging queue stays empty. Pinned by
     # tests/test_registry_oracle.py::test_gate_prefix_bounds_staleness.
     # Do not pad with trivial variants.
-    # (1) new/changed in r23 (0):
+    # (1) new/changed in r23 (1):
+    "bpe_train",
     # (2) last green in r18 (11):
     "quarantine_malformed", "repetition_ngram", "sample_hash",
     "scalar_subquery", "source_divergence", "stream_dedup_docs",
     "stream_dedup_minhash", "stream_incremental_agg", "stream_lm_score",
     "stream_upsert", "unpivot_measures",
-    # (2) last green in r19 (39):
+    # (2) last green in r19 (38):
     "compact_apply", "compact_plan", "corr_stats", "correlated_subquery",
     "dedup_semantic", "dedup_semantic_incremental", "dist_moments",
     "event_funnel", "group_cube", "grouping_sets", "ivf_train_centroids",
@@ -135,12 +136,13 @@ _PRIORITY = (
     "multimodal_frame_sample", "quality_score", "sample_stratified",
     "sequence_packing", "sessionize", "sim_lsh_buckets", "sim_near_dup",
     "sim_topk_bruteforce", "sim_topk_ivf_trained", "stream_dedup",
-    "stream_dedup_semantic", "stream_session",
+    "stream_dedup_semantic",
     # --- end of gate prefix (50) ----------------------------------------
-    # rotated out, last green r19 (9):
-    "stream_sliding_watermark", "stream_stateful_running_max",
-    "stream_static_join", "stream_stream_join", "stream_tumbling",
-    "time_tumbling", "token_stats", "udtf_tokenize", "window_range_frame",
+    # rotated out, last green r19 (10):
+    "stream_session", "stream_sliding_watermark",
+    "stream_stateful_running_max", "stream_static_join", "stream_stream_join",
+    "stream_tumbling", "time_tumbling", "token_stats", "udtf_tokenize",
+    "window_range_frame",
     # rotated out, last green r20 (45):
     "agg_argmax", "anomaly_mad", "audio_frame_features",
     "customer_distribution", "dedup_substring", "embedding_quantize",
@@ -169,8 +171,8 @@ _PRIORITY = (
     "scalar_string", "scd2_merge", "setop_union", "sim_topk_ivf",
     "sim_topk_multiprobe", "small_qty_revenue", "split_contamination_gate",
     "sql_interface", "stream_transitions", "tf_idf", "waiting_orders",
-    # rotated out, last green r22 (50):
-    "agg_stats", "bm25_search", "bpe_train", "calendar_fill", "case_when",
+    # rotated out, last green r22 (49):
+    "agg_stats", "bm25_search", "calendar_fill", "case_when",
     "cogroup_reconcile", "conditional_agg", "contamination_check",
     "corpus_curation", "count_distinct", "dataset_split", "dedup_clusters",
     "dedup_exact", "dedup_keep_first", "dedup_minhash_incremental",

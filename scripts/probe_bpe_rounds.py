@@ -1,117 +1,98 @@
-"""Per-round flatness probe for bpe_train's mid-loop re-checkpoint (r14).
+"""Scale probe for bpe_train's driver-side merge phase.
 
-Without the re-checkpoint, merge round k replays k-1 literal-pair fold
-layers from the single post-wordcount checkpoint, so per-round wall time
-GROWS linearly with k (O(k^2) fold evaluations over a run — the scale
-gap a real 30k-merge vocab cannot absorb). With re-checkpointing every
-BPE_CHECKPOINT_EVERY rounds, at most CHECKPOINT_EVERY fold layers are
-live in any round's plan and per-round time is FLAT.
+bpe_train runs ONE Spark round (the corpus wordcount), collects the
+vocab-sized (word, freq) table and learns every merge on the driver
+with an incremental pair index (operators/text.py::_bpe_learn). This
+probe times that driver phase alone on synthetic Zipf vocabularies —
+word ranks with freq ~ 1/rank, letters drawn with a skewed distribution
+so pairs repeat across words like real text — and reports, per vocab
+size:
 
-Runs _bpe_train_rules over the sf0.1 documents corpus for N rounds
-(default 12, >= the r13 verdict's "flat in a >=12-round probe") twice —
-cadence = BPE_CHECKPOINT_EVERY (the shipped path) and cadence = never
-(checkpoint_every > rounds, the pre-r14 behavior) — and prints one JSON
-line with both per-round timing vectors plus the flatness ratios:
-mean(last 3 rounds) / mean(rounds 2-4). Flat ~= 1 for the shipped path;
-the no-checkpoint path grows with N. Round 1 is excluded from the
-early window on both sides: it materializes the lazy post-wordcount
-checkpoint (the one corpus-scale job), which is shared setup cost, not
-per-round fold cost.
+- per-round wall time in ms, as the median of each tenth of the run
+  (``window_median_ms``): flat or falling means a round costs the same
+  however many merges came before;
+- the one-off index build and the total training time;
+- driver RSS: the baseline before the vocab exists, the peak after
+  training, and their difference per vocab entry (the collected rows
+  plus the trainer's index), which sets the driver-memory ceiling.
 
-Usage: python scripts/probe_bpe_rounds.py [rounds] [sf_dir]
-Writes nothing; prints one JSON line.
+Each size runs in its own child process so RSS peaks do not mix.
+
+Usage: python scripts/probe_bpe_rounds.py [merges] [vocab_size ...]
+Defaults: 1000 merges over 10000, 100000 and 1000000 words.
+Writes nothing; prints one JSON line per vocab size.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import random
+import resource
+import subprocess
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF = "/root/testdata/sf0.1"
+LETTERS = "abcdefghijklmnopqrstuvwxyz"
 
 
-def run(spark, sf_dir: str, rounds: int, cadence: int) -> list[float]:
-    from multithreaded_mapreduce_library_spark.operators.text import (
-        _bpe_train_rules,
-    )
-    from multithreaded_mapreduce_library_spark.sources import load_table
+def rss_mb() -> float:
+    with open("/proc/self/statm") as f:
+        return int(f.read().split()[1]) * os.sysconf("SC_PAGE_SIZE") / 2**20
 
-    times: list[float] = []
-    docs = load_table(spark, sf_dir, "documents")
-    rules = _bpe_train_rules(
-        spark,
-        docs,
-        rounds=rounds,
-        checkpoint_every=cadence,
-        on_round=lambda step, s: times.append(round(s, 3)),
-    )
-    if len(rules) < rounds:
-        raise SystemExit(
-            f"corpus exhausted after {len(rules)} merges — probe needs all"
-            f" {rounds} rounds live; use a larger sf_dir"
-        )
-    return times
+
+def zipf_vocab(n: int, seed: int = 7) -> list[tuple[str, int]]:
+    """n distinct words, freq of rank r = max(1, 10**7 // r)."""
+    rng = random.Random(seed)
+    weights = [1 / (k + 1) for k in range(len(LETTERS))]
+    words: dict[str, None] = {}
+    while len(words) < n:
+        size = rng.randint(3, 10)
+        words["".join(rng.choices(LETTERS, weights, k=size))] = None
+    return [(w, max(1, 10**7 // r)) for r, w in enumerate(words, start=1)]
+
+
+def probe_one(n: int, merges: int) -> dict:
+    from multithreaded_mapreduce_library_spark.operators.text import _bpe_learn
+
+    base = rss_mb()
+    vocab = zipf_vocab(n)
+    rounds_ms: list[float] = []
+    t0 = time.perf_counter()
+    rules = _bpe_learn(vocab, merges, lambda step, s: rounds_ms.append(s * 1000))
+    total = time.perf_counter() - t0
+    peak = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+    tenth = max(1, len(rounds_ms) // 10)
+    windows = [
+        sorted(rounds_ms[i : i + tenth])[len(rounds_ms[i : i + tenth]) // 2]
+        for i in range(0, len(rounds_ms), tenth)
+    ]
+    return {
+        "vocab": n,
+        "merges": len(rules),
+        "index_build_s": round(total - sum(rounds_ms) / 1000, 2),
+        "train_s": round(total, 2),
+        "window_median_ms": [round(w, 2) for w in windows],
+        "max_round_ms": round(max(rounds_ms), 1),
+        "rss_base_mb": round(base, 1),
+        "rss_peak_mb": round(peak, 1),
+        "bytes_per_entry": round((peak - base) * 2**20 / n),
+    }
 
 
 def main() -> None:
-    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 12
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else SF
-    # ratio() compares rounds 2-4 against the LAST 3 rounds; below 7
-    # rounds the two windows overlap and even the no-checkpoint path
-    # reports ~1.0 "flatness" — a small-rounds invocation would look
-    # like passing evidence while measuring nothing (r14 ADVICE).
-    if rounds < 7:
-        raise SystemExit(
-            f"rounds={rounds} < 7: early (2-4) and late (last-3) windows"
-            " overlap and the flatness ratio is meaningless; use >= 7"
-            " (default 12)"
+    if sys.argv[1:2] == ["--one"]:
+        print(json.dumps(probe_one(int(sys.argv[2]), int(sys.argv[3]))))
+        return
+    merges = int(sys.argv[1]) if len(sys.argv) > 1 else 1000
+    sizes = [int(a) for a in sys.argv[2:]] or [10_000, 100_000, 1_000_000]
+    for n in sizes:
+        subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--one", str(n), str(merges)],
+            check=True,
         )
-
-    from pyspark.sql import SparkSession
-
-    from multithreaded_mapreduce_library_spark.operators.text import (
-        BPE_CHECKPOINT_EVERY,
-    )
-
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    try:
-        # warmup: JVM/codegen/scan caches — otherwise whichever variant
-        # runs first absorbs session startup into its early rounds and
-        # skews the early-window denominator
-        run(spark, sf_dir, min(3, rounds), BPE_CHECKPOINT_EVERY)
-        ckpt = run(spark, sf_dir, rounds, BPE_CHECKPOINT_EVERY)
-        nockpt = run(spark, sf_dir, rounds, rounds + 1)
-    finally:
-        spark.stop()
-
-    def ratio(ts: list[float]) -> float:
-        early = sum(ts[1:4]) / 3  # rounds 2-4: past the shared setup round
-        late = sum(ts[-3:]) / 3
-        return round(late / early, 2)
-
-    print(
-        json.dumps(
-            {
-                "rounds": rounds,
-                "sf_dir": sf_dir,
-                "cadence": BPE_CHECKPOINT_EVERY,
-                "per_round_checkpointed": ckpt,
-                "per_round_no_checkpoint": nockpt,
-                "late_over_early_checkpointed": ratio(ckpt),
-                "late_over_early_no_checkpoint": ratio(nockpt),
-            }
-        )
-    )
 
 
 if __name__ == "__main__":

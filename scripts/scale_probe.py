@@ -138,8 +138,8 @@ PROBE = (
     "compact_apply",
     "dedup_semantic_incremental",
     # bpe_train: verbatim doc replication leaves the VOCAB identical
-    # (same words, freqs xN), so the merge rounds — the iterative part —
-    # do constant work and only the initial wordcount agg scales Nx; the
+    # (same words, freqs xN), so the driver-side merge rounds — the
+    # iterative part — do constant work and only the initial wordcount agg scales Nx; the
     # measured ratio should sit far below Nx, pinning the vocab-scale
     # (never corpus-scale) round claim in the docstring.
     "bpe_train",
@@ -199,6 +199,12 @@ PROBE = (
     # ~Nx or below end-to-end (Arrow transfer + vectorized groupby are
     # both linear).
     "cogroup_reconcile",
+    # dedup_simhash (r22 packed bit counters): the per-token md5 and the
+    # per-doc bit-count agg are linear; VERBATIM replication makes every
+    # copy share all band signatures with its source, so the TRUE
+    # candidate set grows ~N^2 — reported against that bound, like
+    # dedup_minhash_incremental.
+    "dedup_simhash",
     # r17: lm_bigram_score = two keyed agg exchanges (bigram + context
     # counts, map-side partials) + two keyed model joins + one doc-mean
     # agg — the first probe whose hot keys are natural-language stopwords

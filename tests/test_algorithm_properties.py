@@ -18,6 +18,7 @@ from hypothesis import strategies as st
 
 from multithreaded_mapreduce_library_spark.operators.text import (
     HH_CAPACITY,
+    _bpe_fold,
     _mg_candidate_batches,
 )
 
@@ -325,19 +326,6 @@ def _greedy_merge(syms: list[str], a: str, b: str) -> list[str]:
     return out
 
 
-def _fold_merge(syms: list[str], a: str, b: str) -> list[str]:
-    """The sequential fold as _bpe_merge_col / the oracle's list_reduce
-    implement it: if the accumulator's last element is a and the current
-    is b, replace the last with a+b, else append."""
-    acc: list[str] = []
-    for x in syms:
-        if acc and acc[-1] == a and x == b:
-            acc[-1] = a + b
-        else:
-            acc.append(x)
-    return acc
-
-
 _syms = st.lists(st.sampled_from(["x", "y", "xx", "xy", "yx", "z"]), max_size=12)
 
 
@@ -349,15 +337,15 @@ def test_bpe_fold_equals_greedy_scan(syms, a, b):
     a, so no re-merge chain). Adversarial small alphabets with symbols
     that are concatenations of each other (x/xx/xy) probe exactly the
     collision cases that claim has to survive."""
-    assert _fold_merge(syms, a, b) == _greedy_merge(syms, a, b)
+    assert _bpe_fold(syms, a, b) == _greedy_merge(syms, a, b)
 
 
 def test_bpe_fold_overlap_runs():
     """The classic overlap pins: runs of the same symbol merge pairwise
     left-to-right, never chained."""
-    assert _fold_merge(["x", "x", "x"], "x", "x") == ["xx", "x"]
-    assert _fold_merge(["x", "x", "x", "x"], "x", "x") == ["xx", "xx"]
-    assert _fold_merge(["x", "x", "x", "x", "x"], "x", "x") == ["xx", "xx", "x"]
+    assert _bpe_fold(["x", "x", "x"], "x", "x") == ["xx", "x"]
+    assert _bpe_fold(["x", "x", "x", "x"], "x", "x") == ["xx", "xx"]
+    assert _bpe_fold(["x", "x", "x", "x", "x"], "x", "x") == ["xx", "xx", "x"]
     # merged symbol colliding with a literal symbol of the same spelling
-    assert _fold_merge(["x", "xx", "x"], "x", "xx") == ["xxx", "x"]
-    assert _fold_merge(["xx", "x", "x"], "xx", "x") == ["xxx", "x"]
+    assert _bpe_fold(["x", "xx", "x"], "x", "xx") == ["xxx", "x"]
+    assert _bpe_fold(["xx", "x", "x"], "xx", "x") == ["xxx", "x"]

@@ -252,6 +252,20 @@ def test_semantic_tau_boundary_agrees_across_engines(spark):
     assert not (spark_below >= SEMANTIC_TAU) and not (duck_below >= SEMANTIC_TAU)
 
 
+# (symbols, lhs, rhs) built to collide: runs of one symbol, merged
+# spellings that equal literal spellings, SQL-hostile pair bytes.
+BPE_FOLD_CASES = [
+    (["x", "x", "x"], "x", "x"),
+    (["x", "x", "x", "x"], "x", "x"),
+    (["x", "xx", "x", "xx"], "x", "xx"),
+    (["xx", "x", "x"], "xx", "x"),
+    (["a", "b", "a", "b", "a"], "a", "b"),
+    (["a"], "a", "a"),
+    (["it's", '"q"', "it's", "\\"], "it's", '"q"'),
+    (["e", "r", "m", "e", "r"], "e", "r"),
+]
+
+
 def test_bpe_merge_fold_parity_adversarial(spark):
     """The bpe_train merge rewrite runs as a Spark aggregate() fold with
     Column literals and as the oracle's DuckDB list_reduce with joined
@@ -263,16 +277,7 @@ def test_bpe_merge_fold_parity_adversarial(spark):
     from multithreaded_mapreduce_library_spark.operators.text import _bpe_merge_col
     from tests.test_algorithm_properties import _greedy_merge
 
-    cases = [
-        (["x", "x", "x"], "x", "x"),
-        (["x", "x", "x", "x"], "x", "x"),
-        (["x", "xx", "x", "xx"], "x", "xx"),
-        (["xx", "x", "x"], "xx", "x"),
-        (["a", "b", "a", "b", "a"], "a", "b"),
-        (["a"], "a", "a"),
-        (["it's", '"q"', "it's", "\\"], "it's", '"q"'),
-        (["e", "r", "m", "e", "r"], "e", "r"),
-    ]
+    cases = BPE_FOLD_CASES
     sdf = spark.createDataFrame(
         [(i, syms) for i, (syms, _, _) in enumerate(cases)], ["i", "syms"]
     )

@@ -4,7 +4,8 @@ against the oracle on synthetic fixtures, not verified ad hoc).
 
 compact_apply: all-keep, all-compact, and empty-table layouts;
 dedup_semantic_incremental: corpus smaller than K_CELLS, empty corpus;
-bpe_train: empty table, pairless vocab, pairs exhausted mid-loop."""
+bpe_train: empty table, pairless vocab, pairs exhausted mid-loop, and the
+driver merge loop against a naive recount."""
 
 from __future__ import annotations
 
@@ -13,6 +14,8 @@ import hashlib
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from multithreaded_mapreduce_library_spark.functions import MOD_P
 from multithreaded_mapreduce_library_spark.registry import load_all
@@ -406,51 +409,88 @@ def test_bpe_train_later_rule_merges_earlier_merged_symbol(spark, tmp_path):
     assert got == [(1, "a", "b", "ab", 3), (2, "ab", "c", "abc", 3)]
 
 
-def test_bpe_recheckpoint_cadence(spark, monkeypatch):
-    """r14: the mid-loop re-checkpoint (O(k^2)->O(k) fold-layer fix)
-    fires exactly every BPE_CHECKPOINT_EVERY merge rounds. Counted by
-    wrapping DataFrame.localCheckpoint: a 6-round run at cadence 3 must
-    checkpoint 3 times — the initial post-wordcount vocab plus rounds 3
-    and 6 — so no round ever replays more than 2 live fold layers."""
-    try:
-        # pyspark>=4: concrete class (pyspark.sql.DataFrame is the ABC)
-        from pyspark.sql.classic.dataframe import DataFrame as _DF
-    except ImportError:  # pragma: no cover - pyspark 3.x layout
-        from pyspark.sql import DataFrame as _DF
+def _naive_bpe(vocab, rounds):
+    """Textbook BPE training: recount every adjacent pair of every word
+    each round, take the (count DESC, lhs, rhs) argmax, greedy-merge it
+    everywhere; stop when no pair is left."""
+    from collections import Counter
+
+    from tests.test_algorithm_properties import _greedy_merge
+
+    words = [(list(w), f) for w, f in vocab]
+    rules = []
+    for step in range(1, rounds + 1):
+        counts = Counter()
+        for syms, f in words:
+            for pair in zip(syms, syms[1:]):
+                counts[pair] += f
+        if not counts:
+            break
+        (lhs, rhs), c = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        rules.append((step, lhs, rhs, lhs + rhs, c))
+        words = [(_greedy_merge(syms, lhs, rhs), f) for syms, f in words]
+    return rules
+
+
+@given(
+    st.dictionaries(
+        st.text(alphabet="abcd", min_size=1, max_size=6),
+        st.integers(min_value=1, max_value=3),
+        max_size=8,
+    ),
+    st.integers(min_value=1, max_value=12),
+)
+@settings(max_examples=300, deadline=None)
+def test_bpe_incremental_learn_equals_naive_recount(vocab, rounds):
+    """The driver trainer's incremental pair index (only the words
+    holding the chosen pair are re-folded and re-counted) learns exactly
+    the rules of a trainer that recounts everything each round. Tiny
+    alphabets and freqs force count ties (the lhs, rhs tiebreak) and
+    rounds beyond the vocab's pair supply force early exhaustion."""
+    from multithreaded_mapreduce_library_spark.operators.text import _bpe_learn
+
+    assert _bpe_learn(vocab.items(), rounds) == _naive_bpe(vocab.items(), rounds)
+
+
+def test_bpe_driver_fold_matches_spark_fold(spark):
+    """bpe_train folds on the driver, bpe_apply through _bpe_merge_col;
+    apply(train(corpus)) only reproduces the trained segmentation if
+    the two folds agree, on the adversarial cases of the cross-engine
+    fold parity test."""
+    from pyspark.sql import functions as F
 
     from multithreaded_mapreduce_library_spark.operators.text import (
-        BPE_CHECKPOINT_EVERY,
-        BPE_ROUNDS,
-        _bpe_train_rules,
+        _bpe_fold,
+        _bpe_merge_col,
     )
+    from tests.test_cross_engine_primitives import BPE_FOLD_CASES
 
-    assert BPE_CHECKPOINT_EVERY == 3 and BPE_ROUNDS == 6  # cadence arithmetic below
-    calls = []
-    orig = _DF.localCheckpoint
-
-    def counting(self, eager=True):
-        calls.append(eager)
-        return orig(self, eager=eager)
-
-    monkeypatch.setattr(_DF, "localCheckpoint", counting)
-    docs = spark.createDataFrame([("abcdefg",)] * 3, "text string")
-    rules = _bpe_train_rules(spark, docs)
-    assert len(rules) == BPE_ROUNDS  # single 7-char word: 6 full merges
-    assert len(calls) == 1 + BPE_ROUNDS // BPE_CHECKPOINT_EVERY
-    assert all(e is False for e in calls)  # lazy: materialize in the next job
+    for syms, a, b in BPE_FOLD_CASES:
+        (row,) = (
+            spark.createDataFrame([(syms,)], "syms array<string>")
+            .select(_bpe_merge_col(F.col("syms"), a, b).alias("m"))
+            .collect()
+        )
+        assert _bpe_fold(syms, a, b) == list(row["m"]), (syms, a, b)
 
 
-def test_bpe_recheckpoint_cadence_is_semantics_free(spark):
-    """The checkpoint cadence is an execution detail only: every cadence
-    (each round / every 2 / effectively never) must learn the identical
-    rule sequence — including through an early pair-exhaustion break."""
+def test_bpe_train_jobs_do_not_grow_with_rounds(spark):
+    """Training is ONE Spark round (the corpus wordcount); the merge
+    rounds run on the driver, so 1 and 6 merges launch the same jobs."""
     from multithreaded_mapreduce_library_spark.operators.text import _bpe_train_rules
 
-    docs = spark.createDataFrame([("abc ab de",), ("abc de",)], "text string")
-    want = _bpe_train_rules(spark, docs, checkpoint_every=10**9)
-    assert len(want) >= 3  # exercises at least one mid-loop checkpoint at 1 and 2
-    for every in (1, 2):
-        assert _bpe_train_rules(spark, docs, checkpoint_every=every) == want
+    docs = spark.createDataFrame([("abcdefg",)] * 3, "text string")
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for rounds in (1, 6):
+            group = f"bpe-train-rounds-{rounds}"
+            sc.setJobGroup(group, group)
+            assert len(_bpe_train_rules(docs, rounds=rounds)) == rounds
+            jobs[rounds] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("", "")
+    assert 0 < jobs[1] == jobs[6], jobs
 
 
 # ---------------------------------------------------------------------------
@@ -583,46 +623,3 @@ def test_lloyd_seeds_agree_on_nondense_fixture(spark, tmp_path):
     want = _duck_rows(SPECS["sim_topk_ivfpq"].oracle, str(gapped), ["embeddings"])
     assert got, "sim_topk_ivfpq: empty result on the gapped fixture"
     assert got == want, "sim_topk_ivfpq: engines disagree on gapped ids"
-
-
-def test_bpe_recheckpoint_truncates_lineage(spark):
-    """The mechanism behind the flat-per-round claim, pinned at the PLAN
-    level (the cadence test above only counts localCheckpoint calls): a
-    materialized mid-loop checkpoint must make the next round's plan
-    scan the checkpointed RDD directly — no replayed fold layers, no
-    Exchange — so per-round fold cost cannot grow with rounds elapsed."""
-    from pyspark.sql import functions as F
-
-    from multithreaded_mapreduce_library_spark.functions import tokens
-    from multithreaded_mapreduce_library_spark.operators.text import _bpe_merge_col
-
-    docs = spark.createDataFrame([("abcdefg",)] * 3, "text string")
-    vocab = (
-        docs.select(F.explode(tokens("text")).alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").cast("long").alias("f"))
-        .withColumn(
-            "syms",
-            F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))"),
-        )
-        .select("f", "syms")
-        .localCheckpoint(eager=False)
-    )
-    for pair in [("a", "b"), ("ab", "c"), ("abc", "d")]:
-        vocab = vocab.withColumn("syms", _bpe_merge_col(F.col("syms"), *pair))
-    # each _bpe_merge_col fold contributes exactly one aggregate() to the
-    # Project expression; before the re-checkpoint all three layers are
-    # live in the replayed lineage
-    pre = vocab._jdf.queryExecution().executedPlan().toString()
-    assert pre.count("aggregate(") == 3
-    vocab = vocab.localCheckpoint(eager=False)
-    vocab.count()  # materialize the lazy checkpoint
-    post_round = vocab.withColumn(
-        "syms", _bpe_merge_col(F.col("syms"), "abcd", "e")
-    )
-    plan = post_round._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in plan, "post-checkpoint round must scan the checkpoint"
-    assert "Exchange" not in plan, "post-checkpoint fold round must stay narrow"
-    # the three pre-checkpoint fold layers are GONE from the lineage;
-    # only the one new fold's aggregate() remains
-    assert plan.count("aggregate(") == 1

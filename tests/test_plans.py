@@ -263,10 +263,20 @@ def test_cogroup_plan_shape(spark, sf_dir):
     custkey — one Python call per key was the measured cost (guide §4.2),
     so a raw-key plan is a performance regression even though its output
     is identical."""
+    import re
+
     plan = formatted_plan(SPECS["cogroup_reconcile"].builder(spark, sf_dir))
-    assert "FlatMapCoGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
-    assert "pmod" in plan, "cogroup key must be the bucketed custkey"
+    # the node's Arguments line opens with its left and right grouping keys
+    node = re.search(
+        r"\(\d+\) FlatMapCoGroupsInPandas\n(?:.*\n)*?Arguments: \[([^\]]+)\], \[([^\]]+)\]",
+        plan,
+    )
+    assert node, "no FlatMapCoGroupsInPandas node"
+    for key in node.groups():
+        assert re.search(rf"pmod\(o_custkey#\d+L?, \d+\) AS {re.escape(key)}\b", plan), (
+            f"cogroup key {key} must be the bucketed custkey"
+        )
 
 
 def test_corpus_curation_broadcasts_drop_list(spark, sf_dir):
