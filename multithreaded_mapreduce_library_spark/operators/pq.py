@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from multithreaded_mapreduce_library_spark.operators.similarity import (
     _DUCK_LLOYD_CTES,
     _FX,
-    _SPARK_D2,
     _duck_cosine,
     _duck_fold_sum,
     _dvec,
@@ -131,37 +130,16 @@ def _pq_sub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_assign(sub: DataFrame, codebooks: DataFrame) -> DataFrame:
-    """Nearest-codeword assignment per (vec_id, m): broadcast the
-    M×k codebook rows, shared-fold squared-L2, argmin window with the
-    codeword-id tiebreak — exactly k rows per (vec_id, m) key, bounded
-    and unskewable."""
-    crossed = (
-        sub.select("vec_id", "m", F.col("sv").alias("va"))
-        .join(
-            F.broadcast(codebooks.select(F.col("m").alias("m2"), "cid", "vc")),
-            F.col("m") == F.col("m2"),
-        )
-        .withColumn("d2", F.expr(_SPARK_D2))
-    )
-    w = W.partitionBy("vec_id", "m").orderBy("d2", "cid")
-    return (
-        crossed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "m", "cid", "d2", F.col("va").alias("sv"))
-    )
-
-
 def _pq_codebook_literal(rows) -> str:
     """SQL literal for a collected codebook: an array indexed by subspace
     m of array<struct<c: array<double>, cid: bigint>>. Doubles round-trip
     collect -> repr -> SQL literal losslessly (shortest round-trip
     strings, correctly-rounded decimal-literal -> DOUBLE conversions —
-    the similarity._lloyd_assign narrow-argmin precedent), so the
-    literal codewords are bit-identical to the broadcast-frame values
-    the window path joins. Codewords are emitted sorted by (m, cid) for
-    deterministic expression text; array_min's (d2, cid) struct
-    comparison is order-independent regardless."""
+    the similarity._nearest_centroid precedent), so the literal
+    codewords are bit-identical to the collected values. Codewords are
+    emitted sorted by (m, cid) for deterministic expression text;
+    array_min's (d2, cid) struct comparison is order-independent
+    regardless."""
     by_m: dict[int, list] = {m: [] for m in range(PQ_M)}
     for r in rows:
         by_m[int(r["m"])].append((int(r["cid"]), [float(x) for x in r["vc"]]))
@@ -179,9 +157,9 @@ def _pq_codebook_literal(rows) -> str:
     return "array(" + ",".join(subs) + ")"
 
 
-# Shared narrow squared-L2 fold against a literal codeword — textually the
-# same sequential fold as _SPARK_D2 (identical operand order => identical
-# doubles), with the codeword coming from the literal instead of a column.
+# Shared narrow squared-L2 fold against a literal codeword — the same
+# sequential fold as similarity._nearest_centroid and the oracles'
+# _duck_d2n (identical operand order => identical doubles).
 _PQ_D2_CW = (
     "aggregate(zip_with(sv, cw.c, (x, y) -> (x - y) * (x - y)),"
     " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
@@ -189,20 +167,21 @@ _PQ_D2_CW = (
 
 
 def _pq_assign_narrow(sub: DataFrame, rows) -> DataFrame:
-    """(vec_id, m, cid, d2, sv) — the zero-exchange literal-argmin twin of
-    _pq_assign (r21 optimization; agreement pinned by
+    """(vec_id, m, cid, d2, sv) — nearest-codeword assignment per
+    (vec_id, m) as a zero-exchange literal argmin (agreement with the
+    oracle's p1/p2 window argmins pinned by
     tests/test_pq.py::test_pq_narrow_assign_agrees_with_window): the
     M×k collected codebook rows fold into the plan as a literal, each
     row picks array_min over the k codewords OF ITS OWN SUBSPACE
-    (element_at by m), and struct comparison reproduces the window
-    path's (d2, cid) ORDER BY exactly. The assignment rides the scan —
-    no broadcast join, no N×M×k window exchange+sort; at 100 TB the
-    only remaining wide work per assignment pass is the narrow map
-    itself. PQ_M×PQ_K = {0} literal codewords of {1} doubles — the same
+    (element_at by m), and struct comparison reproduces the oracle's
+    (d2, cid) ORDER BY exactly. The assignment rides the scan — no
+    broadcast join, no N×M×k window exchange+sort; at 100 TB the only
+    remaining wide work per assignment pass is the narrow map itself.
+    PQ_M×PQ_K = {0} literal codewords of {1} doubles — the same
     driver-literal volume class as the accepted K_CELLS×DIM Lloyd
     argmin.""".format(PQ_M * PQ_K, SUB)
     if not rows:
-        # window-path twin: joining an empty broadcast yields no rows
+        # an empty codebook assigns nothing
         return (
             sub.select(
                 "vec_id",
@@ -278,36 +257,21 @@ def _pq_final(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
     return _pq_assign_narrow(_pq_sub(spark, sf_dir), newc_rows), newc_rows
 
 
-def _pq_code_arrays(assigned: DataFrame) -> DataFrame:
-    """(vec_id, codes) — the per-vector tinyint code array (codes[m] =
-    codeword id; 3 bits of information per byte at PQ_K=8, one full byte
-    per subspace at k=256). One bounded groupBy(vec_id) exchange, M rows
-    per key."""
-    return assigned.groupBy("vec_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("m", "cid"))),
-            lambda s: s["cid"].cast("tinyint"),
-        ).alias("codes")
-    )
-
-
 def _pq_codes_narrow(e: DataFrame, rows, vcol: str = "v") -> DataFrame:
     """(vec_id, codes) — the per-vector tinyint code array computed as
     ONE narrow projection over the full-vector frame ``e`` (vec_id,
-    ``vcol``: array<double>), r22 twin of
-    ``_pq_code_arrays(_pq_assign_narrow(_pq_sub(...), rows))`` with the
-    subvector explode AND the bounded groupBy(vec_id) exchange both
-    removed (guide §2.4): per subspace m the codeword argmin is the same
-    literal array_min over (d2, cid) structs as _pq_assign_narrow — the
-    slice/zip_with/fold operand order is textually identical, so d2 and
-    the picked cid are bit-identical — and the output array is ordered
-    by m exactly like _pq_code_arrays' array_sort over the dense m keys.
+    ``vcol``: array<double>) — _pq_assign_narrow's per-subspace codes
+    gathered per vector in m order, with no subvector explode and no
+    groupBy(vec_id) exchange (r22, guide §2.4): per subspace m the
+    codeword argmin is the same literal array_min over (d2, cid) structs
+    as _pq_assign_narrow — the slice/zip_with/fold operand order is
+    textually identical, so d2 and the picked cid are bit-identical.
     Agreement is pinned by
     tests/test_pq.py::test_pq_narrow_codes_agree_with_grouped.
     At 100 TB the code build rides the scan: no M-rows-per-vector
     explode, no corpus-wide exchange carrying the code bytes."""
     if not rows:
-        # grouped-path twin: an empty codebook assigns nothing
+        # an empty codebook assigns nothing
         return (
             e.select(
                 "vec_id",
@@ -538,7 +502,7 @@ def _ivfpq_coded(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
     to the two separate collects it replaces."""
     e = _load_embeddings(spark, sf_dir).select("vec_id", _dvec("embedding").alias("v"))
     sub = _pq_sub(spark, sf_dir)
-    lloyd_a1 = _lloyd_assign(e, _lloyd_seeds(e), narrow=True)
+    lloyd_a1 = _lloyd_assign(e, _lloyd_seeds(e).collect())
     seed_rows = (
         sub.filter(F.col("vec_id") < PQ_K)
         .select("m", F.col("vec_id").alias("cid"), F.col("sv").alias("vc"))
@@ -552,7 +516,7 @@ def _ivfpq_coded(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
     rows = lu.unionByName(pu).collect()
     cent_rows = [r for r in rows if r["m"] is None]
     newc_rows = [r for r in rows if r["m"] is not None]
-    base = _lloyd_assign(e, cent_rows, narrow=True)  # (vec_id, cid, d2, va)
+    base = _lloyd_assign(e, cent_rows)  # (vec_id, cid, d2, va)
     if newc_rows:
         coded = base.select(
             "vec_id", "cid", F.expr(_pq_codes_expr(newc_rows, "va")).alias("codes")

@@ -559,19 +559,7 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- IVF centroid training (one exact Lloyd refinement) --------------------
 K_CELLS = 8
-# Measured narrow-argmin envelope (scripts/probe_lloyd_k_sweep.py, PERF.md
-# r16: k-sweep 8/16/32/64 on the 16x fixture): the literal argmin's
-# driver-side eager build grows with k and crosses ABOVE the window path
-# at k ~ 16 under single consumption, while both stay bit-identical at
-# every k. Callers that don't choose a strategy get narrow only inside
-# this envelope; explicit narrow=True/False always wins (the gated k=8
-# consumers pass narrow=True and are untouched by the default).
-NARROW_K_MAX = 16
 _FX = 1_000_000  # centroid/assignment fixed-point scale (1e-6)
-
-# Squared-L2 distance as the same sequential left fold as cosine above:
-# identical operand order on both engines → bit-identical doubles.
-_SPARK_D2 = _fold_sum("zip_with(va, vc, (x, y) -> (x - y) * (x - y))")
 
 
 def _duck_d2(a: str, b: str) -> str:
@@ -643,10 +631,10 @@ FROM a2
         "over; the convergence loop is real — _lloyd_final_assignment "
         "takes a rounds parameter (this gated query is rounds=1), and "
         "inertia is pinned monotone non-increasing across rounds. Shuffle "
-        "story (r15 narrow-assign migration): centroids are k rows, "
-        "fetched to the driver and folded into the plan as a LITERAL "
-        "array — assignment is array_min over struct(d2, cid), one "
-        "narrow whole-stage-codegen projection, ZERO exchange (no "
+        "story: centroids are k rows, fetched to the driver once and "
+        "folded into the plan as a LITERAL array — assignment is "
+        "array_min over struct(d2, cid), one narrow "
+        "whole-stage-codegen projection, ZERO exchange (no "
         "window, no join; plan-pinned); the update is a posexplode into "
         f"(cid, pos) partial-aggregated counters — {K_CELLS}×{DIM} groups "
         "regardless of corpus size. At 100 TB nothing wide ever shuffles: "
@@ -654,7 +642,7 @@ FROM a2
     ),
 )
 def ivf_train_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _lloyd_final_assignment(spark, sf_dir, narrow=True).select(
+    return _lloyd_final_assignment(spark, sf_dir).select(
         "vec_id",
         F.col("cid").cast("long").alias("cell_id"),
         F.floor(F.col("d2") * _FX + F.lit(0.5)).cast("long").alias("d2_fx"),
@@ -667,9 +655,10 @@ def ivf_train_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # assign/update closures over the FULL embeddings table while
 # _lloyd_cells_for duplicated them for an arbitrary (corpus-split) frame.
 # Everything — the five IVF/PQ training consumers AND the semantic-
-# admission pair (batch + streaming) — now runs through the four
-# functions below. Bit-identity across the unification is guaranteed by
-# the same tricks as before (sequential-fold d2, fixed-point integer
+# admission pair (batch + streaming) — now runs through the functions
+# below, and every nearest-centroid pick through _nearest_centroid.
+# Bit-identity across the unification is guaranteed by the same tricks
+# as before (sequential-fold d2, fixed-point integer
 # centroid means) plus one seed-rule note: BOTH engines seed with the
 # K_CELLS smallest vec_ids PRESENT in the input frame — Spark via
 # orderBy/limit (_lloyd_seeds), the oracles via `ORDER BY vec_id LIMIT K`
@@ -689,122 +678,67 @@ def _lloyd_seeds(e: DataFrame) -> DataFrame:
     )
 
 
-def _lloyd_assign(
-    e: DataFrame, centroids: DataFrame, narrow: bool | None = None
-) -> DataFrame:
-    """(vec_id, cid, d2, va): nearest-centroid assignment of an
-    embeddings frame (vec_id, v) to a k-row centroid frame (cid, vc).
-    Squared-L2 is the shared sequential fold (bit-identical operand
-    order on both engines), centroid-id tiebreak.
+def _nearest_centroid(rows, vcol: str) -> str:
+    """SQL for the nearest-centroid argmin of the array<double> column
+    ``vcol`` against collected (cid, vc) centroid rows (non-empty):
+    ``array_min`` over one ``struct(d2, cid)`` per centroid, with the
+    centroids folded into the plan as literal arrays. d2 is the shared
+    sequential squared-L2 fold (the same operand order as the oracles'
+    _duck_d2, so bit-identical doubles), and struct comparison is
+    field-lexicographic, so the pick IS the oracles' ``ORDER BY d2,
+    cid`` tiebreak. Doubles round-trip collect -> repr -> SQL literal
+    losslessly (shortest round-trip strings, correctly-rounded
+    decimal-literal -> DOUBLE conversions). Terms are emitted in cid
+    order for deterministic expression text; the argmin itself is
+    order-independent. ONE parsed SQL string, not k*dim F.lit calls:
+    each Column call is a py4j round trip, and at k=8 x dim=64 the
+    F.lit form spent ~0.5s of driver time per build vs ~0.1s (r15)."""
 
-    Two physically different, bit-identical strategies (agreement pinned
-    by tests/test_plans.py::test_lloyd_narrow_assign_agrees_with_window):
+    def arr(vc) -> str:
+        return "array(" + ",".join(repr(float(x)) for x in vc) + ")"
 
-    - ``narrow=False`` (the historical window path): BROADCAST the
-      centroid frame, cross the scan, pick the argmin with a
-      ``row_number`` window partitioned by vec_id — exactly k rows per
-      key (bounded, never skewed), but the window is a REAL exchange +
-      sort of N*k rows.
-    - ``narrow=True`` (the streaming path's literal argmin, hoisted —
-      streaming/queries.py's semantic_admission_stream_transform
-      precedent): fetch the k centroids to the driver (k x dim doubles,
-      the same constant-size class as the accepted k-row centroid
-      fetches elsewhere), fold them into the plan as a literal
-      ``array<struct<d2, cid>>`` and take ``array_min`` — struct
-      comparison is field-lexicographic, so the (d2, cid) tiebreak is
-      IDENTICAL to the window's ORDER BY, computed in one narrow
-      whole-stage-codegen projection with ZERO exchange.  Doubles
-      round-trip collect -> repr -> SQL literal losslessly (shortest
-      round-trip strings, correctly-rounded parses), so
-      d2 and the assignment agree bit-for-bit with the window path.
-
-    Migration note (docs/lloyd_narrow_assign_migration.md): gated
-    consumers flip to ``narrow=True`` in rotation-cap-sized waves;
-    flipping a consumer changes its physical plan only — never a value.
-
-    ``narrow=None`` (the default) encodes the measured envelope: narrow
-    iff K_CELLS <= NARROW_K_MAX (read at call time, same as the k-sweep's
-    monkeypatch point). The envelope is therefore only meaningful for a
-    K_CELLS-sized centroid frame — deciding from the frame's own row
-    count would cost an extra count() job on the window path, so instead
-    the narrow path (which collects the frame anyway) raises ValueError
-    (-O-proof, unlike an assert) when the actual k is outside the
-    measured envelope and the strategy was
-    envelope-resolved: a caller assigning against a custom-k frame
-    without adjusting K_CELLS fails loudly instead of silently building
-    an oversized literal argmin the k-sweep never certified. Callers
-    with a deliberate off-envelope k pass ``narrow=`` explicitly
-    (explicit flags always win, unasserted). Tests/probes that mean the
-    WINDOW path pass ``narrow=False`` explicitly.
-    """
-    envelope_resolved = narrow is None
-    if narrow is None:
-        narrow = K_CELLS <= NARROW_K_MAX
-    if narrow:
-        # r21: a caller that already holds the k collected centroid Rows
-        # (e.g. _ivfq_coded, which fuses the centroid collect with its
-        # global-scale agg in one job) may pass them as a list — same
-        # fields, no extra local-relation round trip. List callers must
-        # pass narrow=True explicitly (the window path needs a frame).
-        pre = centroids if isinstance(centroids, list) else centroids.collect()
-        rows = sorted(pre, key=lambda r: r["cid"])
-        if envelope_resolved and len(rows) > NARROW_K_MAX:
-            # ValueError, not assert: python -O strips asserts, and this
-            # guard is the documented fail-loudly property (r18 ADVICE)
-            raise ValueError(
-                f"narrow=None resolved narrow for K_CELLS={K_CELLS} but the "
-                f"centroid frame has {len(rows)} rows (> NARROW_K_MAX="
-                f"{NARROW_K_MAX}) — the measured envelope does not apply; "
-                "pass narrow= explicitly (or set K_CELLS) for custom-k frames"
-            )
-        if not rows:
-            # window path: cross join with an empty broadcast => empty
-            return (
-                e.select(
-                    "vec_id",
-                    F.lit(None).cast("long").alias("cid"),
-                    F.lit(None).cast("double").alias("d2"),
-                    F.col("v").alias("va"),
-                )
-                .where(F.lit(False))
-            )
-        # ONE SQL string, not k*dim F.lit calls: each Column call is a
-        # py4j round trip, and at k=8 x dim=64 the F.lit formulation
-        # spent ~0.5s of driver time per build vs ~0.1s for a single
-        # parsed expression (measured r15; values bit-identical —
-        # repr() is the shortest round-trip string and Spark's
-        # decimal/exponent literal -> DOUBLE conversions are correctly
-        # rounded, the streaming twin's long-standing precedent).
-        def arr(vc) -> str:
-            return "array(" + ",".join(repr(float(x)) for x in vc) + ")"
-
-        terms = ",".join(
-            f"struct(aggregate(zip_with(va, {arr(r['vc'])},"
-            " (x, y) -> (x - y) * (x - y)),"
-            " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) AS d2,"
-            f" CAST({int(r['cid'])} AS BIGINT) AS cid)"
-            for r in rows
-        )
-        return (
-            e.select("vec_id", F.col("v").alias("va"))
-            .withColumn("_best", F.expr(f"array_min(array({terms}))"))
-            .select(
-                "vec_id",
-                F.col("_best.cid").alias("cid"),
-                F.col("_best.d2").alias("d2"),
-                "va",
-            )
-        )
-    crossed = (
-        e.select("vec_id", F.col("v").alias("va"))
-        .join(F.broadcast(centroids))
-        .withColumn("d2", F.expr(_SPARK_D2))
+    terms = ",".join(
+        f"struct(aggregate(zip_with({vcol}, {arr(r['vc'])},"
+        " (x, y) -> (x - y) * (x - y)),"
+        " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) AS d2,"
+        f" CAST({int(r['cid'])} AS BIGINT) AS cid)"
+        for r in sorted(rows, key=lambda r: r["cid"])
     )
-    w = W.partitionBy("vec_id").orderBy("d2", "cid")
+    return f"array_min(array({terms}))"
+
+
+def _lloyd_assign(e: DataFrame, rows) -> DataFrame:
+    """(vec_id, cid, d2, va): nearest-centroid assignment of an
+    embeddings frame (vec_id, v) to collected (cid, vc) centroid rows —
+    the _nearest_centroid literal argmin, one narrow whole-stage-codegen
+    projection with ZERO exchange and no join (the k centroids live in
+    the plan). Agreement with the oracles' window argmin, d2 bits
+    included, is pinned by
+    tests/test_plans.py::test_lloyd_narrow_assign_agrees_with_window.
+
+    Envelope: the literal's driver-side build grows with k (2.7 s at
+    k=8, 6.9 s at k=64 in the r16 k-sweep, PERF.md, 16x fixture), and it
+    is measured for k <= 16 only; K_CELLS is 8. Raising K_CELLS past 16
+    means measuring again — a broadcast + row_number window argmin is no
+    fallback at scale, because it exchanges and sorts N*k rows."""
+    if not rows:
+        # no centroids: nothing to assign to (the oracles' cross join
+        # with an empty centroid CTE is empty too)
+        return e.select(
+            "vec_id",
+            F.lit(None).cast("long").alias("cid"),
+            F.lit(None).cast("double").alias("d2"),
+            F.col("v").alias("va"),
+        ).where(F.lit(False))
     return (
-        crossed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid", "d2", "va")
+        e.select("vec_id", F.col("v").alias("va"))
+        .withColumn("_best", F.expr(_nearest_centroid(rows, "va")))
+        .select(
+            "vec_id",
+            F.col("_best.cid").alias("cid"),
+            F.col("_best.d2").alias("d2"),
+            "va",
+        )
     )
 
 
@@ -835,45 +769,34 @@ def _lloyd_update(a: DataFrame) -> DataFrame:
     )
 
 
-def _lloyd_train(
-    e: DataFrame, rounds: int = 1, narrow: bool | None = None
-) -> DataFrame:
-    """(cid, vc) after ``rounds`` Lloyd refinements over an ARBITRARY
-    embeddings frame (vec_id, v) — seed with the K_CELLS smallest
-    vec_ids present, then alternate assign/update. The fixed-point-means
-    trick makes EVERY round engine- and partitioning-independent, not
-    just the first — integer component sums are associative, so round
-    r's centroids (and therefore round r+1's assignment) are
-    bit-identical however the corpus is partitioned. Monotone
-    non-increasing inertia across rounds is pinned by
-    tests/test_streaming.py::test_lloyd_inertia_monotone. Centroid
-    frames are localCheckpoint'ed between rounds so the lineage stays
-    O(1) deep instead of O(rounds)."""
+def _lloyd_train(e: DataFrame, rounds: int = 1) -> list:
+    """Collected (cid, vc) centroid rows after ``rounds`` Lloyd
+    refinements over an ARBITRARY embeddings frame (vec_id, v) — seed
+    with the K_CELLS smallest vec_ids present, then alternate
+    assign/update. The fixed-point-means trick makes EVERY round engine-
+    and partitioning-independent, not just the first — integer component
+    sums are associative, so round r's centroids (and therefore round
+    r+1's assignment) are bit-identical however the corpus is
+    partitioned. Monotone non-increasing inertia across rounds is pinned
+    by tests/test_streaming.py::test_lloyd_inertia_monotone. One k-row
+    collect per round (plus the seeds): the centroids enter the next
+    round's plan as literals, so every round's plan is O(1) deep."""
     assert rounds >= 1
-    a = _lloyd_assign(e, _lloyd_seeds(e), narrow=narrow)
-    c = None
-    for r in range(rounds):
-        c = _lloyd_update(a)
-        if rounds > 1:
-            # k tiny rows; truncating lineage here keeps the multi-round
-            # plan O(1) deep (the rounds=1 gated path stays byte-identical)
-            c = c.localCheckpoint(eager=False)
-        if r < rounds - 1:
-            a = _lloyd_assign(e, c, narrow=narrow)
-    return c
+    rows = _lloyd_seeds(e).collect()
+    for _ in range(rounds):
+        rows = _lloyd_update(_lloyd_assign(e, rows)).collect()
+    return rows
 
 
 def _lloyd_final_assignment(
-    spark: SparkSession, sf_dir: str, rounds: int = 1, narrow: bool | None = None
+    spark: SparkSession, sf_dir: str, rounds: int = 1
 ) -> DataFrame:
     """(vec_id, cid, d2, va) after ``rounds`` Lloyd refinements of the
     full embeddings table — the Spark twin of _DUCK_LLOYD_CTES at
     rounds=1 (the oracle-gated path) and the real convergence loop
-    beyond it; now a two-call composition of the unified core.
-    ``narrow`` selects _lloyd_assign's zero-exchange literal-argmin
-    strategy for BOTH assigns (bit-identical either way)."""
+    beyond it; a two-call composition of the unified core."""
     e = _load_embeddings(spark, sf_dir).select("vec_id", _dvec("embedding").alias("v"))
-    return _lloyd_assign(e, _lloyd_train(e, rounds, narrow=narrow), narrow=narrow)
+    return _lloyd_assign(e, _lloyd_train(e, rounds))
 
 
 def lloyd_inertia_fx(spark: SparkSession, sf_dir: str, rounds: int) -> int:
@@ -885,9 +808,9 @@ def lloyd_inertia_fx(spark: SparkSession, sf_dir: str, rounds: int) -> int:
     ).collect()[0]["i"]
 
 
-# --- embedding-space outlier ranking (landed r18; staged+validated r17 in
-# operators/staging.py per the pre-landing protocol — oracle differential
-# on seeds 42 AND 1201, hand-checked 9-vector micro-corpus, plan pins) ----
+# --- embedding-space outlier ranking (landed r18 after an oracle
+# differential on seeds 42 AND 1201, a hand-checked 9-vector micro-corpus
+# and plan pins) -----------------------------------------------------------
 
 TOP_OUTLIERS = 5
 
@@ -931,7 +854,7 @@ WHERE rnk <= {TOP_OUTLIERS}
     ),
 )
 def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    asn = _lloyd_final_assignment(spark, sf_dir, narrow=True)
+    asn = _lloyd_final_assignment(spark, sf_dir)
     w = W.partitionBy("cid").orderBy(F.col("d2").desc(), "vec_id")
     return (
         asn.withColumn("rnk", F.row_number().over(w))
@@ -983,7 +906,7 @@ WHERE rnk <= 3
     ),
 )
 def sim_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    asn = _lloyd_final_assignment(spark, sf_dir, narrow=True).select(
+    asn = _lloyd_final_assignment(spark, sf_dir).select(
         "vec_id", "cid", F.col("va").alias("v")
     ).withColumn("norm", F.expr(_SPARK_NORM))
     q = asn.filter(F.col("vec_id") % QUERY_MOD == 0).select(
@@ -1117,22 +1040,21 @@ def _ivfq_coded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # limit fast path stays intact); job 2: centroid update ∥ global-scale
     # agg, UNIONED so both subtrees run as concurrent stages of one job
     # (cid NULL marks the scale row — real cids are vec_ids, never NULL)
-    a = _lloyd_assign(e, _lloyd_seeds(e), narrow=True)
+    a = _lloyd_assign(e, _lloyd_seeds(e).collect())
     rows = _lloyd_update(a).unionByName(gs_row).collect()
     s_vals = [r["vc"][0] for r in rows if r["cid"] is None]
     cent_rows = [r for r in rows if r["cid"] is not None]
     # empty corpus: the agg still yields one row with s NULL and there are
     # no centroids — any finite literal gives the same (empty) output frame
     s = 1.0 if not s_vals or s_vals[0] is None else float(s_vals[0])
-    base = _lloyd_assign(e, cent_rows, narrow=True).select(
-        "vec_id", "cid", F.col("va").alias("v")
-    )
-    base = base.withColumn("norm", F.expr(_SPARK_NORM)).withColumn(
-        "uv", F.expr("transform(v, x -> x / IF(norm = 0.0D, 1.0D, norm))")
+    base = (
+        _assign_to_cells(e, cent_rows)
+        .withColumn("norm", F.expr(_SPARK_NORM))
+        .withColumn("uv", F.expr("transform(v, x -> x / IF(norm = 0.0D, 1.0D, norm))"))
     )
     # CAST(<repr> AS DOUBLE): repr is the shortest round-trip string and
     # the decimal-literal -> DOUBLE conversion is correctly rounded, so
-    # the literal is the exact collected double (narrow-assign precedent)
+    # the literal is the exact collected double (_nearest_centroid precedent)
     return base.select(
         "vec_id",
         "cid",
@@ -1445,7 +1367,7 @@ FROM asn LEFT JOIN drops d ON asn.vec_id = d.dup_id
     ),
 )
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    asn = _lloyd_final_assignment(spark, sf_dir, narrow=True)  # (vec_id, cid, d2, va)
+    asn = _lloyd_final_assignment(spark, sf_dir)  # (vec_id, cid, d2, va)
     e = asn.select(
         "vec_id", "cid", F.col("va").alias("v")
     ).withColumn("norm", F.expr(_SPARK_NORM))
@@ -1565,13 +1487,11 @@ FROM bat b LEFT JOIN dec ON b.vec_id = dec.nd
 """
 
 
-def _assign_to_cells(
-    e: DataFrame, centroids: DataFrame, narrow: bool | None = None
-) -> DataFrame:
+def _assign_to_cells(e: DataFrame, rows) -> DataFrame:
     """(vec_id, cid, v): the unified core's _lloyd_assign projected for
     the admission consumers (batch + streaming semantic dedup), which
     key on the cell id and the raw vector but never the distance."""
-    return _lloyd_assign(e, centroids, narrow=narrow).select(
+    return _lloyd_assign(e, rows).select(
         "vec_id", "cid", F.col("va").alias("v")
     )
 
@@ -1627,9 +1547,9 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = e.filter(~is_batch)
     batch = e.filter(is_batch)
-    centroids = _lloyd_train(corpus, narrow=True)
-    idx = _assign_to_cells(corpus, centroids, narrow=True)
-    bat = _assign_to_cells(batch, centroids, narrow=True)
+    centroids = _lloyd_train(corpus)
+    idx = _assign_to_cells(corpus, centroids)
+    bat = _assign_to_cells(batch, centroids)
     a = (
         bat.withColumn("norm", F.expr(_SPARK_NORM))
         .select(

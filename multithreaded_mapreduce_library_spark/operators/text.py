@@ -1012,9 +1012,9 @@ def bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# bigram language-model predictability scoring (landed r17; staged+validated
-# r16 in operators/staging.py per the pre-landing protocol — oracle
-# differential on seeds 42 AND 99, hand-checked micro-corpus, plan pins)
+# bigram language-model predictability scoring (landed r17 after an
+# oracle differential on seeds 42 AND 99, a hand-checked micro-corpus
+# and plan pins)
 # ---------------------------------------------------------------------------
 
 LM_BIGRAM_ORACLE = f"""
@@ -1141,10 +1141,9 @@ def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# cross-corpus trigram novelty (landed r18; staged+validated r17 in
-# operators/staging.py per the pre-landing protocol — oracle differential
-# on seeds 42 AND 1201, hand-checked micro-corpus, plan pins; evidence in
-# docs/r18_plan.md / the r17 PERF.md entry)
+# cross-corpus trigram novelty (landed r18 after an oracle differential
+# on seeds 42 AND 1201, a hand-checked micro-corpus and plan pins;
+# evidence in docs/r18_plan.md / the r17 PERF.md entry)
 # ---------------------------------------------------------------------------
 
 DOC_NGRAM_NOVELTY_ORACLE = f"""

@@ -101,11 +101,14 @@ _PRIORITY = (
     #       within a round.
     # Capacity arithmetic (r23): the r22 gate run re-greened its
     # 6-changed + 9-r17-green + 35-r18-green prefix (CORRECTNESS_r22.json,
-    # 50/50), so the r23 prefix is 1 changed query (bpe_train: its
+    # 50/50), so the r23 prefix is 7 changed queries (bpe_train: its
     # merge rounds moved to the driver, which rewrote its @register
-    # doc) + the 11 displaced r18-greens (quarantine_malformed ..
-    # unpivot_measures) + the 38 oldest r19-greens. Changed-set cap this
-    # round: 39 (1 spent); forecast for r24: 40, for r25: 5
+    # doc; ivf_train_centroids, embedding_outliers, sim_topk_ivf_trained,
+    # dedup_semantic, dedup_semantic_incremental, stream_dedup_semantic:
+    # the Lloyd core's `narrow` flag was deleted from their call sites)
+    # + the 11 displaced r18-greens (quarantine_malformed ..
+    # unpivot_measures) + the 32 oldest r19-greens. Changed-set cap this
+    # round: 39 (7 spent); forecast for r24: 39, for r25: 5
     # (rotate_prefix.py --preview).
     # The optimization-round regime (established r21): a gated query
     # whose builder text changes for PERFORMANCE (output-identical,
@@ -114,32 +117,31 @@ _PRIORITY = (
     # refresh in the same commit — test_changed_hashes_are_declared
     # enforces this mechanically. Current spend: see the (1) marker
     # below; the displaced r18-greens lead the r23 refresh and stay
-    # inside the four-round staleness bound. No new operators; the
-    # staging queue stays empty. Pinned by
+    # inside the four-round staleness bound. No new operators. Pinned by
     # tests/test_registry_oracle.py::test_gate_prefix_bounds_staleness.
     # Do not pad with trivial variants.
-    # (1) new/changed in r23 (1):
-    "bpe_train",
+    # (1) new/changed in r23 (7):
+    "bpe_train", "ivf_train_centroids", "embedding_outliers",
+    "sim_topk_ivf_trained", "dedup_semantic", "dedup_semantic_incremental",
+    "stream_dedup_semantic",
     # (2) last green in r18 (11):
     "quarantine_malformed", "repetition_ngram", "sample_hash",
     "scalar_subquery", "source_divergence", "stream_dedup_docs",
     "stream_dedup_minhash", "stream_incremental_agg", "stream_lm_score",
     "stream_upsert", "unpivot_measures",
-    # (2) last green in r19 (38):
+    # (2) last green in r19 (32):
     "compact_apply", "compact_plan", "corr_stats", "correlated_subquery",
-    "dedup_semantic", "dedup_semantic_incremental", "dist_moments",
-    "event_funnel", "group_cube", "grouping_sets", "ivf_train_centroids",
+    "dist_moments", "event_funnel", "group_cube", "grouping_sets",
     "join_asof", "join_broadcast", "join_full", "join_large", "join_left",
     "join_range", "join_right", "join_semi", "join_shuffle_hash",
     "join_skew_salted", "join_theta", "lang_id", "map_in_arrow_project",
     "mmr_rerank", "mr_inverted_index", "multimodal_decode",
     "multimodal_frame_sample", "quality_score", "sample_stratified",
     "sequence_packing", "sessionize", "sim_lsh_buckets", "sim_near_dup",
-    "sim_topk_bruteforce", "sim_topk_ivf_trained", "stream_dedup",
-    "stream_dedup_semantic",
+    "sim_topk_bruteforce",
     # --- end of gate prefix (50) ----------------------------------------
-    # rotated out, last green r19 (10):
-    "stream_session", "stream_sliding_watermark",
+    # rotated out, last green r19 (11):
+    "stream_dedup", "stream_session", "stream_sliding_watermark",
     "stream_stateful_running_max", "stream_static_join", "stream_stream_join",
     "stream_tumbling", "time_tumbling", "token_stats", "udtf_tokenize",
     "window_range_frame",
@@ -171,22 +173,22 @@ _PRIORITY = (
     "scalar_string", "scd2_merge", "setop_union", "sim_topk_ivf",
     "sim_topk_multiprobe", "small_qty_revenue", "split_contamination_gate",
     "sql_interface", "stream_transitions", "tf_idf", "waiting_orders",
-    # rotated out, last green r22 (49):
+    # rotated out, last green r22 (48):
     "agg_stats", "bm25_search", "calendar_fill", "case_when",
     "cogroup_reconcile", "conditional_agg", "contamination_check",
     "corpus_curation", "count_distinct", "dataset_split", "dedup_clusters",
     "dedup_exact", "dedup_keep_first", "dedup_minhash_incremental",
     "dedup_ngram_jaccard", "dedup_simhash", "distinct_rows",
     "doc_fingerprint", "doc_ngram_novelty", "embedding_centroids",
-    "embedding_outliers", "filter_project", "grouped_map_zscore",
-    "having_filter", "hybrid_retrieval", "incremental_agg", "join_anti",
-    "join_asof_window", "lateral_posexplode", "merge_upsert",
-    "multi_count_distinct", "multimodal_features", "multimodal_metadata",
-    "multimodal_resize", "orderby_limit", "pii_redact", "profile_table",
-    "sim_topk_ivf_quantized", "sim_topk_ivfpq", "sim_topk_pq", "time_sliding",
-    "top_supplier", "variant_extract", "volume_shipping",
-    "window_distribution", "window_first_last", "window_moving_avg",
-    "window_topk_per_group", "wordcount",
+    "filter_project", "grouped_map_zscore", "having_filter",
+    "hybrid_retrieval", "incremental_agg", "join_anti", "join_asof_window",
+    "lateral_posexplode", "merge_upsert", "multi_count_distinct",
+    "multimodal_features", "multimodal_metadata", "multimodal_resize",
+    "orderby_limit", "pii_redact", "profile_table", "sim_topk_ivf_quantized",
+    "sim_topk_ivfpq", "sim_topk_pq", "time_sliding", "top_supplier",
+    "variant_extract", "volume_shipping", "window_distribution",
+    "window_first_last", "window_moving_avg", "window_topk_per_group",
+    "wordcount",
 )
 
 

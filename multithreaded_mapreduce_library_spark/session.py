@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-from multithreaded_mapreduce_library_spark import worker_daemon
-
 # Python workers must import this package (the daemon module, mr_run's
 # mappers) from any cwd, so its parent directory leads their PYTHONPATH.
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -71,7 +69,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        .config("spark.python.daemon.module", worker_daemon.__name__)
+        # named, not imported: runpy warns on a module already imported
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
     for k, v in extra_conf.items():

@@ -1314,36 +1314,20 @@ def semantic_admission_stream_transform(
     shuffle, streaming-legal), then a stream-static equi join on the cell
     id against the static corpus index and the per-vector decision
     aggregate (count / max cosine / min qualifying corpus id) in update
-    mode. ``centroid_rows`` is the collected [(cid, vc)] list (k rows — a
-    broadcast-tiny fetch, the similarity.py:287 precedent); ``idx`` is
-    the static (od, cid_i, vb, norm_b) corpus index frame."""
+    mode. ``centroid_rows`` are the collected (cid, vc) rows (k rows —
+    a broadcast-tiny fetch) and the argmin is similarity._nearest_centroid,
+    the batch assignment's own expression, so cell ids agree bit-for-bit
+    with dedup_semantic_incremental; ``idx`` is the static (od, cid_i,
+    vb, norm_b) corpus index frame."""
     from multithreaded_mapreduce_library_spark.operators.similarity import (
         _SPARK_COSINE,
         _SPARK_NORM,
         _dvec,
+        _nearest_centroid,
         SEMANTIC_TAU,
     )
 
-    # literal array<struct<d2, cid>> argmin == ORDER BY d2, cid (struct
-    # comparison is field-lexicographic), the exact tiebreak of the
-    # batch/oracle assignment — arithmetic is the same sequential fold
-    # over the same fixed-point-quantized centroid values, so cell ids
-    # agree bit-for-bit with dedup_semantic_incremental
-    def d2_lit(vc) -> str:
-        arr = "array(" + ",".join(repr(x) for x in vc) + ")"
-        return (
-            f"aggregate(zip_with(v, {arr}, (x, y) -> (x - y) * (x - y)),"
-            " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-
-    assign = F.expr(
-        "array_min(array("
-        + ",".join(
-            f"struct({d2_lit(vc)} AS d2, CAST({cid} AS BIGINT) AS cid)"
-            for cid, vc in centroid_rows
-        )
-        + ")).cid"
-    )
+    assign = F.expr(_nearest_centroid(centroid_rows, "v") + ".cid")
     arriving = (
         stream.select("vec_id", _dvec("embedding").alias("v"))
         .withColumn("cid_b", assign)
@@ -1411,8 +1395,8 @@ def _register_stream_dedup_semantic():
             "d2/cosine are the shared sequential folds, so every cell "
             "assignment and gate decision agrees bit-for-bit with the "
             "batch path and the shared oracle. Shuffle story: training "
-            "rides the batch side (literal-argmin narrow assignment since "
-            "the r15 migration, k x dim partial-agg update); "
+            "rides the batch side (literal-argmin narrow assignment, "
+            "k x dim partial-agg update); "
             "the stream side's assignment is a NARROW per-row map (the "
             "k centroids live in the plan, nothing joins before the "
             "cell exchange), then ONE stream-static equi exchange on "
@@ -1432,19 +1416,18 @@ def _register_stream_dedup_semantic():
             "vec_id", _dvec("embedding").alias("v")
         )
         corpus = e.filter(~is_batch)
-        centroids = _lloyd_train(corpus, narrow=True)
-        centroid_rows = [(r["cid"], list(r["vc"])) for r in centroids.collect()]
+        centroids = _lloyd_train(corpus)
         schema = (
             "vec_id long, cell_id long, n_cell long, max_cos_fx long,"
             " is_dup boolean, dup_of long"
         )
-        if not centroid_rows:
+        if not centroids:
             # all-batch corpus: nothing to train on => no assignments on
             # either engine (the oracle's bat CTE is empty too) — the
             # contract pinned by the batch twin's empty-corpus edge test
             return spark.createDataFrame([], schema)
         idx = (
-            _assign_to_cells(corpus, centroids, narrow=True)
+            _assign_to_cells(corpus, centroids)
             .withColumn("norm", F.expr(_SPARK_NORM))
             .select(
                 F.col("vec_id").alias("od"), F.col("cid").alias("cid_i"),
@@ -1453,7 +1436,7 @@ def _register_stream_dedup_semantic():
         )
         stream = table_stream(spark, sf_dir, "embeddings").filter(is_batch)
         settled = run_to_memory(
-            semantic_admission_stream_transform(stream, centroid_rows, idx),
+            semantic_admission_stream_transform(stream, centroids, idx),
             "update",
         )
         # defensive cross-update finalize (the minhash twin's pattern):
@@ -1467,9 +1450,9 @@ def _register_stream_dedup_semantic():
             F.min("dup_raw").alias("dup_raw"),
         )
         # batch-side assignment of the arriving split (the same literal
-        # argmin as the stream side since the r15 narrow migration), for
-        # cell ids and the empty-cell left-join rows
-        bat = _assign_to_cells(e.filter(is_batch), centroids, narrow=True)
+        # argmin as the stream side), for cell ids and the empty-cell
+        # left-join rows
+        bat = _assign_to_cells(e.filter(is_batch), centroids)
         return bat.join(dec, bat.vec_id == dec.nd, "left").select(
             "vec_id",
             F.col("cid").cast("long").alias("cell_id"),
@@ -1486,10 +1469,9 @@ _register_stream_dedup_semantic()
 
 
 # ---------------------------------------------------------------------------
-# streaming bigram-LM quality gate (landed r18; staged+validated r17 in
-# operators/staging.py — oracle differential on seeds 42 AND 1201,
-# hand-checked micro-corpus with the real h31 split, multi-batch settle
-# pinned in tests/test_streaming.py)
+# streaming bigram-LM quality gate (landed r18 after an oracle
+# differential on seeds 42 AND 1201 and a hand-checked micro-corpus with
+# the real h31 split; multi-batch settle pinned in tests/test_streaming.py)
 # ---------------------------------------------------------------------------
 
 # same explode as the batch twin (operators/text.py lm_bigram_score)

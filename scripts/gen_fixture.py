@@ -29,9 +29,10 @@ import pyarrow.parquet as pq
 # Canonical burned-seed registry (r16 VERDICT "What's wrong" #5: keep
 # the list in ONE place as it grows). A seed is burned once any
 # committed evidence depends on it: 42 is the checked-in driver fixture;
-# 7 is the =1 sweep alias; the rest are recorded sweep seeds or staging
-# forcing-test seeds (tests/test_staging.py). Pick NEW sweep/forcing
-# seeds outside this set, then add them here in the same commit.
+# 7 is the =1 sweep alias; the rest are recorded sweep seeds or the
+# forcing-test seeds new operators were validated on before landing
+# (99 and 1201). Pick NEW sweep/forcing seeds outside this set, then add
+# them here in the same commit.
 BURNED_SEEDS = frozenset(
     {7, 42, 73, 99, 307, 509, 641, 911, 1097, 1201, 1381, 1783, 2311,
      2753, 3109, 3499, 4421, 4903, 5077, 5281, 5903, 6113, 6577, 6829,

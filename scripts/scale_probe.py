@@ -281,8 +281,8 @@ def build_scaled(n: int, out_dir: str) -> None:
 def ensure_scaled(n: int) -> str:
     """Build (or reuse) the cached Nx fixture and return its directory.
     The ONLY place that knows the cache path + '.complete' marker
-    protocol — probe_lloyd_k_sweep.py reuses it so the two probes can
-    never silently measure different fixtures (ADVICE r16). Done-marker,
+    protocol, so every probe that reuses it measures the same fixture
+    (ADVICE r16). Done-marker,
     not a table file: an interrupted build must not leave a
     complete-looking cache missing its later tables."""
     scaled_dir = f"/tmp/spark_graft_scale_{n}x"

@@ -387,16 +387,13 @@ def test_embedding_quantize_is_narrow(spark, sf_dir):
 
 
 def test_ivf_train_broadcasts_centroids(spark, sf_dir):
-    """ivf_train_centroids' emitted plan after the r15 narrow-assign
-    migration (docs/lloyd_narrow_assign_migration.md): the final
-    assignment is the LITERAL k-centroid argmin — one narrow projection
-    over the scan with ZERO joins, ZERO windows and no exchange beyond
-    the scan's own rebalance. (The training rounds run eagerly at
-    build time through the same zero-exchange assign + the k x dim
-    partial-agg update; the update's partial-agg property and the
-    historical broadcast-window strategy stay pinned by
-    test_lloyd_narrow_assign_agrees_with_window /
-    test_lloyd_narrow_assign_zero_exchange.)"""
+    """ivf_train_centroids' emitted plan: the final assignment is the
+    LITERAL k-centroid argmin — one narrow projection over the scan with
+    ZERO joins, ZERO windows and no exchange beyond the scan's own
+    rebalance. (The training rounds run eagerly at build time through
+    the same zero-exchange assign + the k x dim partial-agg update;
+    values are pinned against the oracle by
+    test_lloyd_narrow_assign_agrees_with_window.)"""
     from multithreaded_mapreduce_library_spark.operators.similarity import (
         _dvec,
         _load_embeddings,
@@ -416,28 +413,26 @@ def test_ivf_train_broadcasts_centroids(spark, sf_dir):
 
 
 def test_lloyd_multi_round_plan_stays_bounded(spark, sf_dir):
-    """The multi-round Lloyd loop must keep the SAME plan shape per round
-    — centroids broadcast (never the corpus shuffled against them), no
-    cartesian fallback — and the between-round localCheckpoint must keep
-    the final plan O(1) deep: round 2's assignment plan reads the
-    checkpointed k-row centroid RDD instead of re-embedding round 1's
-    whole assignment+update tree."""
+    """The multi-round Lloyd loop keeps the final plan O(1) deep with no
+    checkpoint: each round's centroids enter the next round's plan as
+    literals, so the rounds=2 final assignment is the same single
+    projection over the scan as rounds=1 — no Generate (round 1's
+    posexplode update tree), no join of any kind, no added node."""
+    import re
+
     from multithreaded_mapreduce_library_spark.operators.similarity import (
         _lloyd_final_assignment,
     )
 
-    plan2 = formatted_plan(
-        _lloyd_final_assignment(spark, sf_dir, rounds=2, narrow=False)
-    )
-    assert "CartesianProduct" not in plan2
-    assert "BroadcastNestedLoopJoin" in plan2, "centroids must broadcast"
-    # lineage truncation: the checkpointed centroids appear as a scanned
-    # existing RDD, and the plan does NOT contain round-1's posexplode
-    # update tree (which would appear as a Generate node)
-    assert "Scan ExistingRDD" in plan2, "round-2 plan should read checkpointed centroids"
+    plan1 = formatted_plan(_lloyd_final_assignment(spark, sf_dir, rounds=1))
+    plan2 = formatted_plan(_lloyd_final_assignment(spark, sf_dir, rounds=2))
     assert "Generate" not in plan2, (
         "round-1 update tree leaked into the round-2 assignment plan"
     )
+    assert "Join" not in plan2 and "CartesianProduct" not in plan2
+    assert "Window" not in plan2
+    nodes = [re.findall(r"^\(\d+\) (\w+)", p, re.M) for p in (plan1, plan2)]
+    assert nodes[0] == nodes[1], "the plan grew with the number of rounds"
 
 
 def test_lloyd_seeds_take_ordered_not_global_sort(spark, sf_dir):
@@ -461,37 +456,6 @@ def test_lloyd_seeds_take_ordered_not_global_sort(spark, sf_dir):
     assert "rangepartitioning" not in plan.lower(), (
         "seed selection must not range-shuffle the corpus for a k-row sort"
     )
-
-
-def test_lloyd_assign_is_broadcast_argmin_on_any_frame(spark, sf_dir):
-    """_lloyd_assign — the ONE assignment implementation behind the IVF
-    trainers AND the semantic-admission pair since the r12 unification —
-    must broadcast the k-row centroid side and bound the argmin window
-    by vec_id even when the input is a filtered corpus split, not the
-    full table (the semantic path's shape)."""
-    from pyspark.sql import functions as F
-
-    from multithreaded_mapreduce_library_spark.functions import h31
-    from multithreaded_mapreduce_library_spark.operators.dedup import INC_SPLIT_MOD
-    from multithreaded_mapreduce_library_spark.operators.similarity import (
-        _dvec,
-        _lloyd_assign,
-        _lloyd_train,
-        _load_embeddings,
-    )
-
-    is_batch = F.pmod(h31(F.col("vec_id").cast("string")), F.lit(INC_SPLIT_MOD)) == 0
-    corpus = (
-        _load_embeddings(spark, sf_dir)
-        .select("vec_id", _dvec("embedding").alias("v"))
-        .filter(~is_batch)
-    )
-    plan = formatted_plan(
-        _lloyd_assign(corpus, _lloyd_train(corpus, narrow=False), narrow=False)
-    )
-    assert "BroadcastNestedLoopJoin" in plan, "centroids must broadcast"
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan, "corpus must never shuffle against k rows"
 
 
 def test_lloyd_train_is_partitioning_independent(spark, sf_dir):
@@ -519,7 +483,7 @@ def test_lloyd_train_is_partitioning_independent(spark, sf_dir):
         for layout in (e, e.repartition(7), e.coalesce(1)):
             got = sorted(
                 (r["cid"], tuple(r["vc"]))
-                for r in _lloyd_train(layout, rounds).collect()
+                for r in _lloyd_train(layout, rounds)
             )
             if canon is None:
                 canon = got
@@ -1227,12 +1191,11 @@ def test_stream_semantic_transform_is_narrow_argmin_one_equi_join(spark, sf_dir)
     is_batch = F.pmod(h31(F.col("vec_id").cast("string")), F.lit(INC_SPLIT_MOD)) == 0
     e = _load_embeddings(spark, sf_dir)
     corpus = e.select("vec_id", _dvec("embedding").alias("v")).filter(~is_batch)
-    centroids = _lloyd_train(corpus)
-    centroid_rows = [(r["cid"], list(r["vc"])) for r in centroids.collect()]
+    centroid_rows = _lloyd_train(corpus)
     assert centroid_rows, "fixture must train at least one cell"
-    dim = len(centroid_rows[0][1])
+    dim = len(centroid_rows[0]["vc"])
     idx = spark.createDataFrame(
-        [(0, int(centroid_rows[0][0]), [0.0] * dim, 1.0)],
+        [(0, int(centroid_rows[0]["cid"]), [0.0] * dim, 1.0)],
         "od long, cid_i bigint, vb array<double>, norm_b double",
     )
     df = semantic_admission_stream_transform(e.filter(is_batch), centroid_rows, idx)
@@ -1282,15 +1245,52 @@ def test_bpe_apply_is_narrow(spark, sf_dir):
             assert col not in s, f"scan must prune {col}"
 
 
-def test_lloyd_narrow_assign_agrees_with_window(spark, sf_dir):
-    """The two _lloyd_assign strategies — the historical broadcast +
-    row_number window argmin and the narrow literal-array argmin (the
-    streaming path's pattern, hoisted behind ``narrow=True``) — must be
-    BIT-identical: same (vec_id, cid) and the same d2 double bits, at
-    the seed-assign level and through a full train->final-assign loop.
-    This is the agreement pin the staged per-consumer migration
-    (docs/lloyd_narrow_assign_migration.md) rests on: flipping a gated
-    consumer to narrow=True changes its physical plan, never a value."""
+def test_lloyd_narrow_assign_agrees_with_window(spark, sf_dir, tied_sf_dir):
+    """_lloyd_assign's literal argmin must reproduce the DuckDB oracle's
+    row_number window argmin (_DUCK_LLOYD_CTES) EXACTLY: the seed pass
+    equals a1's (vec_id, cid), and the trained final assignment equals
+    a2's (vec_id, cid, d2), d2 double bits included. On the tied
+    fixture two seeds are the same vector, so the seed pass also pins
+    the (d2, cid) tiebreak."""
+    from multithreaded_mapreduce_library_spark.operators.similarity import (
+        _DUCK_LLOYD_CTES,
+        _dvec,
+        _lloyd_assign,
+        _lloyd_seeds,
+        _lloyd_train,
+        _load_embeddings,
+    )
+    from tests.oracle import run_duckdb
+
+    def spark_rows(df, cols):
+        return sorted(map(tuple, df.select(*cols).collect()))
+
+    def duck_rows(d, cte, cols):
+        sql = f"WITH {_DUCK_LLOYD_CTES} SELECT {', '.join(cols)} FROM {cte}"
+        return sorted(run_duckdb(sql, d)[1])
+
+    for d in (sf_dir, tied_sf_dir):
+        e = _load_embeddings(spark, d).select("vec_id", _dvec("embedding").alias("v"))
+        cols = ["vec_id", "cid"]
+        seed = spark_rows(_lloyd_assign(e, _lloyd_seeds(e).collect()), cols)
+        assert seed and seed == duck_rows(d, "a1", cols), d
+        cols = ["vec_id", "cid", "d2"]
+        final = spark_rows(_lloyd_assign(e, _lloyd_train(e)), cols)
+        assert final and final == duck_rows(d, "a2", cols), d
+
+
+def test_lloyd_narrow_assign_zero_exchange(spark, sf_dir):
+    """_lloyd_assign must compile to a single narrow projection over the
+    input frame: NO Window, NO added Exchange (the only exchange in the
+    plan is the source's own scan rebalance, present in the bare input
+    too), and no join node of any kind — the k centroids live in the
+    plan as literals. Holds on the full table and on a filtered corpus
+    split (the semantic-admission shape) alike. At 100 TB a window
+    argmin would exchange N*k rows on vec_id; this exchanges nothing."""
+    from pyspark.sql import functions as F
+
+    from multithreaded_mapreduce_library_spark.functions import h31
+    from multithreaded_mapreduce_library_spark.operators.dedup import INC_SPLIT_MOD
     from multithreaded_mapreduce_library_spark.operators.similarity import (
         _dvec,
         _lloyd_assign,
@@ -1302,61 +1302,24 @@ def test_lloyd_narrow_assign_agrees_with_window(spark, sf_dir):
     e = _load_embeddings(spark, sf_dir).select(
         "vec_id", _dvec("embedding").alias("v")
     )
-    seeds = _lloyd_seeds(e)
-    cols = ["vec_id", "cid", "d2"]
-    window = sorted(
-        map(tuple, _lloyd_assign(e, seeds, narrow=False).select(*cols).collect())
-    )
-    narrow = sorted(
-        map(tuple, _lloyd_assign(e, seeds, narrow=True).select(*cols).collect())
-    )
-    assert window and narrow == window
-
-    # full loop: trained centroids then final assignment, both narrow
-    trained_w = _lloyd_assign(e, _lloyd_train(e, narrow=False), narrow=False)
-    trained_n = _lloyd_assign(e, _lloyd_train(e, narrow=True), narrow=True)
-    assert trained_w.select(*cols).dtypes == trained_n.select(*cols).dtypes
-    assert sorted(map(tuple, trained_w.select(*cols).collect())) == sorted(
-        map(tuple, trained_n.select(*cols).collect())
-    )
-
-
-def test_lloyd_narrow_assign_zero_exchange(spark, sf_dir):
-    """narrow=True must compile to a single narrow projection over the
-    input frame: NO Window, NO added Exchange (the only exchange in the
-    plan is the source's own scan rebalance, present in the bare input
-    too), and no join node of any kind — the k centroids live in the
-    plan as literals. This is the 100 TB story of the migration: the
-    window path exchanges N*k rows on vec_id; the narrow path exchanges
-    nothing."""
-    from multithreaded_mapreduce_library_spark.operators.similarity import (
-        _dvec,
-        _lloyd_assign,
-        _lloyd_seeds,
-        _load_embeddings,
-    )
-
-    e = _load_embeddings(spark, sf_dir).select(
-        "vec_id", _dvec("embedding").alias("v")
-    )
-    base_exchanges = formatted_plan(e).count("Exchange")
-    plan = formatted_plan(_lloyd_assign(e, _lloyd_seeds(e), narrow=True))
-    assert "Window" not in plan, "narrow argmin must not window"
-    assert plan.count("Exchange") == base_exchanges, (
-        "narrow argmin must add zero exchanges over the bare scan"
-    )
-    for join in ("BroadcastNestedLoopJoin", "SortMergeJoin", "CartesianProduct",
-                 "ShuffledHashJoin", "BroadcastHashJoin"):
-        assert join not in plan, f"narrow argmin must not join ({join})"
-    # and the window path REALLY pays the exchange the narrow one removes
-    wplan = formatted_plan(_lloyd_assign(e, _lloyd_seeds(e), narrow=False))
-    assert "Window" in wplan and wplan.count("Exchange") > base_exchanges
+    is_batch = F.pmod(h31(F.col("vec_id").cast("string")), F.lit(INC_SPLIT_MOD)) == 0
+    corpus = e.filter(~is_batch)
+    for frame, rows in ((e, _lloyd_seeds(e).collect()), (corpus, _lloyd_train(corpus))):
+        base_exchanges = formatted_plan(frame).count("Exchange")
+        plan = formatted_plan(_lloyd_assign(frame, rows))
+        assert "Window" not in plan, "narrow argmin must not window"
+        assert plan.count("Exchange") == base_exchanges, (
+            "narrow argmin must add zero exchanges over the bare scan"
+        )
+        for join in ("BroadcastNestedLoopJoin", "SortMergeJoin", "CartesianProduct",
+                     "ShuffledHashJoin", "BroadcastHashJoin"):
+            assert join not in plan, f"narrow argmin must not join ({join})"
 
 
 def test_lloyd_narrow_assign_empty_centroids(spark, sf_dir):
-    """An empty centroid frame must yield an empty assignment on BOTH
-    strategies with the same schema — the dedup_semantic_incremental /
-    stream_dedup_semantic empty-corpus edge rides this."""
+    """No centroid rows must yield an empty assignment with the usual
+    schema — the dedup_semantic_incremental / stream_dedup_semantic
+    empty-corpus edge rides this."""
     from multithreaded_mapreduce_library_spark.operators.similarity import (
         _dvec,
         _lloyd_assign,
@@ -1367,45 +1330,9 @@ def test_lloyd_narrow_assign_empty_centroids(spark, sf_dir):
     e = _load_embeddings(spark, sf_dir).select(
         "vec_id", _dvec("embedding").alias("v")
     )
-    empty = _lloyd_seeds(e).where("1 = 0")
-    got_w = _lloyd_assign(e, empty, narrow=False)
-    got_n = _lloyd_assign(e, empty, narrow=True)
-    assert got_w.count() == 0 and got_n.count() == 0
-    assert got_w.columns == got_n.columns
-
-
-def test_lloyd_envelope_default_rejects_offsize_centroid_frame(spark, sf_dir):
-    """narrow=None resolves the strategy from K_CELLS (the measured
-    k-sweep envelope), NOT from the frame passed in — so a custom-k
-    centroid frame larger than NARROW_K_MAX must fail LOUDLY on the
-    envelope path (r17 ADVICE: previously it silently built an oversized
-    literal argmin the sweep never certified). Explicit narrow=True
-    remains the caller's deliberate, unasserted choice."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from multithreaded_mapreduce_library_spark.operators.similarity import (
-        NARROW_K_MAX,
-        _dvec,
-        _lloyd_assign,
-        _load_embeddings,
-    )
-
-    e = _load_embeddings(spark, sf_dir).select(
-        "vec_id", _dvec("embedding").alias("v")
-    )
-    oversized = (
-        e.orderBy("vec_id")
-        .limit(NARROW_K_MAX + 1)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("vc"))
-    )
-    # ValueError (not AssertionError): the guard must survive python -O,
-    # which strips asserts (r18 ADVICE)
-    with pytest.raises(ValueError, match="measured envelope"):
-        _lloyd_assign(e, oversized, narrow=None).collect()
-    # the explicit flag is the documented escape hatch — values still exact
-    n = _lloyd_assign(e, oversized, narrow=True).count()
-    assert n == e.count()
+    got = _lloyd_assign(e, [])
+    assert got.count() == 0
+    assert got.dtypes == _lloyd_assign(e, _lloyd_seeds(e).collect()).dtypes
 
 
 # --- embedding_outliers (landed r18; pins migrated from test_staging.py) --

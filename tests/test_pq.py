@@ -34,7 +34,7 @@ def test_pq_refinement_improves_residual(spark, sf_dir):
     from multithreaded_mapreduce_library_spark.operators.pq import (
         PQ_K,
         _FX,
-        _pq_assign,
+        _pq_assign_narrow,
         _pq_codebooks,
         _pq_sub,
     )
@@ -43,8 +43,8 @@ def test_pq_refinement_improves_residual(spark, sf_dir):
     seeds = sub.filter(F.col("vec_id") < PQ_K).select(
         "m", F.col("vec_id").alias("cid"), F.col("sv").alias("vc")
     )
-    a1 = _pq_assign(sub, seeds)
-    a2 = _pq_assign(sub, _pq_codebooks(a1))
+    a1 = _pq_assign_narrow(sub, seeds.collect())
+    a2 = _pq_assign_narrow(sub, _pq_codebooks(a1).collect())
 
     def total_fx(a):
         return a.agg(
@@ -174,54 +174,63 @@ def test_pq_plan_literal_training_and_broadcast_lut(spark, sf_dir):
     )
 
 
-def test_pq_narrow_assign_agrees_with_window(spark, sf_dir):
-    """The r21 literal-argmin migration's bit-identity claim, pinned the
-    same way as test_lloyd_narrow_assign_agrees_with_window: for both
-    the seed and the refined codebooks, _pq_assign_narrow must return
-    EXACTLY the window path's (vec_id, m, cid, d2) — same argmin, same
-    (d2, cid) tiebreak, bit-identical doubles."""
+def _codes_by_vec(assigned_rows) -> list:
+    """Sorted (vec_id, [cid for m = 0..]) from collected (vec_id, m, cid)
+    assignment rows — the per-vector code arrays, grouped in Python."""
+    by_vec: dict[int, dict[int, int]] = {}
+    for r in assigned_rows:
+        by_vec.setdefault(r["vec_id"], {})[r["m"]] = r["cid"]
+    return sorted((v, [ms[m] for m in sorted(ms)]) for v, ms in by_vec.items())
+
+
+def test_pq_narrow_assign_agrees_with_window(spark, sf_dir, tied_sf_dir):
+    """_pq_assign_narrow's literal argmin must reproduce the DuckDB
+    oracle's row_number window argmin (_DUCK_PQ_CTES) EXACTLY: the seed
+    pass equals p1's (vec_id, m, cid), and _pq_final's assignment equals
+    p2's (vec_id, m, cid, d2), d2 double bits included. On the tied
+    fixture two seed codewords coincide in every subspace, so the seed
+    pass also pins the (d2, cid) tiebreak."""
     from multithreaded_mapreduce_library_spark.operators.pq import (
+        _DUCK_PQ_CTES,
         PQ_K,
-        _pq_assign,
         _pq_assign_narrow,
-        _pq_codebooks,
+        _pq_final,
         _pq_sub,
     )
+    from tests.oracle import run_duckdb
 
-    sub = _pq_sub(spark, sf_dir)
-    seeds_df = sub.filter(F.col("vec_id") < PQ_K).select(
-        "m", F.col("vec_id").alias("cid"), F.col("sv").alias("vc")
-    )
-    seed_rows = seeds_df.collect()
+    def spark_rows(df, cols):
+        return sorted(map(tuple, df.select(*cols).collect()))
 
-    def canon(df):
-        return sorted(
-            (r["vec_id"], r["m"], r["cid"], r["d2"]) for r in df.collect()
+    def duck_rows(d, cte, cols):
+        sql = f"WITH {_DUCK_PQ_CTES} SELECT {', '.join(cols)} FROM {cte}"
+        return sorted(run_duckdb(sql, d)[1])
+
+    for d in (sf_dir, tied_sf_dir):
+        sub = _pq_sub(spark, d)
+        seed_rows = (
+            sub.filter(F.col("vec_id") < PQ_K)
+            .select("m", F.col("vec_id").alias("cid"), F.col("sv").alias("vc"))
+            .collect()
         )
-
-    a1_window = _pq_assign(sub, seeds_df)
-    a1_narrow = _pq_assign_narrow(sub, seed_rows)
-    assert canon(a1_narrow) == canon(a1_window), "seed-pass argmin diverged"
-
-    newc_df = _pq_codebooks(a1_window)
-    assert canon(_pq_assign_narrow(sub, newc_df.collect())) == canon(
-        _pq_assign(sub, newc_df)
-    ), "refined-pass argmin diverged"
+        cols = ["vec_id", "m", "cid"]
+        seed = spark_rows(_pq_assign_narrow(sub, seed_rows), cols)
+        assert seed and seed == duck_rows(d, "p1", cols), d
+        cols = ["vec_id", "m", "cid", "d2"]
+        final = spark_rows(_pq_final(spark, d)[0], cols)
+        assert final and final == duck_rows(d, "p2", cols), d
 
 
 def test_pq_narrow_codes_agree_with_grouped(spark, sf_dir):
-    """The r22 narrow code-array migration's bit-identity claim, pinned
-    like test_pq_narrow_assign_agrees_with_window: _pq_codes_narrow's
-    one-projection (vec_id, codes) must EXACTLY equal the grouped path
-    _pq_code_arrays(_pq_assign_narrow(...)) — same argmin per subspace,
-    same m-ordered array, same tinyint values — for both the seed and
-    the refined codebooks."""
+    """_pq_codes_narrow's one-projection (vec_id, codes) must EXACTLY
+    equal _pq_assign_narrow's per-subspace codes gathered per vector in
+    m order — same argmin per subspace, same tinyint values — for both
+    the seed codebooks and _pq_final's refined ones."""
     from multithreaded_mapreduce_library_spark.operators.pq import (
         PQ_K,
         _pq_assign_narrow,
-        _pq_code_arrays,
-        _pq_codebooks,
         _pq_codes_narrow,
+        _pq_final,
         _pq_sub,
     )
     from multithreaded_mapreduce_library_spark.operators.similarity import (
@@ -238,24 +247,24 @@ def test_pq_narrow_codes_agree_with_grouped(spark, sf_dir):
         .select("m", F.col("vec_id").alias("cid"), F.col("sv").alias("vc"))
         .collect()
     )
-
-    def canon(df):
-        return sorted((r["vec_id"], list(r["codes"])) for r in df.collect())
-
-    for rows in (seed_rows, _pq_codebooks(_pq_assign_narrow(sub, seed_rows)).collect()):
-        grouped = _pq_code_arrays(_pq_assign_narrow(sub, rows))
-        narrow = _pq_codes_narrow(e, rows)
-        assert canon(narrow) == canon(grouped), "narrow code arrays diverged"
+    assigned, newc = _pq_final(spark, sf_dir)
+    for rows, grouped in (
+        (seed_rows, _codes_by_vec(_pq_assign_narrow(sub, seed_rows).collect())),
+        (newc, _codes_by_vec(assigned.collect())),
+    ):
+        narrow = sorted(
+            (r["vec_id"], list(r["codes"])) for r in _pq_codes_narrow(e, rows).collect()
+        )
+        assert narrow and narrow == grouped, "narrow code arrays diverged"
 
 
 def test_ivfpq_coded_matches_unmaterialized_parts(spark, sf_dir):
     """_ivfpq_coded's fused-collect + checkpointed index frame must hold
-    exactly the (vec_id, cell id, code array) triples the r21
-    unmaterialized path computed: Lloyd cells from
-    _lloyd_final_assignment, code arrays from the grouped PQ path."""
+    exactly the (vec_id, cell id, code array) triples the unmaterialized
+    parts compute: Lloyd cells from _lloyd_final_assignment, code arrays
+    grouped from _pq_final's assignment."""
     from multithreaded_mapreduce_library_spark.operators.pq import (
         _ivfpq_coded,
-        _pq_code_arrays,
         _pq_final,
     )
     from multithreaded_mapreduce_library_spark.operators.similarity import (
@@ -268,14 +277,13 @@ def test_ivfpq_coded_matches_unmaterialized_parts(spark, sf_dir):
     )
     cells = {
         r["vec_id"]: r["cid"]
-        for r in _lloyd_final_assignment(spark, sf_dir, narrow=True)
+        for r in _lloyd_final_assignment(spark, sf_dir)
         .select("vec_id", "cid")
         .collect()
     }
     assigned, newc_ref = _pq_final(spark, sf_dir)
     want = sorted(
-        (r["vec_id"], cells[r["vec_id"]], list(r["codes"]))
-        for r in _pq_code_arrays(assigned).collect()
+        (v, cells[v], codes) for v, codes in _codes_by_vec(assigned.collect())
     )
     assert got == want, "materialized IVF-PQ index diverged"
     # and the fused collect returns the same trained codebooks

@@ -1,0 +1,48 @@
+"""No test runs ``scripts/*.py`` or ``bench.py``, so a helper they import
+could be deleted or renamed without any test failing. This guard parses
+each file and resolves every name it imports from the package or from
+bench."""
+
+from __future__ import annotations
+
+import ast
+import glob
+import importlib
+import importlib.util
+import os
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = "multithreaded_mapreduce_library_spark"
+
+
+def _checked_imports(path: str):
+    """(line, module, name) for every ``from <package...>|bench import``."""
+    tree = ast.parse(open(path).read(), filename=path)
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.ImportFrom) or node.level or not node.module:
+            continue
+        if node.module == "bench" or node.module.split(".")[0] == PACKAGE:
+            for alias in node.names:
+                yield node.lineno, node.module, alias.name
+
+
+def test_script_imports_resolve():
+    files = sorted(glob.glob(os.path.join(REPO, "scripts", "*.py")))
+    files.append(os.path.join(REPO, "bench.py"))
+    checked, missing = 0, []
+    for path in files:
+        for line, module, name in _checked_imports(path):
+            checked += 1
+            where = f"{os.path.relpath(path, REPO)}:{line}: from {module} import {name}"
+            try:
+                mod = importlib.import_module(module)
+            except ImportError as exc:
+                missing.append(f"{where} ({exc})")
+                continue
+            is_submodule = hasattr(mod, "__path__") and importlib.util.find_spec(
+                f"{module}.{name}"
+            )
+            if not (hasattr(mod, name) or is_submodule):
+                missing.append(where)
+    assert checked, "no package or bench imports found — the parser is broken"
+    assert not missing, "stranded imports:\n" + "\n".join(missing)

@@ -1767,10 +1767,9 @@ def test_multibatch_semantic_admission_settles_to_batch(spark, sf_dir, tmp_path)
         "vec_id", _dvec("embedding").alias("v")
     )
     corpus = e.filter(~is_batch)
-    centroids = _lloyd_train(corpus)
-    centroid_rows = [(r["cid"], list(r["vc"])) for r in centroids.collect()]
+    centroid_rows = _lloyd_train(corpus)
     idx = (
-        _assign_to_cells(corpus, centroids)
+        _assign_to_cells(corpus, centroid_rows)
         .withColumn("norm", F.expr(_SPARK_NORM))
         .select(
             F.col("vec_id").alias("od"), F.col("cid").alias("cid_i"),

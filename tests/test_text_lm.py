@@ -3,11 +3,11 @@ flagships: lm_bigram_score (landed r17), doc_ngram_novelty and
 source_divergence (landed r18).
 
 The oracle differentials themselves run in tests/test_registry_oracle.py
-like every registered query; these are the per-query pins that survived
-each staging->landing migration (docs/r17_plan.md / docs/r18_plan.md
-step 3): the hand-checked micro-corpora, the plan shapes the docstrings
-claim, and the EXECUTED-plan exchange-reuse/scan-count pins (the r17 AQE
-lesson — the static plan cannot show a silent recompute). The staging
+like every registered query; these are the per-query pins kept when
+each operator landed (docs/r17_plan.md / docs/r18_plan.md step 3): the
+hand-checked micro-corpora, the plan shapes the docstrings claim, and
+the EXECUTED-plan exchange-reuse/scan-count pins (the r17 AQE lesson —
+the static plan cannot show a silent recompute). The pre-landing
 differential tests (checked-in fixture + fresh seed) were retired on
 landing — they are redundant with the registry-wide harness plus the
 env-gated second-seed sweep.

@@ -96,6 +96,22 @@ def test_engine_session_tasks_run_guarded(spark):
     assert spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect() == [GUARDED]
 
 
+def test_package_import_leaves_daemon_unloaded():
+    """Workers start the daemon with ``python -m``, which imports the
+    package first; if that import already loaded the daemon module, runpy
+    warns and executes it a second time."""
+    script = (
+        "import sys, multithreaded_mapreduce_library_spark\n"
+        "print('multithreaded_mapreduce_library_spark.worker_daemon' in sys.modules)"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", script], cwd=REPO,
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True, timeout=120,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert res.stdout.strip() == "False"
+
+
 def test_mr_run_from_any_cwd(tmp_path):
     """Workers import the package (the daemon module, the facade's mapper)
     with neither the repo as cwd nor PYTHONPATH set."""
