@@ -376,8 +376,9 @@ FROM p2
         f"subvector explode is a narrow map ({PQ_M} rows per vector, "
         "same bytes); both assignment passes are the narrow LITERAL "
         "argmin (_pq_assign_narrow — the M×k collected codebook folds "
-        "into the plan, array_min reproduces the window path's (d2, "
-        "cid) ORDER BY bit-for-bit), so assignment rides the scan with "
+        "into the plan, array_min reproduces the (d2, cid) ORDER BY of "
+        "the DuckDB oracle's p1/p2 window argmins bit-for-bit), so "
+        "assignment rides the scan with "
         "ZERO exchanges instead of a broadcast join + N×M×k window "
         "exchange+sort per pass; the update partial-"
         f"aggregates into {PQ_M}x{PQ_K}x{SUB} cells regardless of "
@@ -435,8 +436,8 @@ SELECT query_id, neighbor_id, adist_fx, rnk FROM (
         "is ONE narrow projection against the LITERAL trained codebook "
         "riding the embeddings scan (_pq_codes_narrow — r22 removed the "
         "subvector explode and the corpus-wide groupBy(vec_id) exchange "
-        "the r21 form still paid; bit-identity with the grouped path is "
-        "test-pinned); each "
+        "the r21 form still paid; bit-identity with the DuckDB oracle's "
+        "p1/p2 argmins is test-pinned); each "
         "query's LUT row is built in ONE narrow projection against the "
         "same literal (the old broadcast join + per-"
         "(query, m) agg exchange are gone), assembled per query by one "

@@ -1143,7 +1143,7 @@ def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # cross-corpus trigram novelty (landed r18 after an oracle differential
 # on seeds 42 AND 1201, a hand-checked micro-corpus and plan pins;
-# evidence in docs/r18_plan.md / the r17 PERF.md entry)
+# evidence in the r17 and r18 PERF.md entries)
 # ---------------------------------------------------------------------------
 
 DOC_NGRAM_NOVELTY_ORACLE = f"""

@@ -933,7 +933,7 @@ def stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tmp = tempfile.mkdtemp(prefix="stream_upsert_")
     prev_conf = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
     try:
         troot = os.path.join(tmp, "versions")
         os.makedirs(troot)
@@ -1109,7 +1109,9 @@ def _register_stream_incremental_agg():
 
         tmp = tempfile.mkdtemp(prefix="stream_mv_")
         prev_conf = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
         try:
             troot = os.path.join(tmp, "versions")
             os.makedirs(troot)

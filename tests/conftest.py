@@ -3,6 +3,7 @@ from __future__ import annotations
 import pytest
 
 import os
+import shutil
 
 from multithreaded_mapreduce_library_spark.session import get_spark
 
@@ -11,9 +12,25 @@ from multithreaded_mapreduce_library_spark.session import get_spark
 SMOKE_SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _cache_home(tmp_path_factory):
+    """Sessions the tests start in subprocesses keep their class-data
+    archive under pytest's temp dir, not the user's cache."""
+    home = tmp_path_factory.mktemp("cache_home")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("XDG_CACHE_HOME", str(home))
+        yield
+    shutil.rmtree(home, ignore_errors=True)  # archives are ~140 MB each
+
+
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
+    # -Xshare:auto is the JVM's default; naming it opts this session out of
+    # the class-data archive, whose recording would run at interpreter exit
+    spark = get_spark(
+        app_name="tests", cpus=8, shuffle_partitions=8,
+        extra_conf={"spark.driver.extraJavaOptions": "-Xshare:auto"},
+    )
     yield spark
 
 

@@ -4,7 +4,7 @@ source_divergence (landed r18).
 
 The oracle differentials themselves run in tests/test_registry_oracle.py
 like every registered query; these are the per-query pins kept when
-each operator landed (docs/r17_plan.md / docs/r18_plan.md step 3): the
+each operator landed (PERF.md, the round-17 and round-18 entries): the
 hand-checked micro-corpora, the plan shapes the docstrings claim, and
 the EXECUTED-plan exchange-reuse/scan-count pins (the r17 AQE lesson —
 the static plan cannot show a silent recompute). The pre-landing
