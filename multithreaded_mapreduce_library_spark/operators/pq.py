@@ -32,10 +32,9 @@ from multithreaded_mapreduce_library_spark.operators.similarity import (
     _duck_cosine,
     _duck_fold_sum,
     _dvec,
-    _lloyd_assign,
-    _lloyd_seeds,
-    _lloyd_update,
+    _fixed_point_means,
     _load_embeddings,
+    build_ann_index,
     exact_cosine_rerank,
     QUERY_MOD,
     SHORTLIST_K,
@@ -205,45 +204,28 @@ def _pq_assign_narrow(sub: DataFrame, rows) -> DataFrame:
     )
 
 
-def _pq_codebooks(assigned: DataFrame) -> DataFrame:
-    """Fixed-point per-(subspace, codeword) component means — the update
-    step. Partial-aggregates into M×k×SUB counters regardless of corpus
-    size (the same integer-sum trick as the Lloyd update, so the updated
-    codebooks are bit-identical across engines and partitionings)."""
-    comp = assigned.select("m", "cid", F.posexplode("sv").alias("pos", "x"))
-    upd = (
-        comp.groupBy("m", "cid", "pos")
-        .agg(
-            F.sum(F.floor(F.col("x") * _FX + F.lit(0.5)).cast("long")).alias("sfx"),
-            F.count("*").alias("n"),
-        )
-        .withColumn(
-            "cval",
-            F.floor(F.col("sfx").cast("double") / F.col("n") + F.lit(0.5)) / _FX,
-        )
+def _pq_update(sub: DataFrame) -> DataFrame:
+    """(m, cid, vc): the codebook after one exact refinement, not yet
+    collected — the seed collect (the M×k subvectors of vec_id < PQ_K,
+    a parquet-pushed filter), the narrow literal-argmin assignment
+    against them, then the fixed-point per-(subspace, codeword) means
+    (M×k×SUB partial-aggregated counters regardless of corpus size).
+    _pq_trained collects it alone; similarity.build_ann_index collects
+    it in one action with the Lloyd centroid update."""
+    seed_rows = (
+        sub.filter(F.col("vec_id") < PQ_K)
+        .select("m", F.col("vec_id").alias("cid"), F.col("sv").alias("vc"))
+        .collect()
     )
-    return upd.groupBy("m", "cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-            lambda s: s["cval"],
-        ).alias("vc")
-    )
+    return _fixed_point_means(_pq_assign_narrow(sub, seed_rows), ("m", "cid"), "sv")
 
 
 def _pq_trained(spark: SparkSession, sf_dir: str) -> list:
     """Trained codebook ROWS after one exact refinement — the Spark twin
     of _DUCK_PQ_CTES' pqnewc. Two small eager collects (the M×k seed
     subvectors, then the M×k updated codebooks — the same constant-size
-    driver-fetch class as the Lloyd centroid collects); the assignment
-    pass between them is the narrow literal argmin riding the scan."""
-    sub = _pq_sub(spark, sf_dir)
-    seed_rows = (
-        sub.filter(F.col("vec_id") < PQ_K)
-        .select("m", F.col("vec_id").alias("cid"), F.col("sv").alias("vc"))
-        .collect()
-    )
-    a1 = _pq_assign_narrow(sub, seed_rows)
-    return _pq_codebooks(a1).collect()
+    driver-fetch class as the Lloyd centroid collects)."""
+    return _pq_update(_pq_sub(spark, sf_dir)).collect()
 
 
 def _pq_final(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
@@ -283,8 +265,9 @@ def _pq_codes_narrow(e: DataFrame, rows, vcol: str = "v") -> DataFrame:
 
 def _pq_codes_expr(rows, vcol: str) -> str:
     """The narrow per-vector code-array expression (see _pq_codes_narrow;
-    ``rows`` must be non-empty). Shared with _ivfpq_coded, whose input
-    frame also carries the trained cell id."""
+    ``rows`` must be non-empty). Shared with
+    similarity.build_ann_index, whose input frame also carries the
+    trained cell id."""
     cbs = _pq_codebook_literal(rows)
     d2 = (
         f"aggregate(zip_with(slice({vcol}, m * {SUB} + 1, {SUB}), cw.c,"
@@ -478,57 +461,35 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivfpq_coded(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
-    """((vec_id, cid, codes) materialized once per build, trained PQ
-    codebook ROWS) — the IVF-PQ index frame: trained Lloyd cell id plus
-    the narrow PQ code array, built in ONE scan with ZERO exchanges
-    (both argmins are literal folds riding the scan) and
-    ``localCheckpoint``'ed per invocation (computed fresh from parquet
-    every run — nothing persists across runs; the _ivfq_coded /
-    sim_topk_ivf_quantized r21 precedent). The checkpoint is what the
-    serving residual fix (VERDICT r21 #1) buys: the codes side and the
-    query side both READ the materialized frame instead of each
-    re-planning the scan→assign→codes subtree, and the rerank's
-    broadcast of the shortlist no longer drags the whole training
-    pipeline under a BroadcastExchange.
-
-    Eager-job budget (the ivfq fusion discipline): job 1 the Lloyd
-    seeds TakeOrdered collect (kept on its own so the limit fast path
-    stays intact — the r21 ivfq lesson), job 2 the PQ seed-subvector
-    collect (parquet-pushed ``vec_id < PQ_K`` filter), job 3 BOTH k-row
-    codebook updates (Lloyd k×dim ∥ PQ M×k×SUB — independent subtrees
-    as concurrent stages of ONE union'ed collect; m NULL marks the
-    Lloyd rows), then the checkpoint job itself. Both updates are
-    fixed-point integer means, so the fused collect is bit-identical
-    to the two separate collects it replaces."""
-    e = _load_embeddings(spark, sf_dir).select("vec_id", _dvec("embedding").alias("v"))
-    sub = _pq_sub(spark, sf_dir)
-    lloyd_a1 = _lloyd_assign(e, _lloyd_seeds(e).collect())
-    seed_rows = (
-        sub.filter(F.col("vec_id") < PQ_K)
-        .select("m", F.col("vec_id").alias("cid"), F.col("sv").alias("vc"))
-        .collect()
+def _ivfpq_shortlist_ids(
+    spark: SparkSession, sf_dir: str, index: DataFrame, codebook_rows: list
+) -> DataFrame:
+    """(query_id, neighbor_id) — the per-query PQ shortlist over a
+    build_ann_index(..., "pq") index (checkpointed, or read back from
+    parquet) and its codebook rows: each query's ADC LUT (_pq_query_lut)
+    joined with its own cell id is BROADCAST into the index scan, keyed
+    on the trained cell id, so the candidate side carries (ids, tinyint
+    codes) only; ADC is a pure projection, and the top-SHORTLIST_K
+    window is one query_id exchange carrying a single BIGINT."""
+    qcells = index.filter(F.col("vec_id") % QUERY_MOD == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("cid").alias("qcid")
     )
-    pq_a1 = _pq_assign_narrow(sub, seed_rows)
-    lu = _lloyd_update(lloyd_a1).select(
-        F.lit(None).cast("int").alias("m"), "cid", "vc"
+    qlut = _pq_query_lut(spark, sf_dir, codebook_rows).join(qcells, "query_id")
+    cand = index.join(
+        F.broadcast(qlut),
+        (F.col("cid") == F.col("qcid")) & (F.col("query_id") != F.col("vec_id")),
     )
-    pu = _pq_codebooks(pq_a1).select(F.col("m").cast("int").alias("m"), "cid", "vc")
-    rows = lu.unionByName(pu).collect()
-    cent_rows = [r for r in rows if r["m"] is None]
-    newc_rows = [r for r in rows if r["m"] is not None]
-    base = _lloyd_assign(e, cent_rows)  # (vec_id, cid, d2, va)
-    if newc_rows:
-        coded = base.select(
-            "vec_id", "cid", F.expr(_pq_codes_expr(newc_rows, "va")).alias("codes")
-        )
-    else:
-        # empty corpus: no centroids and no codebooks — the empty frame
-        # (same schema) is what the unmaterialized path produced too
-        coded = base.select(
-            "vec_id", "cid", F.lit(None).cast("array<tinyint>").alias("codes")
-        ).where(F.lit(False))
-    return coded.localCheckpoint(eager=True), newc_rows
+    scored = cand.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.expr(_ADC_SCORE).alias("adist_fx"),
+    )
+    w = W.partitionBy("query_id").orderBy("adist_fx", "neighbor_id")
+    return (
+        scored.withColumn("crnk", F.row_number().over(w))
+        .filter(F.col("crnk") <= SHORTLIST_K)
+        .select("query_id", "neighbor_id")
+    )
 
 
 @register(
@@ -589,18 +550,15 @@ SELECT query_id, neighbor_id, cosine, rnk FROM (
         "one plan is precisely the 100 TB serving layout: the index "
         "stores cell id + M bytes per vector, a query touches one "
         "cell's codes, and floats are read for K rows only. Shuffle "
-        "story (r22): both trainings fold their k-row codebooks into "
-        "the plan as literals (narrow zero-exchange assignments — "
-        "_lloyd_assign and _pq_codes_expr), and the whole (vec_id, "
-        "cell id, codes) index frame is built in ONE scan and "
-        "localCheckpoint'ed once per build (_ivfpq_coded, computed "
-        "fresh from parquet every invocation): the codes side and the "
-        "query-cell side READ the materialized frame instead of each "
-        "re-planning scan→assign→codes (r21 still re-planned the cells "
-        "frame on both sides and paid a corpus-wide groupBy(vec_id) "
-        "code-array exchange plus a codes⋈cells join — all gone); "
-        "candidate generation is ONE "
-        "equi-join of the index frame against the BROADCAST "
+        "story: both trainings fold their k-row codebooks into the plan "
+        "as literals (narrow zero-exchange assignments — _lloyd_assign "
+        "and _pq_codes_expr), and the whole (vec_id, cell id, codes) "
+        "index is built in ONE scan and materialized once per build "
+        "(build_ann_index(codec='pq'), computed fresh from parquet "
+        "every invocation): the codes side and the query-cell side READ "
+        "the materialized index instead of each re-planning "
+        "scan→assign→codes; candidate generation is ONE "
+        "equi-join of the index against the BROADCAST "
         "(query LUT x query cell) frame keyed on the trained cell id — "
         "the candidate side carries (ids, tinyint codes) only, no "
         "float column; ADC is a pure projection; shortlist is one "
@@ -610,29 +568,7 @@ SELECT query_id, neighbor_id, cosine, rnk FROM (
     ),
 )
 def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r22 (VERDICT r21 #1): ONE materialized (vec_id, cid, codes) index
-    # frame — the codes side and the query-cell side read the
-    # localCheckpoint instead of each re-planning scan→assign→codes,
-    # and the rerank's shortlist broadcast now hangs off the checkpoint
-    # instead of dragging the whole training pipeline under it.
-    coded, newc = _ivfpq_coded(spark, sf_dir)
-    qcells = coded.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("cid").alias("qcid")
+    index, codebook = build_ann_index(spark, sf_dir, "pq")
+    return exact_cosine_rerank(
+        spark, sf_dir, _ivfpq_shortlist_ids(spark, sf_dir, index, codebook), 3
     )
-    qlut = _pq_query_lut(spark, sf_dir, newc).join(qcells, "query_id")
-    cand = coded.join(
-        F.broadcast(qlut),
-        (F.col("cid") == F.col("qcid")) & (F.col("query_id") != F.col("vec_id")),
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.expr(_ADC_SCORE).alias("adist_fx"),
-    )
-    w = W.partitionBy("query_id").orderBy("adist_fx", "neighbor_id")
-    short_ids = (
-        scored.withColumn("crnk", F.row_number().over(w))
-        .filter(F.col("crnk") <= SHORTLIST_K)
-        .select("query_id", "neighbor_id")
-    )
-    return exact_cosine_rerank(spark, sf_dir, short_ids, 3)

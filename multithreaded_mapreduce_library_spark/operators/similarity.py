@@ -650,21 +650,18 @@ def ivf_train_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- the ONE Lloyd core --------------------------------------------------
-# Unified in r12 (the r7-cohort re-gate round, as planned in the r11
-# _PRIORITY prose): previously _lloyd_final_assignment carried inline
-# assign/update closures over the FULL embeddings table while
-# _lloyd_cells_for duplicated them for an arbitrary (corpus-split) frame.
-# Everything — the five IVF/PQ training consumers AND the semantic-
-# admission pair (batch + streaming) — now runs through the functions
-# below, and every nearest-centroid pick through _nearest_centroid.
-# Bit-identity across the unification is guaranteed by the same tricks
-# as before (sequential-fold d2, fixed-point integer
-# centroid means) plus one seed-rule note: BOTH engines seed with the
-# K_CELLS smallest vec_ids PRESENT in the input frame — Spark via
-# orderBy/limit (_lloyd_seeds), the oracles via `ORDER BY vec_id LIMIT K`
-# in _DUCK_LLOYD_CTES' seeds CTE (aligned r15 per
-# docs/lloyd_seeds_alignment_r15.md; vec_id is unique, so the selection
-# is total and stable on both sides, on any id range, dense or not).
+# Every IVF/PQ trainer, the ANN index builder and the semantic-admission
+# pair (batch + streaming) run through the functions below. Three
+# invariants keep them bit-identical to the DuckDB oracles:
+# - seed rule: BOTH engines seed with the K_CELLS smallest vec_ids
+#   PRESENT in the input frame — Spark via orderBy/limit (_lloyd_seeds),
+#   the oracles via `ORDER BY vec_id LIMIT K` in _DUCK_LLOYD_CTES' seeds
+#   CTE (docs/lloyd_seeds_alignment_r15.md; vec_id is unique, so the
+#   selection is total and stable on any id range, dense or not);
+# - d2 is the shared sequential squared-L2 fold, and every nearest-
+#   centroid pick goes through _nearest_centroid's (d2, cid) argmin;
+# - centroid and codeword updates are fixed-point means
+#   (_fixed_point_means): integer component sums are order-independent.
 
 
 def _lloyd_seeds(e: DataFrame) -> DataFrame:
@@ -742,16 +739,19 @@ def _lloyd_assign(e: DataFrame, rows) -> DataFrame:
     )
 
 
-def _lloyd_update(a: DataFrame) -> DataFrame:
-    """(cid, vc): recompute centroids from an assignment frame as
-    FIXED-POINT component means (1e-6 quantized) — double sums are
-    order-dependent, integer sums are not, so the updated centroids are
-    bit-identical across engines and partitionings. Shuffle story: a
-    posexplode into (cid, pos) partial-aggregated counters — k×dim
-    groups regardless of corpus size."""
-    comp = a.select("cid", F.posexplode("va").alias("pos", "x"))
+def _fixed_point_means(a: DataFrame, keys: tuple[str, ...], vcol: str) -> DataFrame:
+    """(*keys, vc): the update step of every Lloyd and PQ round — per
+    ``keys`` group, the FIXED-POINT component means (1e-6 quantized) of
+    the array<double> column ``vcol``: keys ``cid`` over full vectors
+    (``va``) for the Lloyd centroids, keys ``m, cid`` over subvectors
+    (``sv``) for the PQ codebooks. Double sums are order-dependent,
+    integer sums are not, so the means are bit-identical across engines
+    and partitionings. Shuffle story: a posexplode into (keys…, pos)
+    partial-aggregated counters — groups × dim regardless of corpus
+    size."""
+    comp = a.select(*keys, F.posexplode(vcol).alias("pos", "x"))
     upd = (
-        comp.groupBy("cid", "pos")
+        comp.groupBy(*keys, "pos")
         .agg(
             F.sum(F.floor(F.col("x") * _FX + F.lit(0.5)).cast("long")).alias("sfx"),
             F.count("*").alias("n"),
@@ -761,7 +761,7 @@ def _lloyd_update(a: DataFrame) -> DataFrame:
             F.floor(F.col("sfx").cast("double") / F.col("n") + F.lit(0.5)) / _FX,
         )
     )
-    return upd.groupBy("cid").agg(
+    return upd.groupBy(*keys).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "cval"))),
             lambda s: s["cval"],
@@ -784,7 +784,7 @@ def _lloyd_train(e: DataFrame, rounds: int = 1) -> list:
     assert rounds >= 1
     rows = _lloyd_seeds(e).collect()
     for _ in range(rounds):
-        rows = _lloyd_update(_lloyd_assign(e, rows)).collect()
+        rows = _fixed_point_means(_lloyd_assign(e, rows), ("cid",), "va").collect()
     return rows
 
 
@@ -999,94 +999,115 @@ def sim_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
 SHORTLIST_K = 10  # int8 candidates kept per query before exact re-rank
 
 
-def _ivfq_coded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, cid, codes) — trained cell assignment plus GLOBAL-symmetric
-    int8 codes of the unit-normalized vectors, stored as a real
-    ``array<tinyint>`` (range [-127, 127], so the signed byte holds the
-    symmetric rule directly with no zero-point shift). Deliberately
-    carries NO float column: this frame is everything the candidate
-    generation + shortlist stage is allowed to shuffle.
+def build_ann_index(
+    spark: SparkSession, sf_dir: str, codec: str
+) -> tuple[DataFrame, list]:
+    """(index, codec rows): the quantized ANN index both serving
+    capstones read. ``index`` is the materialized (vec_id, cid, codes)
+    frame — the trained Lloyd cell id plus the codec's tinyint code
+    array, with NO float column. ``codec`` picks the codes:
 
-    r21 optimization (guide §2.3/§2.4): the global scale
-    s = 127 / max|u_i| is collected to the driver and folded into the
-    plan as ONE double literal instead of the old
-    crossJoin(broadcast(gs)) — the 1-row agg subtree was re-planned on
-    BOTH shortlist sides (2 extra corpus scans + 2 agg exchanges + 2
-    BroadcastNestedLoopJoins in the capstone plan). Both reductions
-    (per-vector greatest of |min|/|max|, corpus max) are
-    order-independent, so the double is cross-engine exact, and a
-    collected double round-trips repr -> SQL literal losslessly (the
-    k-row centroid-fetch precedent — same constant-size driver-fetch
-    class). The scale is independent of the cell assignment, so its agg
-    is UNIONED into the centroid-update collect: the two independent
-    subtrees run as concurrent stages of ONE job — the eager build still
-    pays exactly two Spark jobs (seeds, then update+scale), same as
-    before the optimization (the seeds TakeOrdered keeps its own job so
-    the limit fast path stays intact). Past the assignment the codes
-    projection is narrow and zero-exchange, riding the scan."""
+    - ``"int8"``: GLOBAL-symmetric int8 codes of the unit-normalized
+      vectors, ``floor(u_i * s + 0.5)`` with s = 127 / max|u_i| (range
+      [-127, 127], so the signed byte holds the symmetric rule with no
+      zero-point shift); the codec rows are the one collected scale row
+      (``vc`` = [s]);
+    - ``"pq"``: the PQ_M per-subspace codeword ids (pq._pq_codes_expr);
+      the codec rows are the collected (m, cid, vc) codebook, which the
+      serving LUT needs.
+
+    Rounds, in order: (1) the Lloyd seeds TakeOrdered collect, kept on
+    its own so the limit fast path stays intact (PQ's seed-subvector
+    collect follows it, inside pq._pq_update); (2) ONE union'ed collect
+    of the Lloyd centroid update and the codec's rows — the global-scale
+    agg for int8, the PQ codebook update for pq — so the independent
+    subtrees run as concurrent stages of one action; (3) the narrow
+    assignment + code projection, ``localCheckpoint``'ed eagerly. Every
+    collected value is a fixed-point mean or an order-independent max,
+    and a collected double round-trips repr -> SQL literal losslessly,
+    so the literals are bit-identical to the oracles' values. Past the
+    collects the assignment and the codes are one narrow zero-exchange
+    projection riding the scan. The index is computed fresh from parquet
+    on every call (nothing persists across runs); this is the one place
+    a cluster would swap ``localCheckpoint`` for a reliable
+    ``checkpoint()``. An empty corpus gives an empty index (int8 falls
+    back to scale 1.0; PQ has no codebook to code against)."""
+    # pq.py imports this module at module level
+    from multithreaded_mapreduce_library_spark.operators.pq import (
+        _pq_codes_expr,
+        _pq_sub,
+        _pq_update,
+    )
+
+    def unit(df: DataFrame) -> DataFrame:
+        # zero-norm guard keeps degenerate vectors deterministic: unit
+        # := v, codes all zero after scaling
+        return df.withColumn("norm", F.expr(_SPARK_NORM)).withColumn(
+            "uv", F.expr("transform(v, x -> x / IF(norm = 0.0D, 1.0D, norm))")
+        )
+
     e = _load_embeddings(spark, sf_dir).select("vec_id", _dvec("embedding").alias("v"))
-    # unit-normalize (zero-norm guard keeps degenerate vectors
-    # deterministic: unit := v, codes all zero after scaling)
-    u = e.withColumn("norm", F.expr(_SPARK_NORM)).withColumn(
-        "uv", F.expr("transform(v, x -> x / IF(norm = 0.0D, 1.0D, norm))")
-    )
-    gmax = F.max(
-        F.greatest(F.abs(F.expr("array_min(uv)")), F.abs(F.expr("array_max(uv)")))
-    )
-    gs_row = u.agg(
-        (F.lit(127.0) / F.when(gmax == 0.0, 1.0).otherwise(gmax)).alias("s")
-    ).select(F.lit(None).cast("long").alias("cid"), F.array("s").alias("vc"))
-    # job 1: the plain seeds TakeOrdered collect (kept on its own so the
-    # limit fast path stays intact); job 2: centroid update ∥ global-scale
-    # agg, UNIONED so both subtrees run as concurrent stages of one job
-    # (cid NULL marks the scale row — real cids are vec_ids, never NULL)
     a = _lloyd_assign(e, _lloyd_seeds(e).collect())
-    rows = _lloyd_update(a).unionByName(gs_row).collect()
-    s_vals = [r["vc"][0] for r in rows if r["cid"] is None]
-    cent_rows = [r for r in rows if r["cid"] is not None]
-    # empty corpus: the agg still yields one row with s NULL and there are
-    # no centroids — any finite literal gives the same (empty) output frame
-    s = 1.0 if not s_vals or s_vals[0] is None else float(s_vals[0])
-    base = (
-        _assign_to_cells(e, cent_rows)
-        .withColumn("norm", F.expr(_SPARK_NORM))
-        .withColumn("uv", F.expr("transform(v, x -> x / IF(norm = 0.0D, 1.0D, norm))"))
+    if codec == "int8":
+        gmax = F.max(
+            F.greatest(F.abs(F.expr("array_min(uv)")), F.abs(F.expr("array_max(uv)")))
+        )
+        codec_df = unit(e).agg(
+            (F.lit(127.0) / F.when(gmax == 0.0, 1.0).otherwise(gmax)).alias("s")
+        ).select(F.array("s").alias("vc"))
+    elif codec == "pq":
+        codec_df = _pq_update(_pq_sub(spark, sf_dir))
+    else:
+        raise ValueError(f"codec must be 'int8' or 'pq', not {codec!r}")
+    rows = (
+        _fixed_point_means(a, ("cid",), "va")
+        .withColumn("lloyd", F.lit(True))
+        .unionByName(codec_df, allowMissingColumns=True)
+        .collect()
     )
-    # CAST(<repr> AS DOUBLE): repr is the shortest round-trip string and
-    # the decimal-literal -> DOUBLE conversion is correctly rounded, so
-    # the literal is the exact collected double (_nearest_centroid precedent)
-    return base.select(
-        "vec_id",
-        "cid",
-        F.expr(
-            f"transform(uv, x -> CAST(floor(x * CAST({s!r} AS DOUBLE) + 0.5)"
-            " AS TINYINT))"
-        ).alias("codes"),
-    )
+    codec_rows = [r for r in rows if not r["lloyd"]]
+    base = _assign_to_cells(e, [r for r in rows if r["lloyd"]])
+    if codec == "int8":
+        # empty corpus: the agg still yields one row, with s NULL, and
+        # there are no centroids — any finite literal gives the same
+        # (empty) index. CAST(<repr> AS DOUBLE) is the exact collected
+        # double (_nearest_centroid's literal rule).
+        s = codec_rows[0]["vc"][0]
+        s = 1.0 if s is None else float(s)
+        index = unit(base).select(
+            "vec_id",
+            "cid",
+            F.expr(
+                f"transform(uv, x -> CAST(floor(x * CAST({s!r} AS DOUBLE) + 0.5)"
+                " AS TINYINT))"
+            ).alias("codes"),
+        )
+    elif codec_rows:
+        index = base.select(
+            "vec_id", "cid", F.expr(_pq_codes_expr(codec_rows, "v")).alias("codes")
+        )
+    else:
+        # no codebook (no vec_id < PQ_K): nothing to code against
+        index = base.select(
+            "vec_id", "cid", F.lit(None).cast("array<tinyint>").alias("codes")
+        ).where(F.lit(False))
+    return index.localCheckpoint(eager=True), codec_rows
 
 
-def _ivfq_shortlist_ids(
-    spark: SparkSession, sf_dir: str, coded: DataFrame | None = None
-) -> DataFrame:
-    """(query_id, neighbor_id) — the per-query int8 shortlist, computed
-    entirely on the tinyint codes: cell-local candidate join, widened
-    integer dot product, top-SHORTLIST_K window. No float-array column
-    exists anywhere in this subplan past the code projection — the
+def _ivfq_shortlist_ids(index: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id) — the per-query int8 shortlist over a
+    build_ann_index(..., "int8") index (checkpointed, or read back from
+    parquet), computed entirely on the tinyint codes: cell-local
+    candidate join, widened integer dot product, top-SHORTLIST_K window.
+    No float-array column exists anywhere in this subplan — the
     candidate exchange carries ids + 1-byte codes only (plan-asserted by
-    tests/test_plans.py::test_ivf_quantized_shortlist_carries_no_floats).
-
-    ``coded`` lets a caller supply an already-MATERIALIZED (vec_id, cid,
-    codes) index table (bench.py's serving-only measurement; a 100 TB
-    deployment trains once and serves many) — by default the index is
-    built in-query, which is what the oracle-gated capstone times."""
-    if coded is None:
-        coded = _ivfq_coded(spark, sf_dir)
-    q = coded.filter(F.col("vec_id") % QUERY_MOD == 0).select(
+    tests/test_plans.py::test_ivf_quantized_shortlist_carries_no_floats)."""
+    q = index.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("cid").alias("qcid"),
         F.col("codes").alias("qa"),
     )
-    n = coded.select(
+    n = index.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("cid").alias("ncid"),
         F.col("codes").alias("qb"),
@@ -1223,19 +1244,20 @@ SELECT query_id, neighbor_id, cosine, rnk FROM (
         "scores). This is how a 100 TB index answers: floats stay on "
         "disk, 4x-smaller codes are scanned cell-locally with integer "
         "SIMD, and the expensive exact math touches K rows per query — "
-        "and the PLAN now matches the claim end-to-end: the candidate "
-        "join + shortlist window shuffle ids and real 1-byte tinyint "
-        "codes ONLY (no float-array column exists in that subplan, "
-        "plan-asserted), and the exact rerank re-acquires the float "
-        "vectors by broadcasting the tiny (queries x SHORTLIST_K) id "
-        "list against the embeddings scan — the corpus itself never "
-        "shuffles for the rerank. Shuffle story: training as in "
-        "ivf_train_centroids (k centroids broadcast, kxdim partial-agg "
-        "update); ONE extra 1-row global-scale aggregation whose double "
-        "is collected and folded into the plan as a literal (r21: the "
-        "old crossJoin(broadcast(gs)) form re-planned that agg subtree "
-        "on both shortlist sides — two extra corpus scans; the literal "
-        "is bit-identical, see _ivfq_coded); the probe "
+        "and the plan matches the claim end-to-end: the index is ONE "
+        "materialized (vec_id, cell id, tinyint codes) frame "
+        "(build_ann_index(codec='int8')), the candidate join + shortlist "
+        "window shuffle ids and real 1-byte codes ONLY (no float-array "
+        "column exists in that subplan, plan-asserted), and the exact "
+        "rerank re-acquires the float vectors by broadcasting the tiny "
+        "(queries x SHORTLIST_K) id list against the embeddings scan — "
+        "the corpus itself never shuffles for the rerank. Shuffle story: "
+        "training as in ivf_train_centroids (k centroids folded into the "
+        "plan as literals, kxdim partial-agg update); ONE extra 1-row "
+        "global-scale aggregation, collected in the same job as the "
+        "centroid update and folded into the code projection as a "
+        "double literal (bit-identical: both reductions are order-"
+        "independent); the probe "
         "is ONE equi-join on the trained cell id (no CartesianProduct, "
         "plan-asserted) carrying codes only; shortlist and re-rank are "
         f"two windows partitioned by query_id, bounded by cell size and "
@@ -1246,21 +1268,8 @@ SELECT query_id, neighbor_id, cosine, rnk FROM (
     ),
 )
 def sim_topk_ivf_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # codes-only shortlist, then the shared broadcast rerank (the
-    # candidate exchange never carries a float array — plan-asserted).
-    # r21: the coded index is MATERIALIZED once per build
-    # (localCheckpoint, computed fresh from parquet on every invocation —
-    # nothing persists across runs): the shortlist's q and n sides both
-    # read the checkpointed (vec_id, cid, codes) frame instead of each
-    # re-planning the scan→assign→codes subtree, which is exactly the
-    # build-once/serve-many shape bench.py's ann_serving block measures
-    # against a parquet-materialized index (equivalence pinned by
-    # tests/test_pq.py). Measured best-of-5 at sf0.1: 2.31s vs 2.72s
-    # unmaterialized (and 3.57s for the pre-r21 crossJoin-gs form).
-    coded = _ivfq_coded(spark, sf_dir).localCheckpoint(eager=True)
-    return exact_cosine_rerank(
-        spark, sf_dir, _ivfq_shortlist_ids(spark, sf_dir, coded=coded), 3
-    )
+    index, _ = build_ann_index(spark, sf_dir, "int8")
+    return exact_cosine_rerank(spark, sf_dir, _ivfq_shortlist_ids(index), 3)
 
 
 # ---------------------------------------------------------------------------

@@ -27,20 +27,6 @@ import duckdb
 
 BASE = "/root/testdata/sf0.1"
 DIMS = ("region", "nation", "customer", "supplier", "part")
-# Builders that run Spark actions at plan-build time (the r15
-# narrow-assign Lloyd family trains via k-row centroid collects): their
-# clock starts before the builder so training is inside the timed region.
-EAGER_BUILD = frozenset({
-    "ivf_train_centroids",
-    "sim_topk_ivf_trained",
-    "sim_topk_ivf_quantized",
-    "sim_topk_ivfpq",
-    "sim_topk_pq",
-    "dedup_semantic",
-    "dedup_semantic_incremental",
-    "embedding_outliers",
-})
-
 PROBE = (
     "wordcount",
     "pricing_summary",
@@ -107,9 +93,9 @@ PROBE = (
     "merge_upsert",
     "split_contamination_gate",
     # round-9 additions (streaming ops are excluded by construction: their
-    # builders execute the availableNow replay internally, so this
-    # harness's post-builder timing would measure nothing — their batch
-    # cores ARE merge_upsert and dedup_exact, both probed):
+    # builders execute the availableNow replay internally, so the noop
+    # write after the builder re-reads a settled memory table — their
+    # batch cores ARE merge_upsert and dedup_exact, both probed):
     # compact_plan plans over the file-inventory METADATA (one agg + one
     # single-partition window over O(#files) rows) — expect ~Nx from the
     # inventory agg, the window input grows with chunk count only;
@@ -302,16 +288,11 @@ def time_queries(
     for name in probe:
         best = float("inf")
         for _ in range(iters):
-            # builder inside the clock for EAGER builders only (the r15
-            # narrow-assign Lloyd family runs its training jobs at
-            # plan-build time); pure-lazy builders keep the historical
-            # exec-only clock — see bench.py's protocol note
-            if name in EAGER_BUILD:
-                t0 = time.perf_counter()
-                df = specs[name].builder(spark, sf_dir)
-            else:
-                df = specs[name].builder(spark, sf_dir)
-                t0 = time.perf_counter()
+            # the clock starts before the builder for every query, so
+            # builders that run jobs at build time (Lloyd/PQ training,
+            # BPE, dedup star contraction, ...) are timed in full
+            t0 = time.perf_counter()
+            df = specs[name].builder(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
         out[name] = round(best, 3)

@@ -312,6 +312,23 @@ def test_dedup_semantic_incremental_empty_corpus(spark, tmp_path):
     assert _compare(spark, "dedup_semantic_incremental", tmp_path, ["embeddings"]) == []
 
 
+def test_ann_capstones_empty_corpus(spark, tmp_path):
+    """Empty embeddings table: build_ann_index's empty-corpus branches
+    (int8 falls back to scale 1.0, PQ has no codebook) must give both
+    serving capstones an empty result with their usual schema, as the
+    oracles do."""
+    from multithreaded_mapreduce_library_spark.operators.similarity import DIM
+
+    _write_embeddings(tmp_path, [], DIM)
+    dtypes = [
+        ("query_id", "bigint"), ("neighbor_id", "bigint"),
+        ("cosine", "double"), ("rnk", "int"),
+    ]
+    for name in ("sim_topk_ivf_quantized", "sim_topk_ivfpq"):
+        assert SPECS[name].builder(spark, str(tmp_path)).dtypes == dtypes, name
+        assert _compare(spark, name, tmp_path, ["embeddings"]) == [], name
+
+
 # ---------------------------------------------------------------------------
 # bpe_train edges: the sf fixtures always fill all BPE_ROUNDS rules, so the
 # early-termination paths (no pairs at all / pairs exhausted mid-loop) are

@@ -505,7 +505,7 @@ def test_ivf_quantized_serving_path_is_cell_local(spark, sf_dir):
     """The capstone serving query must generate candidates through the
     cell equi-join only — no cartesian fallback anywhere in the composed
     train+quantize+probe+rerank plan. Since r21 the global code scale is
-    an eagerly-collected literal (folded in by _ivfq_coded) and the training
+    an eagerly-collected literal (folded in by build_ann_index) and the training
     centroids are the narrow literal argmin, so the plan must contain NO
     nested-loop join at all (the old crossJoin(broadcast(gs)) planned as
     BroadcastNestedLoopJoin on BOTH shortlist sides — the subtree the
@@ -529,15 +529,16 @@ def test_ivf_quantized_shortlist_carries_no_floats(spark, sf_dir):
     import re
 
     from multithreaded_mapreduce_library_spark.operators.similarity import (
-        _ivfq_coded,
         _ivfq_shortlist_ids,
+        build_ann_index,
     )
 
-    dtypes = dict(_ivfq_coded(spark, sf_dir).dtypes)
+    index, _ = build_ann_index(spark, sf_dir, "int8")
+    dtypes = dict(index.dtypes)
     assert dtypes["codes"] == "array<tinyint>", dtypes
     assert not any("double" in t or "float" in t for t in dtypes.values()), dtypes
 
-    plan = formatted_plan(_ivfq_shortlist_ids(spark, sf_dir))
+    plan = formatted_plan(_ivfq_shortlist_ids(index))
     float_cols = re.compile(r"\b(v|uv|va|vb|norm)#")
     blocks = re.findall(
         r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\n"

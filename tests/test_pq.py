@@ -6,6 +6,7 @@ cartesian fallback)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from multithreaded_mapreduce_library_spark.plans import formatted_plan
@@ -35,8 +36,8 @@ def test_pq_refinement_improves_residual(spark, sf_dir):
         PQ_K,
         _FX,
         _pq_assign_narrow,
-        _pq_codebooks,
         _pq_sub,
+        _pq_trained,
     )
 
     sub = _pq_sub(spark, sf_dir)
@@ -44,7 +45,7 @@ def test_pq_refinement_improves_residual(spark, sf_dir):
         "m", F.col("vec_id").alias("cid"), F.col("sv").alias("vc")
     )
     a1 = _pq_assign_narrow(sub, seeds.collect())
-    a2 = _pq_assign_narrow(sub, _pq_codebooks(a1).collect())
+    a2 = _pq_assign_narrow(sub, _pq_trained(spark, sf_dir))
 
     def total_fx(a):
         return a.agg(
@@ -259,19 +260,18 @@ def test_pq_narrow_codes_agree_with_grouped(spark, sf_dir):
 
 
 def test_ivfpq_coded_matches_unmaterialized_parts(spark, sf_dir):
-    """_ivfpq_coded's fused-collect + checkpointed index frame must hold
-    exactly the (vec_id, cell id, code array) triples the unmaterialized
-    parts compute: Lloyd cells from _lloyd_final_assignment, code arrays
-    grouped from _pq_final's assignment."""
-    from multithreaded_mapreduce_library_spark.operators.pq import (
-        _ivfpq_coded,
-        _pq_final,
-    )
+    """build_ann_index(codec="pq")'s fused-collect + checkpointed index
+    must hold exactly the (vec_id, cell id, code array) triples the
+    unmaterialized parts compute: Lloyd cells from
+    _lloyd_final_assignment, code arrays grouped from _pq_final's
+    assignment."""
+    from multithreaded_mapreduce_library_spark.operators.pq import _pq_final
     from multithreaded_mapreduce_library_spark.operators.similarity import (
         _lloyd_final_assignment,
+        build_ann_index,
     )
 
-    coded, newc = _ivfpq_coded(spark, sf_dir)
+    coded, newc = build_ann_index(spark, sf_dir, "pq")
     got = sorted(
         (r["vec_id"], r["cid"], list(r["codes"])) for r in coded.collect()
     )
@@ -318,25 +318,52 @@ def test_zorder_buckets_are_prunable_envelopes(spark, sf_dir):
     )
 
 
-def test_ivfq_serving_over_materialized_index_matches_end_to_end(
-    spark, sf_dir, tmp_path
+@pytest.mark.parametrize("codec", ["int8", "pq"])
+def test_ann_serving_over_materialized_index_matches_end_to_end(
+    spark, sf_dir, tmp_path, codec
 ):
     """The bench.py serving-only measurement is honest only if
-    probe→shortlist→rerank over a MATERIALIZED (vec_id, cid, codes)
-    index table returns exactly what the end-to-end capstone (which
-    trains in-query) returns — pin that equivalence."""
+    shortlist→rerank over a parquet-MATERIALIZED build_ann_index index
+    returns exactly what the end-to-end capstone (which builds the index
+    in-query) returns — pinned for both codecs."""
+    from multithreaded_mapreduce_library_spark.operators.pq import (
+        _ivfpq_shortlist_ids,
+    )
     from multithreaded_mapreduce_library_spark.operators.similarity import (
-        _ivfq_coded,
         _ivfq_shortlist_ids,
+        build_ann_index,
         exact_cosine_rerank,
     )
 
-    idx_path = str(tmp_path / "ivfq_index")
-    _ivfq_coded(spark, sf_dir).write.mode("overwrite").parquet(idx_path)
+    index, codec_rows = build_ann_index(spark, sf_dir, codec)
+    idx_path = str(tmp_path / "ann_index")
+    index.write.mode("overwrite").parquet(idx_path)
     idx = spark.read.parquet(idx_path)
-    served = exact_cosine_rerank(
-        spark, sf_dir, _ivfq_shortlist_ids(spark, sf_dir, coded=idx), 3
-    )
-    e2e = SPECS["sim_topk_ivf_quantized"].builder(spark, sf_dir)
+    if codec == "int8":
+        capstone, short_ids = "sim_topk_ivf_quantized", _ivfq_shortlist_ids(idx)
+    else:
+        capstone = "sim_topk_ivfpq"
+        short_ids = _ivfpq_shortlist_ids(spark, sf_dir, idx, codec_rows)
+    served = exact_cosine_rerank(spark, sf_dir, short_ids, 3)
+    e2e = SPECS[capstone].builder(spark, sf_dir)
     canon = lambda df: sorted(tuple(map(str, r)) for r in df.collect())
     assert canon(served) == canon(e2e)
+
+
+def test_ann_index_builders_job_counts(spark, sf_dir):
+    """Both capstone builders run the same rounds — the Lloyd seeds
+    collect, ONE fused collect of the centroid update and the codec's
+    rows, then the index checkpoint — so their builder-time Spark jobs
+    are pinned: splitting the fused collect in two, or re-planning the
+    index per consumer, moves these counts."""
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for name in ("sim_topk_ivf_quantized", "sim_topk_ivfpq"):
+            group = f"ann-index-build-{name}"
+            sc.setJobGroup(group, group)
+            SPECS[name].builder(spark, sf_dir)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("", "")
+    assert jobs == {"sim_topk_ivf_quantized": 12, "sim_topk_ivfpq": 17}, jobs
