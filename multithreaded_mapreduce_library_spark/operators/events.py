@@ -52,6 +52,42 @@ def json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared with the streaming twin (stream_tumbling): complete mode settles
 # to exactly this window set, and sharing the constant is what enforces
 # the "identical results" claim (same pattern as joins._ASOF_ORACLE).
+def tumbling_transform(s: DataFrame) -> DataFrame:
+    """Tumbling 1-hour windowed count/sum per event_type over a batch or
+    stream frame: time_tumbling, stream_tumbling and the multi-batch
+    replay test all run this one aggregation."""
+    return (
+        s.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(
+            F.count("*").alias("cnt"),
+            (F.sum(fixed_point("value", 1_000_000)) / 1_000_000).alias("sum_value"),
+        )
+        .select(
+            F.date_format("w.start", TS_FMT_SPARK).alias("window_start"),
+            "event_type",
+            "cnt",
+            "sum_value",
+        )
+    )
+
+
+def sliding_transform(s: DataFrame) -> DataFrame:
+    """Sliding 1-hour/30-minute windowed count per event_type behind a
+    2-hour watermark, shared by time_sliding and stream_sliding_watermark.
+    Spark drops the watermark on batch input, so the batch plan is the
+    plain windowed aggregate."""
+    return (
+        s.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
+        .agg(F.count("*").alias("cnt"))
+        .select(
+            F.date_format("w.start", TS_FMT_SPARK).alias("window_start"),
+            "event_type",
+            "cnt",
+        )
+    )
+
+
 TUMBLING_ORACLE = f"""
 SELECT strftime(time_bucket(INTERVAL 1 HOUR, ts), '{TS_FMT_DUCK}') AS window_start,
        event_type,
@@ -72,20 +108,7 @@ GROUP BY 1, 2
     ),
 )
 def time_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("cnt"),
-            (F.sum(fixed_point("value", 1_000_000)) / 1_000_000).alias("sum_value"),
-        )
-        .select(
-            F.date_format("w.start", TS_FMT_SPARK).alias("window_start"),
-            "event_type",
-            "cnt",
-            "sum_value",
-        )
-    )
+    return tumbling_transform(load_table(spark, sf_dir, "events"))
 
 
 # The sliding-window SET (every event in its two 1h/30m windows); the
@@ -113,16 +136,7 @@ WHERE ts >= ws AND ts < ws + INTERVAL 60 MINUTE"""
     ),
 )
 def time_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.date_format("w.start", TS_FMT_SPARK).alias("window_start"),
-            "event_type",
-            "cnt",
-        )
-    )
+    return sliding_transform(load_table(spark, sf_dir, "events"))
 
 
 # Gaps-and-islands session identification, shared with stream_session

@@ -70,7 +70,13 @@ _DUCK_PQ_TAIL = f"""pqsub AS (
   SELECT vec_id, m, list_slice(v, m * {SUB} + 1, m * {SUB} + {SUB}) AS sv
   FROM e CROSS JOIN unnest([{", ".join(str(m) for m in range(PQ_M))}]) AS mm(m)
 ),
-pqseeds AS (SELECT m, vec_id AS cid, sv AS c FROM pqsub WHERE vec_id < {PQ_K}),
+pqseeds AS (
+  SELECT s.m, r.cid, s.sv AS c
+  FROM pqsub s JOIN (
+    SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS cid
+    FROM (SELECT vec_id FROM e ORDER BY vec_id LIMIT {PQ_K})
+  ) r ON s.vec_id = r.vec_id
+),
 p1 AS (
   SELECT vec_id, m, sv, cid FROM (
     SELECT s.vec_id, s.m, s.sv, d.cid,
@@ -206,17 +212,19 @@ def _pq_assign_narrow(sub: DataFrame, rows) -> DataFrame:
 
 def _pq_update(sub: DataFrame) -> DataFrame:
     """(m, cid, vc): the codebook after one exact refinement, not yet
-    collected — the seed collect (the M×k subvectors of vec_id < PQ_K,
-    a parquet-pushed filter), the narrow literal-argmin assignment
+    collected — the seed collect (the M×k subvectors of the PQ_K
+    smallest vec_ids present, as _lloyd_seeds picks its seeds: every
+    vector has exactly PQ_M subvector rows, so one TakeOrderedAndProject
+    of PQ_K×PQ_M rows; a codeword's id is its seed's rank 0..PQ_K-1, so
+    it fits the tinyint codes whatever the vec_ids), the narrow
+    literal-argmin assignment
     against them, then the fixed-point per-(subspace, codeword) means
     (M×k×SUB partial-aggregated counters regardless of corpus size).
     _pq_trained collects it alone; similarity.build_ann_index collects
     it in one action with the Lloyd centroid update."""
-    seed_rows = (
-        sub.filter(F.col("vec_id") < PQ_K)
-        .select("m", F.col("vec_id").alias("cid"), F.col("sv").alias("vc"))
-        .collect()
-    )
+    seeds = sub.orderBy("vec_id", "m").limit(PQ_K * PQ_M).collect()
+    rank = {v: i for i, v in enumerate(sorted({r["vec_id"] for r in seeds}))}
+    seed_rows = [{"m": r["m"], "cid": rank[r["vec_id"]], "vc": r["sv"]} for r in seeds]
     return _fixed_point_means(_pq_assign_narrow(sub, seed_rows), ("m", "cid"), "sv")
 
 

@@ -1087,7 +1087,7 @@ def build_ann_index(
             "vec_id", "cid", F.expr(_pq_codes_expr(codec_rows, "v")).alias("codes")
         )
     else:
-        # no codebook (no vec_id < PQ_K): nothing to code against
+        # no codebook (no embeddings): nothing to code against
         index = base.select(
             "vec_id", "cid", F.lit(None).cast("array<tinyint>").alias("codes")
         ).where(F.lit(False))

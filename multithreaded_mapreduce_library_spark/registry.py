@@ -101,20 +101,24 @@ _PRIORITY = (
     #       within a round.
     # Capacity arithmetic (r23): the r22 gate run re-greened its
     # 6-changed + 9-r17-green + 35-r18-green prefix (CORRECTNESS_r22.json,
-    # 50/50), so the r23 prefix is 13 changed queries (bpe_train: its
+    # 50/50), so the r23 prefix is 15 changed queries (bpe_train: its
     # merge rounds moved to the driver, which rewrote its @register
     # doc; ivf_train_centroids, embedding_outliers, sim_topk_ivf_trained,
     # dedup_semantic, dedup_semantic_incremental, stream_dedup_semantic:
     # the Lloyd core's `narrow` flag was deleted from their call sites;
     # pq_train_codes, sim_topk_pq: their docs named the deleted window
-    # and grouped paths; stream_upsert, stream_incremental_agg: their
-    # batch-shuffle pin follows defaultParallelism instead of 16;
-    # sim_topk_ivf_quantized, sim_topk_ivfpq: both build their index
-    # through build_ann_index, which rewrote their bodies and docs)
-    # + the 9 displaced r18-greens (quarantine_malformed ..
-    # unpivot_measures) + the 28 oldest r19-greens. Changed-set cap this
-    # round: 39 (13 spent); forecast for r24: 35, for r25: 5
-    # (rotate_prefix.py --preview).
+    # and grouped paths, and their PQ oracle now seeds from the PQ_K
+    # smallest vec_ids present; stream_upsert, stream_incremental_agg:
+    # their batch-shuffle pin follows defaultParallelism instead of 16,
+    # and their bodies now call run_versioned; sim_topk_ivf_quantized,
+    # sim_topk_ivfpq: both build their index through build_ann_index,
+    # which rewrote their bodies and docs, and sim_topk_ivfpq shares the
+    # PQ seed change; time_tumbling, time_sliding: their bodies became
+    # tumbling_transform/sliding_transform over load_table, shared with
+    # the streaming twins) + the 9 displaced r18-greens
+    # (quarantine_malformed .. unpivot_measures) + the 26 oldest
+    # r19-greens. Changed-set cap this round: 39 (15 spent); forecast
+    # for r24: 34, for r25: 5 (rotate_prefix.py --preview).
     # The optimization-round regime (established r21): a gated query
     # whose builder text changes for PERFORMANCE (output-identical,
     # oracle-proven at sf0.01+sf0.1 before landing) takes a changed-set
@@ -125,31 +129,31 @@ _PRIORITY = (
     # inside the four-round staleness bound. No new operators. Pinned by
     # tests/test_registry_oracle.py::test_gate_prefix_bounds_staleness.
     # Do not pad with trivial variants.
-    # (1) new/changed in r23 (13):
+    # (1) new/changed in r23 (15):
     "bpe_train", "ivf_train_centroids", "embedding_outliers",
     "sim_topk_ivf_trained", "dedup_semantic", "dedup_semantic_incremental",
     "stream_dedup_semantic", "pq_train_codes", "sim_topk_pq", "stream_upsert",
     "stream_incremental_agg", "sim_topk_ivf_quantized", "sim_topk_ivfpq",
+    "time_tumbling", "time_sliding",
     # (2) last green in r18 (9):
     "quarantine_malformed", "repetition_ngram", "sample_hash",
     "scalar_subquery", "source_divergence", "stream_dedup_docs",
     "stream_dedup_minhash", "stream_lm_score", "unpivot_measures",
-    # (2) last green in r19 (28):
+    # (2) last green in r19 (26):
     "compact_apply", "compact_plan", "corr_stats", "correlated_subquery",
     "dist_moments", "event_funnel", "group_cube", "grouping_sets",
     "join_asof", "join_broadcast", "join_full", "join_large", "join_left",
     "join_range", "join_right", "join_semi", "join_shuffle_hash",
     "join_skew_salted", "join_theta", "lang_id", "map_in_arrow_project",
     "mmr_rerank", "mr_inverted_index", "multimodal_decode",
-    "multimodal_frame_sample", "quality_score", "sample_stratified",
-    "sequence_packing",
+    "multimodal_frame_sample", "quality_score",
     # --- end of gate prefix (50) ----------------------------------------
-    # rotated out, last green r19 (15):
-    "sessionize", "sim_lsh_buckets", "sim_near_dup", "sim_topk_bruteforce",
-    "stream_dedup", "stream_session", "stream_sliding_watermark",
-    "stream_stateful_running_max", "stream_static_join", "stream_stream_join",
-    "stream_tumbling", "time_tumbling", "token_stats", "udtf_tokenize",
-    "window_range_frame",
+    # rotated out, last green r19 (16):
+    "sample_stratified", "sequence_packing", "sessionize", "sim_lsh_buckets",
+    "sim_near_dup", "sim_topk_bruteforce", "stream_dedup", "stream_session",
+    "stream_sliding_watermark", "stream_stateful_running_max",
+    "stream_static_join", "stream_stream_join", "stream_tumbling",
+    "token_stats", "udtf_tokenize", "window_range_frame",
     # rotated out, last green r20 (45):
     "agg_argmax", "anomaly_mad", "audio_frame_features",
     "customer_distribution", "dedup_substring", "embedding_quantize",
@@ -178,7 +182,7 @@ _PRIORITY = (
     "setop_union", "sim_topk_ivf", "sim_topk_multiprobe", "small_qty_revenue",
     "split_contamination_gate", "sql_interface", "stream_transitions",
     "tf_idf", "waiting_orders",
-    # rotated out, last green r22 (45):
+    # rotated out, last green r22 (44):
     "agg_stats", "bm25_search", "calendar_fill", "case_when",
     "cogroup_reconcile", "conditional_agg", "contamination_check",
     "corpus_curation", "count_distinct", "dataset_split", "dedup_clusters",
@@ -189,10 +193,10 @@ _PRIORITY = (
     "hybrid_retrieval", "incremental_agg", "join_anti", "join_asof_window",
     "lateral_posexplode", "merge_upsert", "multi_count_distinct",
     "multimodal_features", "multimodal_metadata", "multimodal_resize",
-    "orderby_limit", "pii_redact", "profile_table", "time_sliding",
-    "top_supplier", "variant_extract", "volume_shipping",
-    "window_distribution", "window_first_last", "window_moving_avg",
-    "window_topk_per_group", "wordcount",
+    "orderby_limit", "pii_redact", "profile_table", "top_supplier",
+    "variant_extract", "volume_shipping", "window_distribution",
+    "window_first_last", "window_moving_avg", "window_topk_per_group",
+    "wordcount",
 )
 
 

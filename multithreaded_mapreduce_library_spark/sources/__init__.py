@@ -11,4 +11,5 @@ from multithreaded_mapreduce_library_spark.sources.tables import (  # noqa: F401
     rebalance_scan,
     register_views,
     table_path,
+    table_stream,
 )

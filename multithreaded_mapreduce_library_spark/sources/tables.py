@@ -26,12 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimensions that are broadcast-sized at every scale factor (≪ the 64MB
-# autoBroadcastJoinThreshold even at 100 TB-scale fact tables — they scale
-# sub-linearly in TPC-H-style schemas).
-BROADCAST_DIMS = ("region", "nation", "supplier")
-
-
 def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -42,17 +36,62 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The one parquet read of a fixture table, as stored: the batch
+    loader and the stream's schema both come from here."""
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_events_ts(spark.read.parquet(table_path(sf_dir, name)))
     return spark.read.parquet(table_path(sf_dir, name))
+
+
+def _normalize(name: str, df: DataFrame) -> DataFrame:
+    """Per-table column normalization, shared by batch and stream."""
+    return normalize_events_ts(df) if name == "events" else df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return _normalize(name, _read_raw(spark, sf_dir, name))
+
+
+def table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-source stream over one fixture table, normalized like
+    ``load_table``. The schema is pinned from the raw read, so the stream
+    sees the stored columns and gets the same normalization as the batch.
+
+    HARD single-file guard: the update-mode streaming oracles ("one final
+    row per key") and the no-late-drop assumption behind the sliding/
+    session/dedup oracles depend on the source replaying as exactly ONE
+    data batch, which holds only for a single parquet FILE (file sources
+    never split one file across triggers). A fixture-layout change to a
+    part-file DIRECTORY fails here with one clear message, not as a run of
+    driver hash mismatches. Multi-batch replays are a deliberate act: the
+    test suite drives the streaming ``*_transform`` functions over a split
+    directory with maxFilesPerTrigger=1.
+    """
+    path = table_path(sf_dir, name)
+    if not os.path.isfile(path):
+        kind = "a directory" if os.path.isdir(path) else "missing"
+        raise AssertionError(
+            f"{name} source {path} is {kind}, not a single parquet file — "
+            "the single-data-batch replay assumption behind the streaming "
+            "oracles is void; fix the fixture layout or drive the transform "
+            "over a split directory for multi-batch semantics"
+        )
+    schema = _read_raw(spark, sf_dir, name).schema
+    # The file source requires a directory; stream the sf dir filtered to
+    # the table's file (real deployments point at an arriving-files dir).
+    stream = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", f"{name}.parquet")
+        .parquet(sf_dir)
+    )
+    return _normalize(name, stream)
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
     """Normalize events.ts to session-tz TIMESTAMP from either physical
-    layout the fixture generator has shipped — the ONE place both the
-    batch loader and the streaming source get this logic from.
+    layout the fixture generator has shipped — batch and stream both get
+    it through ``_normalize``.
 
     Layouts seen so far: INT64 TIMESTAMP(NANOS), which Spark's parquet
     reader rejects by default (read nanos as long via the nanosAsLong

@@ -15,16 +15,17 @@ windows/sessions settle to the batch set cut at the final watermark
 tests/test_streaming.py::test_watermark_boundary_is_inclusive_and_ms_truncated);
 update-mode stateful ops (running max, funnel) settle to one final row
 per key because the single-file fixture replays as ONE data batch —
-``events_stream`` hard-asserts that layout so a fixture change fails with
-one clear message instead of eight hash mismatches. The batch-twin
-exactness tests in tests/test_streaming.py remain as a second,
+``sources.table_stream`` hard-asserts that layout so a fixture change
+fails with one clear message instead of a run of hash mismatches. The
+batch-twin exactness tests in tests/test_streaming.py remain as a second,
 oracle-independent anchor, and its multi-batch replay suite drives the
 extracted ``*_transform`` functions over a time-split multi-file source
 (maxFilesPerTrigger=1) to verify REAL cross-batch state transitions.
 
 Batch twins with full DuckDB oracles live in ``operators/events.py``
 (time_tumbling / time_sliding / sessionize / event_funnel /
-dedup_keep_first).
+dedup_keep_first); the tumbling and sliding twins run the same
+``tumbling_transform`` / ``sliding_transform`` defined there.
 
 Scale notes: watermarks bound state (late data beyond the delay is
 dropped); tumbling/sliding aggs shuffle on (window, key); session windows
@@ -33,6 +34,7 @@ shuffle on the session key; dedup state is per-key and watermark-expired.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,9 +46,11 @@ from multithreaded_mapreduce_library_spark.operators.events import (
     SESSION_ISLANDS_CTES,
     SLIDING_CORE,
     TUMBLING_ORACLE,
+    sliding_transform,
+    tumbling_transform,
 )
 from multithreaded_mapreduce_library_spark.registry import register
-from multithreaded_mapreduce_library_spark.sources import table_path
+from multithreaded_mapreduce_library_spark.sources import table_stream
 
 _sink_ids = itertools.count()
 
@@ -55,69 +59,43 @@ TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (schema pinned from the
-    batch reader; ts is normalized to session-tz TIMESTAMP by the SAME
-    helper the batch loader uses — sources.tables.normalize_events_ts —
-    so the two readers cannot drift across fixture layouts)."""
-    import os
-
-    from multithreaded_mapreduce_library_spark.sources.tables import normalize_events_ts
-
-    events_file = table_path(sf_dir, "events")
-    # HARD single-file guard: the update-mode oracles
-    # (stream_stateful_running_max, stream_funnel — "one final row per
-    # key") and the no-late-drop assumption behind the sliding/session/
-    # dedup oracles all depend on the events source replaying as exactly
-    # ONE data batch, which holds only for a single parquet FILE (file
-    # sources never split one file across triggers). A fixture-layout
-    # change to a part-file DIRECTORY must fail here with one clear
-    # message, not as eight confusing driver hash mismatches. Multi-batch
-    # replays are a deliberate act: see tests/test_streaming.py's
-    # multi-batch suite, which drives the *_transform functions below
-    # over a time-split directory with maxFilesPerTrigger=1.
-    if not os.path.isfile(events_file):
-        kind = "a directory" if os.path.isdir(events_file) else "missing"
-        raise AssertionError(
-            f"events source {events_file} is {kind}, not a single parquet "
-            "file — the streaming oracles' single-data-batch replay "
-            "assumption is void; fix the fixture layout or drive the "
-            "*_transform functions explicitly for multi-batch semantics"
-        )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch = spark.read.parquet(events_file)
-    # The file source requires a directory; stream the sf dir filtered to
-    # the events file (real deployments point at an arriving-files dir).
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return normalize_events_ts(stream)
+    """The events table as a single-file stream (``table_stream``)."""
+    return table_stream(spark, sf_dir, "events")
 
 
-def run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
-    """Execute a streaming DataFrame to completion (availableNow) into a
-    memory sink and return the settled result as a batch DataFrame.
+@contextlib.contextmanager
+def _one_store_per_slot(spark: SparkSession):
+    """Pin state parallelism (``spark.sql.shuffle.partitions``) to
+    ``defaultParallelism`` for the block, restoring the session's own
+    value afterwards, also when the block fails.
 
     A stateful operator gets one HDFS-backed state store per shuffle
     partition, and every store costs a fixed load + commit + snapshot per
     micro-batch whatever rows it holds. A 200-partition session would pay
     that ~200 times per stateful op for a single-file replay (6-11s of pure
     overhead at sf0.1), and any count above the task slots only queues more
-    fixed-cost tasks behind the slots without adding parallelism. So the run
-    pins state parallelism to ``defaultParallelism``: one store per task
-    slot. On 4 cores, stream_tumbling's run took a median 1.33 s with 16
-    stores, 0.87 s with 4 and 0.76 s with 1, with identical rows (PERF.md,
-    "Fixed per-task cost"). The session's own value is restored afterwards,
-    also when the stream fails.
+    fixed-cost tasks behind the slots without adding parallelism. On 4
+    cores, stream_tumbling's run took a median 1.33 s with 16 stores,
+    0.87 s with 4 and 0.76 s with 1, with identical rows (PERF.md, "Fixed
+    per-task cost").
     """
-    spark = stream_df.sparkSession
-    name = f"stream_sink_{next(_sink_ids)}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
         "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
     )
     try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
+    """Execute a streaming DataFrame to completion (availableNow) into a
+    memory sink, one state store per task slot (``_one_store_per_slot``),
+    and return the settled result as a batch DataFrame."""
+    spark = stream_df.sparkSession
+    name = f"stream_sink_{next(_sink_ids)}"
+    with _one_store_per_slot(spark):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -126,27 +104,7 @@ def run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
-
-
-def tumbling_transform(s: DataFrame) -> DataFrame:
-    """The tumbling-window aggregation, factored out so the multi-batch
-    replay test drives the IDENTICAL logic over a time-split source."""
-    return (
-        s.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("cnt"),
-            (F.sum(fixed_point("value", 1_000_000)) / 1_000_000).alias("sum_value"),
-        )
-        .select(
-            F.date_format("w.start", TS_FMT_SPARK).alias("window_start"),
-            "event_type",
-            "cnt",
-            "sum_value",
-        )
-    )
 
 
 @register(
@@ -165,20 +123,6 @@ def tumbling_transform(s: DataFrame) -> DataFrame:
 )
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(tumbling_transform(events_stream(spark, sf_dir)), "complete")
-
-
-def sliding_transform(s: DataFrame) -> DataFrame:
-    """Sliding windows + 2h watermark (shared with the multi-batch test)."""
-    return (
-        s.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.date_format("w.start", TS_FMT_SPARK).alias("window_start"),
-            "event_type",
-            "cnt",
-        )
-    )
 
 
 @register(
@@ -784,30 +728,6 @@ def stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Single-file parquet stream over any fixture table — the same layout
-    guard and schema pinning as events_stream (one file == one availableNow
-    data batch; multi-batch replays are a deliberate act in the test suite
-    via a split directory + maxFilesPerTrigger=1)."""
-    import os
-
-    path = table_path(sf_dir, name)
-    if not os.path.isfile(path):
-        kind = "a directory" if os.path.isdir(path) else "missing"
-        raise AssertionError(
-            f"{name} source {path} is {kind}, not a single parquet file — "
-            "the single-data-batch replay assumption behind the streaming "
-            "oracle is void; fix the fixture layout or drive the transform "
-            "over a split directory for multi-batch semantics"
-        )
-    batch = spark.read.parquet(path)
-    return (
-        spark.readStream.schema(batch.schema)
-        .option("pathGlobFilter", f"{name}.parquet")
-        .parquet(sf_dir)
-    )
-
-
 def versioned_sink(target_root: str, apply_fn):
     """foreachBatch applier over a versioned copy-on-write target — the
     shared exactly-once commit chain under upsert_sink (keyed MERGE) and
@@ -835,15 +755,7 @@ def versioned_sink(target_root: str, apply_fn):
         out = os.path.join(target_root, f"v{epoch_id + 1}")
         if os.path.exists(os.path.join(out, "_SUCCESS")):
             return  # retried epoch already committed — exactly-once
-        committed = [
-            int(d[1:])
-            for d in os.listdir(target_root)
-            if d.startswith("v")
-            and d[1:].isdigit()
-            and int(d[1:]) <= epoch_id
-            and os.path.exists(os.path.join(target_root, d, "_SUCCESS"))
-        ]
-        prev = os.path.join(target_root, f"v{max(committed)}")
+        prev = latest_upsert_version(target_root, upto=epoch_id)
         prev_df = batch_df.sparkSession.read.parquet(prev)
         apply_fn(prev_df, batch_df).write.mode("overwrite").parquet(out)
 
@@ -870,7 +782,9 @@ def upsert_sink(target_root: str):
     return versioned_sink(target_root, apply)
 
 
-def latest_upsert_version(target_root: str) -> str:
+def latest_upsert_version(target_root: str, upto: int | None = None) -> str:
+    """Path of the newest committed version ``v{N}`` (``_SUCCESS``
+    present), optionally limited to ``N <= upto``."""
     import os
 
     committed = [
@@ -878,9 +792,47 @@ def latest_upsert_version(target_root: str) -> str:
         for d in os.listdir(target_root)
         if d.startswith("v")
         and d[1:].isdigit()
+        and (upto is None or int(d[1:]) <= upto)
         and os.path.exists(os.path.join(target_root, d, "_SUCCESS"))
     ]
     return os.path.join(target_root, f"v{max(committed)}")
+
+
+def run_versioned(feed: DataFrame, v0: DataFrame, sink, settle) -> DataFrame:
+    """Replay ``feed`` (availableNow) through a versioned foreachBatch
+    sink and return the settled result as a local DataFrame.
+
+    ``v0`` is written as the chain's first committed version, ``sink``
+    maps the version root to the foreachBatch applier (``upsert_sink``,
+    ``mv_sink``), and ``settle`` maps the newest committed version to the
+    answer. The run holds one state store per task slot
+    (``_one_store_per_slot``); the answer is collected, so the temp dir
+    holding the versions and the checkpoint is removed before returning,
+    also when the run fails.
+    """
+    import os
+    import shutil
+    import tempfile
+
+    spark = feed.sparkSession
+    tmp = tempfile.mkdtemp(prefix="stream_versioned_")
+    try:
+        with _one_store_per_slot(spark):
+            troot = os.path.join(tmp, "versions")
+            os.makedirs(troot)
+            v0.write.parquet(os.path.join(troot, "v0"))
+            q = (
+                feed.writeStream.foreachBatch(sink(troot))
+                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            settled = settle(spark.read.parquet(latest_upsert_version(troot)))
+            rows = settled.collect()
+        return spark.createDataFrame(rows, settled.schema)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 from multithreaded_mapreduce_library_spark.operators.maintenance import (  # noqa: E402
@@ -921,43 +873,20 @@ from multithreaded_mapreduce_library_spark.operators.maintenance import (  # noq
     ),
 )
 def stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from multithreaded_mapreduce_library_spark.operators.maintenance import (
         merge_feed,
         merge_result_agg,
         merge_target,
     )
 
-    tmp = tempfile.mkdtemp(prefix="stream_upsert_")
-    prev_conf = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
-    try:
-        troot = os.path.join(tmp, "versions")
-        os.makedirs(troot)
-        merge_target(spark, sf_dir).select(
-            F.col("k").alias("o_orderkey"),
-            F.col("status").alias("o_orderstatus"),
-            F.col("price").alias("o_totalprice"),
-        ).write.parquet(os.path.join(troot, "v0"))
-        feed = merge_feed(table_stream(spark, sf_dir, "orders"))
-        q = (
-            feed.writeStream.foreachBatch(upsert_sink(troot))
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        agg = merge_result_agg(spark.read.parquet(latest_upsert_version(troot)))
-        rows = agg.collect()  # 3 status groups — O(groups), not a data path
-        return spark.createDataFrame(rows, agg.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
+    v0 = merge_target(spark, sf_dir).select(
+        F.col("k").alias("o_orderkey"),
+        F.col("status").alias("o_orderstatus"),
+        F.col("price").alias("o_totalprice"),
+    )
+    feed = merge_feed(table_stream(spark, sf_dir, "orders"))
+    # settles to 3 status groups — O(groups), not a data path
+    return run_versioned(feed, v0, upsert_sink, merge_result_agg)
 
 
 def dedup_docs_transform(s: DataFrame) -> DataFrame:
@@ -1099,42 +1028,17 @@ def _register_stream_incremental_agg():
         ),
     )
     def stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-        import shutil
-        import tempfile
-
         from multithreaded_mapreduce_library_spark.operators.maintenance import (
             finalize_agg_state,
         )
 
-        tmp = tempfile.mkdtemp(prefix="stream_mv_")
-        prev_conf = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        # v0: the empty state table (schema-complete, zero rows)
+        v0 = spark.createDataFrame(
+            [], "custkey long, cnt long, sum_c long, mx double, mn_d string"
         )
-        try:
-            troot = os.path.join(tmp, "versions")
-            os.makedirs(troot)
-            # v0: the empty state table (schema-complete, zero rows)
-            spark.createDataFrame(
-                [], "custkey long, cnt long, sum_c long, mx double, mn_d string"
-            ).write.parquet(os.path.join(troot, "v0"))
-            feed = table_stream(spark, sf_dir, "orders")
-            q = (
-                feed.writeStream.foreachBatch(mv_sink(troot))
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            final = finalize_agg_state(
-                spark.read.parquet(latest_upsert_version(troot))
-            )
-            rows = final.collect()  # one row per customer state — the MV itself
-            return spark.createDataFrame(rows, final.schema)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
-            shutil.rmtree(tmp, ignore_errors=True)
+        feed = table_stream(spark, sf_dir, "orders")
+        # settles to one row per customer state — the MV itself
+        return run_versioned(feed, v0, mv_sink, finalize_agg_state)
 
 
 _register_stream_incremental_agg()

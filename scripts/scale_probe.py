@@ -150,8 +150,8 @@ PROBE = (
     # density on offset copies) and cells grow Nx, so shortlist work is
     # ~N^2/k over tinyint codes with a constant-size exact rerank per
     # query; reported against the cell-local bound, not flat Nx. Copy 0
-    # keeps original vec_ids, so Lloyd seeds (8 smallest present) and
-    # the PQ codebook (vec_id < PQ_K, by-design filter) stay well-formed.
+    # keeps original vec_ids, so the Lloyd and PQ seeds (the 8 smallest
+    # vec_ids present) stay those of the original fixture.
     "dedup_semantic",
     "sim_topk_ivf_quantized",
     "sim_topk_ivfpq",

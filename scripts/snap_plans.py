@@ -4,6 +4,8 @@ Usage: python scripts/snap_plans.py <round> <tag> [query ...]
 e.g. ``python scripts/snap_plans.py r22 before sim_topk_pq``. Defaults to
 the bench HEADLINE set. Output: plans/<round>/<query>_<tag>.txt (the
 optimization-round evidence files that plan claims are checked against).
+An existing target file is never overwritten: the script exits, naming the
+files, before it starts a session.
 Eager-build Lloyd queries run their training jobs at build time; that is
 fine here — we want the serving plan text. SPARK_GRAFT_SF_DIR picks the
 fixture (``sources.default_sf_dir``).
@@ -32,17 +34,24 @@ def main(argv: list[str]) -> None:
         sys.exit(USAGE)
     round_name, tag = argv[0], argv[1]
     names = argv[2:] or list(HEADLINE)
-    sf_dir = default_sf_dir()
     out_dir = os.path.join(REPO, "plans", round_name)
+    paths = {name: os.path.join(out_dir, f"{name}_{tag}.txt") for name in names}
+    existing = [p for p in paths.values() if os.path.exists(p)]
+    if existing:
+        sys.exit(
+            "refusing to overwrite committed plan evidence: "
+            + ", ".join(existing)
+            + " (pick a new tag or remove the files)"
+        )
     os.makedirs(out_dir, exist_ok=True)
+    sf_dir = default_sf_dir()
     spark = get_spark(app_name=f"snap_plans_{round_name}_{tag}")
     specs = load_all()
-    for name in names:
+    for name, path in paths.items():
         df = specs[name].builder(spark, sf_dir)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(buf.getvalue())
         print(f"wrote {path} ({len(buf.getvalue())} bytes)")

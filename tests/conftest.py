@@ -39,22 +39,21 @@ def sf_dir() -> str:
     return SMOKE_SF
 
 
-@pytest.fixture(scope="session")
-def tied_sf_dir(sf_dir, tmp_path_factory) -> str:
-    """``sf_dir`` with vec_id 1's embedding replaced by vec_id 0's. Both
-    are seeds of the Lloyd and PQ trainers, so every vector nearest to
-    seed 0 is exactly as near to seed 1: only the (d2, cid) tiebreak
-    decides the first assignment pass. Other tables are symlinked."""
+def write_tied_fixture(src: str, out: str) -> str:
+    """Copy the fixture in ``src`` to ``out`` with vec_id 1's embedding
+    replaced by vec_id 0's. Both are seeds of the Lloyd and PQ trainers,
+    so every vector nearest to seed 0 is exactly as near to seed 1: only
+    the (d2, cid) tiebreak decides the first assignment pass. Other
+    tables are symlinked."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from multithreaded_mapreduce_library_spark.sources.tables import TABLES, table_path
 
-    out = str(tmp_path_factory.mktemp("tied_sf"))
     for t in TABLES:
         if t != "embeddings":
-            os.symlink(table_path(sf_dir, t), table_path(out, t))
-    emb = pq.read_table(table_path(sf_dir, "embeddings"))
+            os.symlink(table_path(src, t), table_path(out, t))
+    emb = pq.read_table(table_path(src, "embeddings"))
     ids = emb.column("vec_id").to_pylist()
     vecs = emb.column("embedding").to_pylist()
     vecs[ids.index(1)] = vecs[ids.index(0)]
@@ -64,3 +63,9 @@ def tied_sf_dir(sf_dir, tmp_path_factory) -> str:
     )
     pq.write_table(emb, table_path(out, "embeddings"))
     return out
+
+
+@pytest.fixture(scope="session")
+def tied_sf_dir(sf_dir, tmp_path_factory) -> str:
+    """``sf_dir`` with two seed vectors tied (``write_tied_fixture``)."""
+    return write_tied_fixture(sf_dir, str(tmp_path_factory.mktemp("tied_sf")))

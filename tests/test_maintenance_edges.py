@@ -602,10 +602,11 @@ def test_lloyd_seeds_agree_on_nondense_fixture(spark, tmp_path):
     Spark via orderBy/limit, the oracle via `ORDER BY vec_id LIMIT K` in
     _DUCK_LLOYD_CTES — so on a deliberately non-dense fixture (ids
     1000..1031, where the old `WHERE vec_id < K` filter collapsed the
-    oracle to zero rows) the full differential must AGREE, for ALL FIVE
-    oracles built on the shared CTE chain (each reads only the
-    embeddings table). This is the direct evidence that the dense-from-0
-    fixture shape is documentation, not a correctness precondition."""
+    oracle to zero rows) the full differential must AGREE, for the
+    oracles built on the shared Lloyd and PQ CTE chains (each reads only
+    the embeddings table; the PQ seeds follow the same rule). This is the
+    direct evidence that the dense-from-0 fixture shape is documentation,
+    not a correctness precondition."""
     from multithreaded_mapreduce_library_spark.operators.similarity import DIM
 
     _write_embeddings(tmp_path, list(range(1000, 1032)), DIM)
@@ -619,20 +620,17 @@ def test_lloyd_seeds_agree_on_nondense_fixture(spark, tmp_path):
         "sim_topk_ivf_trained",
         "sim_topk_ivf_quantized",
         "dedup_semantic",
+        "pq_train_codes",
+        "sim_topk_pq",
+        "sim_topk_ivfpq",
     ):
         got = _spark_rows(spark, name, tmp_path)
         want = _duck_rows(SPECS[name].oracle, str(tmp_path), ["embeddings"])
         assert got, f"{name}: empty result on the non-dense fixture"
         assert got == want, f"{name}: engines disagree on non-dense ids"
-    # sim_topk_ivfpq additionally trains a PQ codebook whose seed rule is
-    # vec_id < PQ_K on BOTH engines by construction (pq.py pqseeds — an
-    # intentional filter, not a divergence; see the staging doc), so an
-    # all-ids>=1000 fixture degenerates it to an empty-vs-empty
-    # agreement. Exercise it on a GAPPED fixture instead: {0..3} keeps
-    # the PQ codebook non-empty while the gap means the 8 smallest
-    # present vec_ids ({0..3, 1000..1003}) differ from the old
-    # `vec_id < 8` seed set ({0..3}) — pre-alignment this mismatched,
-    # post-alignment both engines pick the same seeds.
+    # A GAPPED fixture too: the 8 smallest present vec_ids
+    # ({0..3, 1000..1003}) differ from a `vec_id < 8` seed set ({0..3}),
+    # so a filter on either engine would disagree with a LIMIT on the other.
     gapped = tmp_path / "gapped"
     gapped.mkdir()
     _write_embeddings(gapped, [0, 1, 2, 3, *range(1000, 1028)], DIM)

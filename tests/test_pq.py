@@ -34,6 +34,7 @@ def test_pq_refinement_improves_residual(spark, sf_dir):
     twin of test_lloyd_inertia_monotone)."""
     from multithreaded_mapreduce_library_spark.operators.pq import (
         PQ_K,
+        PQ_M,
         _FX,
         _pq_assign_narrow,
         _pq_sub,
@@ -41,7 +42,7 @@ def test_pq_refinement_improves_residual(spark, sf_dir):
     )
 
     sub = _pq_sub(spark, sf_dir)
-    seeds = sub.filter(F.col("vec_id") < PQ_K).select(
+    seeds = sub.orderBy("vec_id", "m").limit(PQ_K * PQ_M).select(
         "m", F.col("vec_id").alias("cid"), F.col("sv").alias("vc")
     )
     a1 = _pq_assign_narrow(sub, seeds.collect())

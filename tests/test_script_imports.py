@@ -46,3 +46,25 @@ def test_script_imports_resolve():
                 missing.append(where)
     assert checked, "no package or bench imports found — the parser is broken"
     assert not missing, "stranded imports:\n" + "\n".join(missing)
+
+
+def test_snap_plans_refuses_to_overwrite(monkeypatch, tmp_path):
+    """snap_plans checks every target before starting a session: with one
+    target already present it exits naming that file, leaves it unchanged
+    and never reaches get_spark, so no Spark job runs."""
+    import pytest
+
+    from scripts import snap_plans
+
+    monkeypatch.setattr(snap_plans, "REPO", str(tmp_path))
+    sessions = []
+    monkeypatch.setattr(snap_plans, "get_spark", lambda **kw: sessions.append(kw))
+    kept = tmp_path / "plans" / "r99" / "pricing_summary_before.txt"
+    kept.parent.mkdir(parents=True)
+    kept.write_text("committed evidence\n")
+
+    with pytest.raises(SystemExit, match="pricing_summary_before.txt"):
+        snap_plans.main(["r99", "before", "wordcount", "pricing_summary"])
+    assert kept.read_text() == "committed evidence\n"
+    assert sorted(os.listdir(kept.parent)) == ["pricing_summary_before.txt"]
+    assert not sessions

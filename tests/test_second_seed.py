@@ -64,18 +64,20 @@ def test_query_matches_oracle_on_second_seed(spark, seed7_dir, name):
     compare_query(spark, SPECS[name], seed7_dir)
 
 
-def test_lloyd_narrow_assign_agrees_on_second_seed(spark, seed7_dir):
+def test_lloyd_narrow_assign_agrees_on_second_seed(spark, seed7_dir, tmp_path):
     """r15 verdict item 5: the narrow/window bit-identity agreement pin
     (tests/test_plans.py::test_lloyd_narrow_assign_agrees_with_window)
     previously ran only on the checked-in seed-42 fixture; re-running the
-    identical assertion body on the sweep fixture closes the last
-    fixture-coupling corner of the narrow-assign migration — a literal
-    argmin subtly calibrated to one embedding distribution would diverge
-    here. The plan-shape pins (zero-exchange, no-window) are
-    data-independent and stay in test_plans.py."""
+    identical assertion body on the sweep fixture and on its tied copy
+    closes the last fixture-coupling corner of the narrow-assign
+    migration — a literal argmin subtly calibrated to one embedding
+    distribution would diverge here. The plan-shape pins (zero-exchange,
+    no-window) are data-independent and stay in test_plans.py."""
+    from tests.conftest import write_tied_fixture
     from tests.test_plans import test_lloyd_narrow_assign_agrees_with_window
 
-    test_lloyd_narrow_assign_agrees_with_window(spark, seed7_dir)
+    tied = write_tied_fixture(seed7_dir, str(tmp_path))
+    test_lloyd_narrow_assign_agrees_with_window(spark, seed7_dir, tied)
 
 
 def test_second_seed_vec_ids_dense_from_zero(seed7_dir):

@@ -698,10 +698,12 @@ def test_multibatch_complete_modes_settle_to_batch(spark, sf_dir, events_multi_d
     """Complete-mode aggs re-emit the full settled set each batch — after
     the last batch the sink holds exactly the single-batch answer, state
     having transitioned through N partial views on the way."""
+    from multithreaded_mapreduce_library_spark.operators.events import (
+        tumbling_transform,
+    )
     from multithreaded_mapreduce_library_spark.sources import load_table
     from multithreaded_mapreduce_library_spark.streaming.queries import (
         static_join_transform,
-        tumbling_transform,
     )
 
     got, n_batches = _run_multi(
@@ -727,10 +729,12 @@ def test_multibatch_append_modes_settle_to_batch(spark, sf_dir, events_multi_dir
     time-ordered, every intermediate watermark only finalizes windows no
     later event can touch, so the union of per-batch emissions equals the
     single-batch settled set — nothing extra, nothing dropped."""
+    from multithreaded_mapreduce_library_spark.operators.events import (
+        sliding_transform,
+    )
     from multithreaded_mapreduce_library_spark.streaming.queries import (
         dedup_transform,
         session_transform,
-        sliding_transform,
     )
 
     for transform, gated in (
@@ -812,19 +816,39 @@ def test_multibatch_stream_stream_join(spark, sf_dir, events_multi_dir):
     assert _rows(got) == _rows(SPECS["stream_stream_join"].builder(spark, sf_dir))
 
 
-def test_events_stream_rejects_multi_file_layout(spark, events_multi_dir, tmp_path):
-    """The single-file guard in events_stream: a part-file DIRECTORY at
-    events.parquet must fail fast with the layout message, not surface as
-    eight oracle hash mismatches."""
-    import shutil
+@_pytest.mark.parametrize("name", ["events", "documents"])
+def test_events_stream_rejects_multi_file_layout(spark, sf_dir, tmp_path, name):
+    """The single-file guard every file-source stream shares
+    (sources.table_stream, under events_stream too): a part-file
+    DIRECTORY at <name>.parquet must fail fast with the layout message,
+    not surface as a run of oracle hash mismatches."""
+    import pyarrow.parquet as pq
 
-    from multithreaded_mapreduce_library_spark.streaming.queries import events_stream
+    from multithreaded_mapreduce_library_spark.sources import table_stream
 
-    bad_sf = tmp_path / "bad_sf"
-    bad_sf.mkdir()
-    shutil.copytree(events_multi_dir, str(bad_sf / "events.parquet"))
+    t = pq.read_table(_os.path.join(sf_dir, f"{name}.parquet"))
+    parts = tmp_path / "bad_sf" / f"{name}.parquet"
+    parts.mkdir(parents=True)
+    half = t.num_rows // 2
+    pq.write_table(t.slice(0, half), str(parts / "part-00.parquet"))
+    pq.write_table(t.slice(half), str(parts / "part-01.parquet"))
     with _pytest.raises(AssertionError, match="single parquet"):
-        events_stream(spark, str(bad_sf))
+        table_stream(spark, str(tmp_path / "bad_sf"), name)
+
+
+def test_table_stream_schema_matches_load_table(spark, sf_dir):
+    """Stream and batch read one table through one reader: the events
+    stream exposes load_table's schema, with ts normalized to TIMESTAMP
+    (the stored column is nanos or timestamp_ntz)."""
+    from pyspark.sql.types import TimestampType
+
+    from multithreaded_mapreduce_library_spark.sources import load_table, table_stream
+
+    stream = table_stream(spark, sf_dir, "events")
+    batch = load_table(spark, sf_dir, "events")
+    assert stream.isStreaming and not batch.isStreaming
+    assert stream.schema == batch.schema
+    assert isinstance(stream.schema["ts"].dataType, TimestampType)
 
 
 def test_multibatch_funnel_event_time_disorder(spark, tmp_path):
@@ -2060,18 +2084,35 @@ def test_run_to_memory_one_state_store_per_task_slot(spark, sf_dir, monkeypatch)
     assert {op.numShufflePartitions for op in ops} == {slots}
 
 
-def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir):
-    """The session's spark.sql.shuffle.partitions survives run_to_memory,
-    after a clean run and after a stream that fails mid-batch."""
+def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir, tmp_path, monkeypatch):
+    """The session's spark.sql.shuffle.partitions survives run_to_memory
+    and run_versioned, after a clean run and after a stream that fails
+    mid-batch; run_versioned leaves no temp dir behind either way."""
+    import tempfile
+
     import pytest
     from pyspark.sql import functions as F
 
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        events_stream,
-        run_to_memory,
+    from multithreaded_mapreduce_library_spark.operators.events import (
         tumbling_transform,
     )
+    from multithreaded_mapreduce_library_spark.operators.maintenance import (
+        finalize_agg_state,
+    )
+    from multithreaded_mapreduce_library_spark.sources import table_stream
+    from multithreaded_mapreduce_library_spark.streaming.queries import (
+        events_stream,
+        mv_sink,
+        run_to_memory,
+        run_versioned,
+    )
 
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    v0 = spark.createDataFrame(
+        [], "custkey long, cnt long, sum_c long, mx double, mn_d string"
+    )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "3")
     try:
@@ -2083,5 +2124,15 @@ def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir):
         with pytest.raises(Exception, match="boom"):
             run_to_memory(failing, "complete")
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+
+        feed = table_stream(spark, sf_dir, "orders")
+        assert run_versioned(feed, v0, mv_sink, finalize_agg_state).count() > 0
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert not list(scratch.iterdir())
+        failing = feed.withColumn("o_custkey", F.raise_error(F.lit("boom")))
+        with pytest.raises(Exception, match="boom"):
+            run_versioned(failing, v0, mv_sink, finalize_agg_state)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert not list(scratch.iterdir())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
