@@ -3,9 +3,16 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Queries are forced end-to-end with the noop sink (full computation, no
-driver-side collect). One tiny warmup job amortizes JVM/codegen startup so
-the numbers reflect steady-state operator cost.
+    python bench.py            # the 16 headline queries + ann_serving
+    python bench.py NAME...    # just the named queries, no ann_serving
+
+Each query is timed by ``best_of``: its clock starts BEFORE the builder,
+so build-time Spark jobs, parquet schema reads and plan analysis are
+counted, then the result is forced end-to-end with the noop sink (full
+computation, no driver-side collect). ``warm_up`` runs two tiny queries
+first to take JVM/codegen startup out of the timings. scripts/
+scale_probe.py and scripts/bench_reference.py time through the same two
+functions.
 """
 
 from __future__ import annotations
@@ -15,6 +22,9 @@ import os
 import re
 import sys
 import time
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -45,10 +55,25 @@ HEADLINE = (
 )
 
 
-# Queries whose BUILDER performs Spark actions (the r15 narrow-assign
-# Lloyd family trains eagerly at plan-build time): their clock starts
-# before the builder so the training jobs are inside the timed region.
-EAGER_BUILD = frozenset({"sim_topk_ivf_quantized"})
+def warm_up(spark, specs, sf_dir: str) -> None:
+    """Touch the JVM, codegen and the parquet reader on the fact table once
+    (fixture files have a single row group, so scans are single-task)
+    so the first timed query does not carry first-touch JIT cost."""
+    for name in ("agg_stats", "filter_project"):
+        specs[name].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+
+def best_of(build: Callable[[], DataFrame], iters: int) -> float:
+    """Best wall seconds over ``iters`` runs of ``build()`` plus a noop
+    write of its result. The clock starts before ``build``: builders run
+    Spark jobs at build time (schema reads, training, star contraction),
+    and a caller of the query waits for them too."""
+    best = float("inf")
+    for _ in range(iters):
+        t0 = time.perf_counter()
+        build().write.format("noop").mode("overwrite").save()
+        best = min(best, time.perf_counter() - t0)
+    return best
 
 
 def bench_ann_serving(spark, sf_dir: str, iters: int) -> dict[str, float]:
@@ -86,17 +111,15 @@ def bench_ann_serving(spark, sf_dir: str, iters: int) -> dict[str, float]:
             index.write.mode("overwrite").parquet(tmp)
             out[prefix + "index_build"] = round(time.perf_counter() - t0, 3)
             idx = spark.read.parquet(tmp)
-            best = float("inf")
-            for _ in range(iters):
+
+            def serve() -> DataFrame:
                 if codec == "int8":
                     short_ids = _ivfq_shortlist_ids(idx)
                 else:
                     short_ids = _ivfpq_shortlist_ids(spark, sf_dir, idx, codec_rows)
-                df = exact_cosine_rerank(spark, sf_dir, short_ids, 3)
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            out[prefix + "serve"] = round(best, 3)
+                return exact_cosine_rerank(spark, sf_dir, short_ids, 3)
+
+            out[prefix + "serve"] = round(best_of(serve, iters), 3)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
     return out
@@ -109,9 +132,9 @@ def _time_once(fn) -> float:
 
 
 def _py_loop_once() -> float:
-    """Interpreter-throughput canary payload. scripts/canary.py imports
-    this (like _blas_once) so the standalone probe and the in-bench one
-    share ONE payload definition and can never drift (ADVICE r19)."""
+    """Interpreter-throughput canary payload, one half of ``_canary_pair``
+    (scripts/canary.py and perfbench record that pair, so every probe
+    shares one payload definition and none can drift — ADVICE r19)."""
     return _time_once(lambda: sum(i * i for i in range(2_000_000)))
 
 
@@ -134,19 +157,18 @@ def _blas_once() -> float:
     return _time_once(lambda: a @ a)
 
 
-def main() -> None:
+def main(names: list[str]) -> None:
+    """Time ``names`` (default: HEADLINE plus the ann_serving block)."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    spark = get_spark(app_name="bench")
     specs = load_all()
-
-    # warmup: touch the JVM, codegen, and the parquet reader on the fact
-    # table once (fixture files have a single row group, so scans are
-    # single-task; warmup takes the first-touch JIT out of the timings)
-    specs["agg_stats"].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    specs["filter_project"].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    unknown = [n for n in names if n not in specs]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
+    spark = get_spark(app_name="bench")
+    warm_up(spark, specs, sf_dir)
 
     # best-of-N per query (default 3): the first run of a pipeline pays
     # one-time whole-stage-codegen compilation (~0.5-1s for the wide LSH
@@ -176,38 +198,18 @@ def main() -> None:
     # the loadavg/wall timeline. Two time.time() reads per query, both
     # OUTSIDE the timed regions — additive, timing-neutral.
     query_wall: dict[str, list[float]] = {}
-    for name in HEADLINE:
+    for name in names or HEADLINE:
         # Guide §1.5: label jobs so a UI/eventlog reading of the bench
         # maps stages to queries. Thread-local, set OUTSIDE the timed
         # region (one py4j call per query, before the clock starts).
         spark.sparkContext.setJobDescription(f"bench:{name}")
         q_wall0 = time.time()
-        best = float("inf")
-        for _ in range(iters):
-            # Timed region (r15 protocol note): for PURE-LAZY builders the
-            # clock starts after the builder, as in every prior round —
-            # plan construction/analysis is driver-side Python/Catalyst
-            # work that amortizes completely at 100 TB (corpus_curation's
-            # plan alone costs ~3s to ANALYZE but ~0.5s to RUN at sf0.1)
-            # and was never part of the 14-round series. For builders that
-            # run Spark JOBS eagerly (the narrow-assign Lloyd family
-            # trains via k-row centroid collects at build time) the clock
-            # starts BEFORE the builder, so training is counted; that
-            # conservatively includes their analysis time too — the
-            # reported number can only be high, never low.
-            if name in EAGER_BUILD:
-                t0 = time.perf_counter()
-                df = specs[name].builder(spark, sf_dir)
-            else:
-                df = specs[name].builder(spark, sf_dir)
-                t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+        timings[name] = round(best_of(lambda: specs[name].builder(spark, sf_dir), iters), 3)
         query_wall[name] = [round(q_wall0, 1), round(time.time(), 1)]
-    spark.sparkContext.setJobDescription("bench:ann_serving")
-
-    ann_serving = bench_ann_serving(spark, sf_dir, iters)
+    ann_block = {}
+    if not names:
+        spark.sparkContext.setJobDescription("bench:ann_serving")
+        ann_block = {"ann_serving": bench_ann_serving(spark, sf_dir, iters)}
     spark.sparkContext.setJobDescription(None)
 
     # Trailing canary (r19 lesson, VERDICT r19 #3): steal bursts WITHIN a
@@ -228,7 +230,7 @@ def main() -> None:
                 # steady-state serving cost of both quantized ANN
                 # capstones over a once-materialized index; the headline
                 # total carries the END-TO-END (train-in-query) number
-                "ann_serving": ann_serving,
+                **ann_block,
                 "sf": sf,
                 "cpu_canary": canary,
                 "cpu_canary_end": canary_end,
@@ -247,4 +249,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -43,7 +43,7 @@ def _run(scratch: str, sf_dir: str, n_files: int) -> int:
     # canary pair bench.py records — both legs share one host, so a dirty
     # bracket taints the SPEEDUP ratio, not just the absolute times
     # (r19: the reference leg alone swung 21.3s -> 41.8s between runs).
-    from bench import _canary_pair
+    from bench import _canary_pair, best_of, warm_up
 
     build, data, run = (os.path.join(scratch, d) for d in ("build", "data", "run"))
     os.makedirs(data)
@@ -85,19 +85,15 @@ def _run(scratch: str, sf_dir: str, n_files: int) -> int:
             ref_counts[word] += int(cnt)
 
     # 4. time this engine's wordcount on the parquet fixture (best-of-3,
-    #    forced end-to-end like bench.py)
+    #    builder included, like bench.py)
     from multithreaded_mapreduce_library_spark.registry import load_all
     from multithreaded_mapreduce_library_spark.session import get_spark
 
     spark = get_spark(app_name="bench-reference")
     specs = load_all()
     builder = specs["wordcount"].builder
-    builder(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-    spark_wall = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        spark_wall = min(spark_wall, time.perf_counter() - t0)
+    warm_up(spark, specs, sf_dir)
+    spark_wall = best_of(lambda: builder(spark, sf_dir), 3)
     ours = collections.Counter(
         {r["word"]: r["cnt"] for r in builder(spark, sf_dir).collect()}
     )
@@ -109,7 +105,7 @@ def _run(scratch: str, sf_dir: str, n_files: int) -> int:
         f"reference wordcount : {ref_wall:.2f}s  ({len(ref_counts)} words, "
         f"{sum(ref_counts.values())} tokens)"
     )
-    print(f"this engine         : {spark_wall:.2f}s  (best-of-3, noop sink)")
+    print(f"this engine         : {spark_wall:.2f}s  (best-of-3, builder + noop sink)")
     print(f"speedup             : {ref_wall / spark_wall:.0f}x")
     print(f"counts identical    : {identical}")
     print(f"canary bracket      : start {canary_start} end {canary_end}")

@@ -17,7 +17,7 @@ r19 addendum: steal can burst MID-run, so a clean standalone probe only
 certifies the start — the closing-number protocol is the in-run bracket
 (bench.py records cpu_canary AND cpu_canary_end; both must be clean).
 
-Imports the probes from bench.py so the two can never drift apart.
+Returns bench.py's own ``_canary_pair`` so the two can never drift apart.
 """
 
 from __future__ import annotations
@@ -28,16 +28,12 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _blas_once, _py_loop_once  # noqa: E402
+from bench import _canary_pair  # noqa: E402
 
 
 def probe() -> dict:
     load = os.getloadavg()
-    return {
-        "py_loop_sec": round(min(_py_loop_once() for _ in range(3)), 4),
-        "blas_matmul_sec": round(min(_blas_once() for _ in range(3)), 4),
-        "load_avg": [round(x, 2) for x in load],
-    }
+    return {**_canary_pair(), "load_avg": [round(x, 2) for x in load]}
 
 
 if __name__ == "__main__":

@@ -17,18 +17,12 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
-# Same canonicalization as the driver-gate replica (tests/oracle.py) —
-# plain str() would report spurious int-vs-float / Decimal / NaN /
-# timestamp diffs relative to the real gate.
-from tests.oracle import canonical_rows, check_type_alignment  # noqa: E402
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
+# The driver-gate replica's own connection and comparison (canonical
+# rows, column names, type classes) — plain str() would report spurious
+# int-vs-float / Decimal / NaN / timestamp diffs relative to the real gate.
+from tests.oracle import compare_frame, duck_connect  # noqa: E402
 
 
 def main() -> int:
@@ -46,11 +40,7 @@ def main() -> int:
     import __spark_entry__ as entry_mod
 
     q, o = entry_mod.queries(), entry_mod.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_connect(sf_dir)
 
     failures = []
     for name, fn in q.items():
@@ -61,26 +51,15 @@ def main() -> int:
             n = sdf.count()
             print(f"{name}: rows-only {n}")
             continue
-        srows = canonical_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
-        cur = con.execute(o[name])
-        ocols = [d[0] for d in cur.description]
-        orows = canonical_rows(ocols, cur.fetchall())
-        otypes = {d[0]: d[1] for d in con.execute("DESCRIBE " + o[name]).fetchall()}
         try:
-            check_type_alignment(sdf, otypes, name)
-            types_ok = True
+            n = compare_frame(sdf, o[name], con, name)
         except AssertionError as exc:
-            print(f"  type-class: {exc}")
-            types_ok = False
-        ok = srows == orows and sorted(sdf.columns) == sorted(ocols) and types_ok
-        print(f"{name}: rows={len(srows)} match={ok}")
-        if not ok:
+            print(f"{name}: match=False\n  {exc}")
             failures.append(name)
-            for a, b in zip(srows, orows):
-                if a != b:
-                    print(f"  first diff:\n   spark : {a}\n   oracle: {b}")
-                    break
+            continue
+        print(f"{name}: rows={n} match=True")
 
+    con.close()
     spark.stop()
     if failures:
         print("FAILURES:", failures)

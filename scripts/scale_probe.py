@@ -19,7 +19,6 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -281,24 +280,6 @@ def ensure_scaled(n: int) -> str:
     return scaled_dir
 
 
-def time_queries(
-    spark, specs, sf_dir: str, iters: int = 3, probe=PROBE
-) -> dict[str, float]:
-    out = {}
-    for name in probe:
-        best = float("inf")
-        for _ in range(iters):
-            # the clock starts before the builder for every query, so
-            # builders that run jobs at build time (Lloyd/PQ training,
-            # BPE, dedup star contraction, ...) are timed in full
-            t0 = time.perf_counter()
-            df = specs[name].builder(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 3)
-    return out
-
-
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 4
     # optional: probe only the named queries (new-operator rounds re-probe
@@ -309,15 +290,18 @@ def main() -> None:
     if unknown:
         sys.exit(f"not in PROBE: {unknown}; choose from {sorted(PROBE)}")
     probe = tuple(sys.argv[2:]) or PROBE
+    from bench import best_of, warm_up
     from multithreaded_mapreduce_library_spark.registry import load_all
     from multithreaded_mapreduce_library_spark.session import get_spark
 
     scaled_dir = ensure_scaled(n)
     spark = get_spark(app_name="scale_probe")
     specs = load_all()
-    specs["agg_stats"].builder(spark, BASE).write.format("noop").mode("overwrite").save()
-    t1 = time_queries(spark, specs, BASE, probe=probe)
-    tn = time_queries(spark, specs, scaled_dir, probe=probe)
+    warm_up(spark, specs, BASE)
+    t1, tn = (
+        {q: round(best_of(lambda: specs[q].builder(spark, sf_dir), 3), 3) for q in probe}
+        for sf_dir in (BASE, scaled_dir)
+    )
     ratios = {q: round(tn[q] / max(t1[q], 1e-3), 2) for q in probe}
     print(
         json.dumps(

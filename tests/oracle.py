@@ -17,36 +17,37 @@ import duckdb
 from multithreaded_mapreduce_library_spark.sources import TABLES, table_path
 
 
-def run_duckdb(sql: str, sf_dir: str, with_types: bool = False):
+def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table at ``sf_dir``."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
         )
-    cur = con.execute(sql)
-    cols = [d[0] for d in cur.description]
-    rows = cur.fetchall()
-    types = None
-    if with_types:
-        desc = con.execute(f"DESCRIBE {sql}").fetchall()
-        types = {d[0]: d[1] for d in desc}
-    con.close()
-    if with_types:
-        return cols, rows, types
-    return cols, rows
+    return con
+
+
+def run_duckdb(sql: str, sf_dir: str):
+    con = duck_connect(sf_dir)
+    try:
+        cur = con.execute(sql)
+        return [d[0] for d in cur.description], cur.fetchall()
+    finally:
+        con.close()
+
+
+def _describe(con, sql: str) -> dict[str, str]:
+    return {d[0]: d[1] for d in con.execute(f"DESCRIBE {sql}").fetchall()}
 
 
 def duck_oracle_types(sql: str, sf_dir: str) -> dict[str, str]:
     """Column name → DuckDB type for an oracle query, via DESCRIBE only —
     binds the plan without executing it (cheap even for recursive CTEs)."""
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
-        )
-    desc = con.execute(f"DESCRIBE {sql}").fetchall()
-    con.close()
-    return {d[0]: d[1] for d in desc}
+    con = duck_connect(sf_dir)
+    try:
+        return _describe(con, sql)
+    finally:
+        con.close()
 
 
 _DUCK_CLASS = (
@@ -160,22 +161,35 @@ def canonical_rows(cols: list[str], rows) -> list[tuple[str, ...]]:
 
 def compare_query(spark, spec, sf_dir: str) -> None:
     """Assert the Spark result and the DuckDB oracle result match."""
-    sdf = spec.builder(spark, sf_dir)
+    con = duck_connect(sf_dir)
+    try:
+        compare_frame(spec.builder(spark, sf_dir), spec.oracle, con, spec.name)
+    finally:
+        con.close()
+
+
+def compare_frame(sdf, sql: str, con, name: str) -> int:
+    """Assert ``sdf`` matches oracle ``sql`` run on ``con`` (a
+    ``duck_connect`` connection); returns the matched row count."""
     srows = [tuple(r) for r in sdf.collect()]
     scols = sdf.columns
-    ocols, orows, otypes = run_duckdb(spec.oracle, sf_dir, with_types=True)
-    check_type_alignment(sdf, otypes, spec.name)
+    cur = con.execute(sql)
+    ocols = [d[0] for d in cur.description]
+    orows = cur.fetchall()
+    check_type_alignment(sdf, _describe(con, sql), name)
 
     assert sorted(scols) == sorted(ocols), (
-        f"{spec.name}: column mismatch spark={sorted(scols)} oracle={sorted(ocols)}"
-    )
-    assert len(srows) == len(orows), (
-        f"{spec.name}: row count mismatch spark={len(srows)} oracle={len(orows)}"
+        f"{name}: column mismatch spark={sorted(scols)} oracle={sorted(ocols)}"
     )
     sc = canonical_rows(scols, srows)
     oc = canonical_rows(ocols, orows)
+    diffs = [(a, b) for a, b in zip(sc, oc) if a != b][:5]
+    assert len(srows) == len(orows), (
+        f"{name}: row count mismatch spark={len(srows)} oracle={len(orows)}; "
+        f"first sorted-row diffs (spark, oracle): {diffs}"
+    )
     if sc != oc:
-        diffs = [(a, b) for a, b in zip(sc, oc) if a != b][:5]
         raise AssertionError(
-            f"{spec.name}: value mismatch; first sorted-row diffs (spark, oracle): {diffs}"
+            f"{name}: value mismatch; first sorted-row diffs (spark, oracle): {diffs}"
         )
+    return len(sc)

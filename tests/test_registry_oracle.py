@@ -37,7 +37,7 @@ def test_decimal_output_rejected(spark, sf_dir):
     to coerce Decimal→float and pass; check_type_alignment must now reject
     the DECIMAL column so this class can never ship green locally again."""
     from multithreaded_mapreduce_library_spark.sources import register_views
-    from tests.oracle import check_type_alignment, run_duckdb
+    from tests.oracle import check_type_alignment, duck_oracle_types
 
     old_text = """
     SELECT o_orderpriority,
@@ -50,10 +50,8 @@ def test_decimal_output_rejected(spark, sf_dir):
     register_views(spark, sf_dir)
     sdf = spark.sql(old_text.format(d0="DATE'1996-01-01'", d1="DATE'1997-01-01'"))
     assert any("decimal" in t for _, t in sdf.dtypes)  # the hazard is real
-    _, _, otypes = run_duckdb(
-        old_text.format(d0="DATE '1996-01-01'", d1="DATE '1997-01-01'"),
-        sf_dir,
-        with_types=True,
+    otypes = duck_oracle_types(
+        old_text.format(d0="DATE '1996-01-01'", d1="DATE '1997-01-01'"), sf_dir
     )
     with pytest.raises(AssertionError, match="decimal|DECIMAL"):
         check_type_alignment(sdf, otypes, "old_sql_interface")
@@ -67,16 +65,14 @@ def test_array_output_rejected(spark, sf_dir):
     non-scalar columns on either side so this class can never ship green
     locally again — same closure the DECIMAL test above gives r2's bug."""
     from multithreaded_mapreduce_library_spark.sources import register_views
-    from tests.oracle import check_type_alignment, run_duckdb
+    from tests.oracle import check_type_alignment, duck_oracle_types
 
     listy = "SELECT doc_id, split(text, ' ') AS toks FROM documents LIMIT 5"
     register_views(spark, sf_dir)
     sdf = spark.sql(listy)
     assert any(t.startswith("array") for _, t in sdf.dtypes)  # the hazard is real
-    _, _, otypes = run_duckdb(
-        "SELECT doc_id, string_split(text, ' ') AS toks FROM documents LIMIT 5",
-        sf_dir,
-        with_types=True,
+    otypes = duck_oracle_types(
+        "SELECT doc_id, string_split(text, ' ') AS toks FROM documents LIMIT 5", sf_dir
     )
     with pytest.raises(AssertionError, match="scalar"):
         check_type_alignment(sdf, otypes, "listy_query")

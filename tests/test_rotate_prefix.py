@@ -233,18 +233,17 @@ def test_changed_hashes_are_declared():
 
 def test_canary_probe_shape():
     """scripts/canary.py must stay import-compatible with bench.py (it
-    reuses bench's probe functions so the standalone canary and the one
+    returns bench's probe pair so the standalone canary and the one
     recorded inside bench JSON can never drift) and return the three
-    documented keys with sane positive readings. ADVICE r19: the py_loop
-    payload must be THE SAME OBJECT as bench's — an inline re-definition
-    in canary.py silently desynchronized the probes once; pin identity
-    for both payloads so it can't recur."""
+    documented keys with sane positive readings. ADVICE r19: the probe
+    must be THE SAME OBJECT as bench's — an inline re-definition in
+    canary.py silently desynchronized the probes once; pin identity so
+    it can't recur."""
     import bench
     from scripts import canary
     from scripts.canary import probe
 
-    assert canary._py_loop_once is bench._py_loop_once
-    assert canary._blas_once is bench._blas_once
+    assert canary._canary_pair is bench._canary_pair
 
     c = probe()
     assert set(c) == {"py_loop_sec", "blas_matmul_sec", "load_avg"}

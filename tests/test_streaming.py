@@ -654,20 +654,21 @@ def events_multi_dir(tmp_path_factory, sf_dir):
 
 
 def _multi_batch_stream(spark, sf_dir, events_dir):
-    """Multi-file events stream: same schema pinning and ts normalization
-    as events_stream, but one file per trigger over the split directory."""
+    """Multi-file events stream: the table reader's schema pinning and ts
+    normalization (as events_stream), but one file per trigger over the
+    split directory."""
     from multithreaded_mapreduce_library_spark.sources.tables import (
-        normalize_events_ts,
+        _normalize,
+        _read_raw,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(_os.path.join(sf_dir, "events.parquet")).schema
+    schema = _read_raw(spark, sf_dir, "events").schema
     s = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(events_dir)
     )
-    return normalize_events_ts(s)
+    return _normalize("events", s)
 
 
 def _run_multi(stream_df, mode):
