@@ -37,6 +37,7 @@ from multithreaded_mapreduce_library_spark.functions import (
 )
 from multithreaded_mapreduce_library_spark.registry import register
 from multithreaded_mapreduce_library_spark.sources import load_table
+from multithreaded_mapreduce_library_spark.sources.sinks import settled_in_scratch
 
 # Snapshot construction: hash bucket of the order key in [0, 100).
 #   old snapshot A: buckets [0, 97), with the pre-update price on [90, 97)
@@ -571,7 +572,10 @@ GROUP BY m.out_file
         "one data file per output, since each out_file lives in exactly "
         "one shuffle task), then read BACK from disk for the summary, so "
         "what the oracle checks is the round-tripped on-disk result, not "
-        "an in-memory shortcut. The output aggregates the applied table "
+        "an in-memory shortcut. The rewrite lives in a per-call scratch "
+        "dir (sources.sinks.settled_in_scratch): the summary is "
+        "checkpointed and the dir deleted before the builder returns. "
+        "The output aggregates the applied table "
         "per out_file (row count, fixed-point money sum, modular key "
         "checksum pinning the exact surviving row set); the oracle "
         "reconstructs the same summary from base data through the shared "
@@ -588,111 +592,28 @@ GROUP BY m.out_file
     ),
 )
 def compact_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    applied, _ = compact_rewrite(spark, sf_dir)
-    return applied.groupBy("out_file").agg(
-        F.count("*").alias("n_rows"),
-        money_sum("o_totalprice", "total_price"),
-        F.sum(F.col("o_orderkey") % KEY_CHECKSUM_MOD)
-        .cast("long")
-        .alias("key_checksum"),
-    )
-
-
-def _proc_starttime(pid: int) -> str | None:
-    """Kernel start time of a live (or zombie) process — field 22 of
-    /proc/<pid>/stat, in clock ticks since boot. The (pid, starttime)
-    pair is unique across pid recycling, which os.kill(pid, 0) alone is
-    not. The comm field may contain spaces and parens, so parse from the
-    LAST ')'. None when /proc is unavailable (non-Linux) or the entry is
-    gone/unreadable."""
     import os
 
-    try:
-        with open(f"/proc/{pid}/stat", "rb") as f:
-            stat = f.read().decode("ascii", "replace")
-        return stat.rsplit(")", 1)[1].split()[19]
-    except (OSError, IndexError):
-        return None
+    def summarize(tmp: str) -> DataFrame:
+        applied = compact_rewrite(spark, sf_dir, os.path.join(tmp, "orders"))
+        return applied.groupBy("out_file").agg(
+            F.count("*").alias("n_rows"),
+            money_sum("o_totalprice", "total_price"),
+            F.sum(F.col("o_orderkey") % KEY_CHECKSUM_MOD)
+            .cast("long")
+            .alias("key_checksum"),
+        )
+
+    # one row per output file: checkpointed before the rewrite is deleted
+    return settled_in_scratch("compact_apply_", summarize)
 
 
-_SCRATCH_OWNER_MARKER = ".owner_starttime"
-
-
-def _stamp_scratch_owner(proc_dir: str) -> None:
-    """Record this process's start time inside its scratch dir (written
-    atomically via rename) so a later process can distinguish 'pid-N is
-    alive' from 'pid N was recycled by an unrelated process after the
-    owner died' (r12 ADVICE: the bare liveness probe let a recycled pid
-    shield an abandoned dir until the squatter exited). Re-stamps
-    whenever the recorded start time differs from THIS process's live
-    start time (r13 ADVICE): if our pid recycles a crashed owner's
-    pid-N dir, an inherited stale marker would make a concurrent
-    reaper see recorded != live for an ALIVE process and rmtree our
-    scratch mid-run — adopting the dir by overwriting the marker closes
-    that window. No-op where /proc is unavailable — the reaper then
-    simply keeps the conservative liveness-only behavior for this dir."""
-    import os
-
-    marker = os.path.join(proc_dir, _SCRATCH_OWNER_MARKER)
-    st = _proc_starttime(os.getpid())
-    if st is None:
-        return
-    try:
-        with open(marker) as f:
-            if f.read().strip() == st:
-                return  # already stamped by this incarnation
-    except OSError:
-        pass  # missing/unreadable marker: stamp fresh
-    os.makedirs(proc_dir, exist_ok=True)
-    tmp = f"{marker}.{os.getpid()}.tmp"
-    with open(tmp, "w") as f:
-        f.write(st)
-    os.replace(tmp, marker)
-
-
-def _scratch_owner_recycled(d: str, pid: int) -> bool:
-    """True only when the dir's recorded owner start time PROVABLY
-    differs from the live /proc/<pid> start time — i.e. the original
-    owner is dead and the pid now belongs to someone else. A missing
-    marker (pre-marker layout) or unreadable /proc returns False: leave
-    the dir alone, the original conservative behavior."""
-    import os
-
-    try:
-        with open(os.path.join(d, _SCRATCH_OWNER_MARKER)) as f:
-            recorded = f.read().strip()
-    except OSError:
-        return False
-    live = _proc_starttime(pid)
-    return bool(recorded) and live is not None and recorded != live
-
-
-def _reap_recycled_scratch(d: str, pid: int) -> bool:
-    """Delete a recycled-owner scratch dir, but only if the proof still
-    holds on a SECOND marker read taken immediately before the rmtree
-    (r14 ADVICE double-check): a live process whose pid recycled this
-    dir ADOPTS it by re-stamping the marker (_stamp_scratch_owner), and
-    an adoption landing between the reaper's first read and the delete
-    must ABORT the reap rather than destroy a live run's scratch. The
-    residual window is the re-read-to-rmtree gap — microseconds instead
-    of indefinitely stale. Returns True iff the dir was reaped."""
-    import shutil
-
-    if not _scratch_owner_recycled(d, pid):
-        return False
-    shutil.rmtree(d, ignore_errors=True)
-    return True
-
-
-def compact_rewrite(spark: SparkSession, sf_dir: str):
-    """Execute the compaction plan physically; returns (applied, target):
-    the read-back post-rewrite table (out_file, o_orderkey, o_orderstatus,
-    o_totalprice) and the parquet directory it was written to — exposed so
-    the invariance test can count on-disk data files against the plan's
-    bin/keep count and compare the round-tripped rows to the source."""
-    import os
-    import tempfile
-
+def compact_rewrite(spark: SparkSession, sf_dir: str, target: str) -> DataFrame:
+    """Execute the compaction plan physically into the parquet directory
+    ``target``, which the caller owns, and return the read-back
+    post-rewrite table (out_file, o_orderkey, o_orderstatus,
+    o_totalprice); the invariance test counts ``target``'s data files
+    against the plan's bin/keep count."""
     plan = assign_compaction_bins(compact_file_inventory(spark, sf_dir))
     mapping = plan.select(
         "file_id",
@@ -714,63 +635,13 @@ def compact_rewrite(spark: SparkSession, sf_dir: str):
         # (the oracle's join over zero rows is empty too). The probe is a
         # planner-scale limit-1 over the already-metadata-sized inventory
         # join, not a data path.
-        return (
-            spark.createDataFrame(
-                [],
-                "o_orderkey long, o_orderstatus string, o_totalprice double,"
-                " out_file string",
-            ),
-            None,
+        return spark.createDataFrame(
+            [],
+            "o_orderkey long, o_orderstatus string, o_totalprice double,"
+            " out_file string",
         )
-    # Deterministic per-(process, fixture) target + overwrite => repeated
-    # runs WITHIN a process (driver gates, contract drives, scale probes)
-    # cap the /tmp footprint at ONE routed copy per fixture, while the
-    # pid component keeps two CONCURRENT processes over the SAME fixture
-    # (driver gate + a local pytest/contract drive, or pytest-xdist) from
-    # interleaving one run's overwrite delete-and-rewrite with the
-    # other's read-back. The fixture digest still separates concurrent
-    # different-sf runs. Dirs left by crashed processes are reaped lazily
-    # below, and this process's dir is removed at exit — so the global
-    # footprint stays bounded by live processes x fixtures. (The
-    # streaming sinks need none of this: their mkdtemp-per-run dirs are
-    # rmtree'd in each builder's finally, which is the right shape there
-    # because a reused directory could alias a checkpointLocation.)
-    import atexit
-    import glob as _glob
-    import hashlib
-    import shutil
-
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_compact")
-    proc_dir = os.path.join(root, f"pid-{os.getpid()}")
-    if not os.path.isdir(proc_dir):
-        atexit.register(shutil.rmtree, proc_dir, ignore_errors=True)
-    _stamp_scratch_owner(proc_dir)
-    for d in _glob.glob(os.path.join(root, "pid-*")):
-        try:
-            pid = int(d.rsplit("-", 1)[1])
-            if pid != os.getpid():
-                os.kill(pid, 0)  # raises if the owning process is gone
-                if _scratch_owner_recycled(d, pid):
-                    # pid alive but NOT the recorded owner: the owner died
-                    # and the kernel recycled its pid — reap (r12 ADVICE),
-                    # via the double-checked delete that re-reads the
-                    # marker first so a concurrent adoption aborts it.
-                    _reap_recycled_scratch(d, pid)
-        except ValueError:
-            continue
-        except PermissionError:
-            pass  # alive under another uid — leave it
-        except OSError:  # ProcessLookupError: the owning process is gone
-            shutil.rmtree(d, ignore_errors=True)
-    target = os.path.join(
-        proc_dir,
-        hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-        "orders",
-    )
     # one shuffle on out_file => every out_file's rows sit in one task =>
     # partitionBy emits exactly one data file per output (the invariance
     # test counts them against the plan's bin/keep count)
-    routed.repartition(F.col("out_file")).write.mode("overwrite").partitionBy(
-        "out_file"
-    ).parquet(target)
-    return spark.read.parquet(target), target
+    routed.repartition(F.col("out_file")).write.partitionBy("out_file").parquet(target)
+    return spark.read.parquet(target)

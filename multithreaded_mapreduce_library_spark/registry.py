@@ -101,7 +101,7 @@ _PRIORITY = (
     #       within a round.
     # Capacity arithmetic (r23): the r22 gate run re-greened its
     # 6-changed + 9-r17-green + 35-r18-green prefix (CORRECTNESS_r22.json,
-    # 50/50), so the r23 prefix is 15 changed queries (bpe_train: its
+    # 50/50), so the r23 prefix is 16 changed queries (bpe_train: its
     # merge rounds moved to the driver, which rewrote its @register
     # doc; ivf_train_centroids, embedding_outliers, sim_topk_ivf_trained,
     # dedup_semantic, dedup_semantic_incremental, stream_dedup_semantic:
@@ -115,10 +115,12 @@ _PRIORITY = (
     # which rewrote their bodies and docs, and sim_topk_ivfpq shares the
     # PQ seed change; time_tumbling, time_sliding: their bodies became
     # tumbling_transform/sliding_transform over load_table, shared with
-    # the streaming twins) + the 9 displaced r18-greens
-    # (quarantine_malformed .. unpivot_measures) + the 26 oldest
-    # r19-greens. Changed-set cap this round: 39 (15 spent); forecast
-    # for r24: 34, for r25: 5 (rotate_prefix.py --preview).
+    # the streaming twins; compact_apply: its rewrite now lives in one
+    # settled_in_scratch dir, which rewrote its body and doc) + the 9
+    # displaced r18-greens (quarantine_malformed .. unpivot_measures) +
+    # the 25 oldest r19-greens. Changed-set cap this round: 39 (16
+    # spent); forecast for r24: 34, for r25: 5 (rotate_prefix.py
+    # --preview).
     # The optimization-round regime (established r21): a gated query
     # whose builder text changes for PERFORMANCE (output-identical,
     # oracle-proven at sf0.01+sf0.1 before landing) takes a changed-set
@@ -129,24 +131,24 @@ _PRIORITY = (
     # inside the four-round staleness bound. No new operators. Pinned by
     # tests/test_registry_oracle.py::test_gate_prefix_bounds_staleness.
     # Do not pad with trivial variants.
-    # (1) new/changed in r23 (15):
+    # (1) new/changed in r23 (16):
     "bpe_train", "ivf_train_centroids", "embedding_outliers",
     "sim_topk_ivf_trained", "dedup_semantic", "dedup_semantic_incremental",
     "stream_dedup_semantic", "pq_train_codes", "sim_topk_pq", "stream_upsert",
     "stream_incremental_agg", "sim_topk_ivf_quantized", "sim_topk_ivfpq",
-    "time_tumbling", "time_sliding",
+    "time_tumbling", "time_sliding", "compact_apply",
     # (2) last green in r18 (9):
     "quarantine_malformed", "repetition_ngram", "sample_hash",
     "scalar_subquery", "source_divergence", "stream_dedup_docs",
     "stream_dedup_minhash", "stream_lm_score", "unpivot_measures",
-    # (2) last green in r19 (26):
-    "compact_apply", "compact_plan", "corr_stats", "correlated_subquery",
-    "dist_moments", "event_funnel", "group_cube", "grouping_sets",
-    "join_asof", "join_broadcast", "join_full", "join_large", "join_left",
-    "join_range", "join_right", "join_semi", "join_shuffle_hash",
-    "join_skew_salted", "join_theta", "lang_id", "map_in_arrow_project",
-    "mmr_rerank", "mr_inverted_index", "multimodal_decode",
-    "multimodal_frame_sample", "quality_score",
+    # (2) last green in r19 (25):
+    "compact_plan", "corr_stats", "correlated_subquery", "dist_moments",
+    "event_funnel", "group_cube", "grouping_sets", "join_asof",
+    "join_broadcast", "join_full", "join_large", "join_left", "join_range",
+    "join_right", "join_semi", "join_shuffle_hash", "join_skew_salted",
+    "join_theta", "lang_id", "map_in_arrow_project", "mmr_rerank",
+    "mr_inverted_index", "multimodal_decode", "multimodal_frame_sample",
+    "quality_score",
     # --- end of gate prefix (50) ----------------------------------------
     # rotated out, last green r19 (16):
     "sample_stratified", "sequence_packing", "sessionize", "sim_lsh_buckets",

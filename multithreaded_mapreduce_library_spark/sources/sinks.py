@@ -16,7 +16,32 @@ layout.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
+
+
+def settled_in_scratch(prefix: str, build: Callable[[str], DataFrame]) -> DataFrame:
+    """The package's one lifetime for scratch writes: ``build(dir)`` gets
+    a fresh temp dir named ``prefix`` + a random suffix, its (small)
+    answer is pinned with ``localCheckpoint(eager=True)``, and the dir
+    is deleted before this returns, also when ``build`` raises — as the
+    reference frees a job's partitions before ``MR_Run`` returns
+    (mapreduce.c:190-191).
+
+    The checkpoint cuts the lineage, so the returned frame never reads
+    the deleted files. ``cache()``/``persist()`` would keep the lineage,
+    and an evicted block would re-read them. A process killed mid-call
+    leaks its one in-flight dir; nothing else outlives the call.
+    """
+    import shutil
+    import tempfile
+
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    try:
+        return build(tmp).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def write_partitioned_text(df: DataFrame, path: str, num_partitions: int, key: str) -> None:

@@ -51,6 +51,7 @@ from multithreaded_mapreduce_library_spark.operators.events import (
 )
 from multithreaded_mapreduce_library_spark.registry import register
 from multithreaded_mapreduce_library_spark.sources import table_stream
+from multithreaded_mapreduce_library_spark.sources.sinks import settled_in_scratch
 
 _sink_ids = itertools.count()
 
@@ -800,39 +801,35 @@ def latest_upsert_version(target_root: str, upto: int | None = None) -> str:
 
 def run_versioned(feed: DataFrame, v0: DataFrame, sink, settle) -> DataFrame:
     """Replay ``feed`` (availableNow) through a versioned foreachBatch
-    sink and return the settled result as a local DataFrame.
+    sink and return the settled result, checkpointed.
 
     ``v0`` is written as the chain's first committed version, ``sink``
     maps the version root to the foreachBatch applier (``upsert_sink``,
     ``mv_sink``), and ``settle`` maps the newest committed version to the
     answer. The run holds one state store per task slot
-    (``_one_store_per_slot``); the answer is collected, so the temp dir
-    holding the versions and the checkpoint is removed before returning,
-    also when the run fails.
+    (``_one_store_per_slot``). The versions and the checkpoint live in
+    one ``settled_in_scratch`` dir, so the answer stays on the executors
+    and the dir is removed before returning, also when the run fails.
     """
     import os
-    import shutil
-    import tempfile
 
     spark = feed.sparkSession
-    tmp = tempfile.mkdtemp(prefix="stream_versioned_")
-    try:
-        with _one_store_per_slot(spark):
-            troot = os.path.join(tmp, "versions")
-            os.makedirs(troot)
-            v0.write.parquet(os.path.join(troot, "v0"))
-            q = (
-                feed.writeStream.foreachBatch(sink(troot))
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            settled = settle(spark.read.parquet(latest_upsert_version(troot)))
-            rows = settled.collect()
-        return spark.createDataFrame(rows, settled.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    def build(tmp: str) -> DataFrame:
+        troot = os.path.join(tmp, "versions")
+        os.makedirs(troot)
+        v0.write.parquet(os.path.join(troot, "v0"))
+        q = (
+            feed.writeStream.foreachBatch(sink(troot))
+            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return settle(spark.read.parquet(latest_upsert_version(troot)))
+
+    with _one_store_per_slot(spark):
+        return settled_in_scratch("stream_versioned_", build)
 
 
 from multithreaded_mapreduce_library_spark.operators.maintenance import (  # noqa: E402

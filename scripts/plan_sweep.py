@@ -13,22 +13,25 @@ Streaming queries are excluded (their builders execute the availableNow
 replay internally); eager-build Lloyd builders run their training jobs
 at plan-build time, which is fine — we want the serving plan text.
 
-Usage: python scripts/plan_sweep.py [out.json]
+Usage: python scripts/plan_sweep.py <out.json>
+An existing output file is never overwritten: the script exits, naming
+it, before it starts a session.
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 """
 
 from __future__ import annotations
 
-import io
 import json
 import os
 import sys
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from multithreaded_mapreduce_library_spark.plans import formatted_plan
 from multithreaded_mapreduce_library_spark.registry import load_all
 from multithreaded_mapreduce_library_spark.session import get_spark
+
+USAGE = "Usage: python scripts/plan_sweep.py <out.json>"
 
 # one count per TREE occurrence: formatted explain prints each operator
 # in the numbered tree as "<Name> (<id>)" (partitioning/build-side
@@ -62,8 +65,15 @@ def count_tree_nodes(plan: str) -> dict[str, int]:
     }
 
 
-def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "plans/r22/plan_sweep.json"
+def main(argv: list[str]) -> None:
+    if len(argv) != 1:
+        sys.exit(USAGE)
+    out_path = argv[0]
+    if os.path.exists(out_path):
+        sys.exit(
+            f"refusing to overwrite committed plan evidence: {out_path}"
+            " (pick a new path or remove the file)"
+        )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="plan_sweep")
     specs = load_all()
@@ -78,10 +88,7 @@ def main() -> None:
         except Exception as exc:  # env-gated builders (e.g. missing codecs)
             skipped.append(f"{name} ({type(exc).__name__})")
             continue
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        sweep[name] = count_tree_nodes(buf.getvalue())
+        sweep[name] = count_tree_nodes(formatted_plan(df))
     result = {"sf_dir": sf_dir, "n_swept": len(sweep), "skipped": skipped,
               "queries": sweep}
     with open(out_path, "w") as f:
@@ -97,4 +104,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -10,11 +10,12 @@ comment and by test_gate_prefix_bounds_staleness:
   then the rotated-out tail, most-stale first, alphabetical within a
   round.
 
-Prints a ready-to-paste body for the ``_PRIORITY`` tuple (names only —
-keep/refresh the prose comment by hand, it carries the per-round
-arithmetic) plus a staleness forecast for the round after next. Purely
-advisory: registry.py stays the single source of truth, and the pinned
-tests still validate whatever is committed.
+Prints the ``_PRIORITY`` name region exactly as ``--apply`` writes it
+(names only — keep/refresh the prose comment by hand, it carries the
+per-round arithmetic) plus a staleness forecast for the two rounds
+after this one; ``--apply`` prints the same forecast after patching.
+Purely advisory: registry.py stays the single source of truth, and the
+pinned tests still validate whatever is committed.
 
 Usage: python scripts/rotate_prefix.py [--apply|--preview] [changed_query ...]
 
@@ -27,7 +28,8 @@ With ``--apply``, the name region of registry._PRIORITY (everything from
 the ``# (1) new/changed`` marker to the tuple's closing paren) is patched
 in place with the computed blocks — no hand-wrapping, no drift; the
 prose arithmetic comment above the marker stays hand-maintained (the
-script prints a reminder). Without it, prints the blocks for review.
+script prints a reminder; copy its numbers from the forecast lines).
+Without it, prints the blocks for review.
 """
 
 from __future__ import annotations
@@ -165,6 +167,31 @@ def build_blocks(changed, prefix, tail, last_green, this_round):
     return "\n".join(out)
 
 
+def forecast(tail, last_green, this_round) -> list[str]:
+    """Staleness forecast for the two rounds after ``this_round``.
+
+    After this round's driver run everything in the prefix is green at
+    this_round; the waiting backlog walks forward two rounds, so the
+    _PRIORITY prose can copy both next-round caps from one computation
+    (assumes each forecast round gates green, the steady state; a red
+    round re-runs this script with the failures as changed)."""
+    out = []
+    waiting = sorted(tail, key=lambda n: (last_green[n], n))
+    for ahead in (1, 2):
+        if not waiting:
+            break
+        oldest = last_green[waiting[0]]
+        must_lead = [n for n in waiting if last_green[n] == oldest]
+        out.append(
+            f"# forecast: {len(must_lead)} queries last green in "
+            f"r{oldest} must lead the r{this_round + ahead} prefix "
+            f"(changed-set cap {PREFIX_SLOTS - len(must_lead)}):"
+        )
+        out.append(fmt(must_lead, indent="#   "))
+        waiting = waiting[len(must_lead):]
+    return out
+
+
 def apply_blocks(repo: str, blocks: str) -> None:
     path = os.path.join(repo, "multithreaded_mapreduce_library_spark", "registry.py")
     src = open(path).read()
@@ -206,45 +233,13 @@ def main() -> None:
     prefix, tail, last_green = rotate(gated, changed, rounds)
 
     this_round = max(rounds) + 1
+    blocks = build_blocks(changed, prefix, tail, last_green, this_round)
     if apply:
-        apply_blocks(repo, build_blocks(changed, prefix, tail, last_green, this_round))
-        return
-    by_round: dict[int, list[str]] = {}
-    for n in prefix[len(changed):]:
-        by_round.setdefault(last_green[n], []).append(n)
-    print(f"# --- round-{this_round} gate prefix ({len(prefix)}) ---")
-    print(f"# (1) new/changed ({len(changed)}):")
-    if changed:
-        print(fmt(changed))
-    for rnd in sorted(by_round):
-        print(f"# (2) last green in r{rnd} ({len(by_round[rnd])}):")
-        print(fmt(by_round[rnd]))
-    print("# --- end of gate prefix ---")
-    tail_by_round: dict[int, list[str]] = {}
-    for n in tail:
-        tail_by_round.setdefault(last_green[n], []).append(n)
-    for rnd in sorted(tail_by_round):
-        print(f"# rotated out, last green r{rnd} ({len(tail_by_round[rnd])}):")
-        print(fmt(tail_by_round[rnd]))
-    # forecast: after this round's driver run, everything in the prefix is
-    # green at this_round; walk the waiting backlog forward two rounds so
-    # the _PRIORITY prose can state both next-round caps from the same
-    # computation (assumes each forecast round gates green, the steady
-    # state; a red round re-runs this script with the failures as changed)
-    waiting = sorted(tail, key=lambda n: (last_green[n], n))
-    for ahead in (1, 2):
-        if not waiting:
-            break
-        oldest = last_green[waiting[0]]
-        must_lead = [n for n in waiting if last_green[n] == oldest]
-        cap = PREFIX_SLOTS - len(must_lead)
-        print(
-            f"# forecast: {len(must_lead)} queries last green in "
-            f"r{oldest} must lead the r{this_round + ahead} prefix "
-            f"(changed-set cap {cap}):"
-        )
-        print(fmt(must_lead, indent="#   "))
-        waiting = waiting[len(must_lead):]
+        apply_blocks(repo, blocks)
+    else:
+        print(blocks)
+    for line in forecast(tail, last_green, this_round):
+        print(line)
 
 
 if __name__ == "__main__":

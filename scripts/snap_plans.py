@@ -13,15 +13,14 @@ fixture (``sources.default_sf_dir``).
 
 from __future__ import annotations
 
-import io
 import os
 import sys
-from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from bench import HEADLINE
+from multithreaded_mapreduce_library_spark.plans import formatted_plan
 from multithreaded_mapreduce_library_spark.registry import load_all
 from multithreaded_mapreduce_library_spark.session import get_spark
 from multithreaded_mapreduce_library_spark.sources import default_sf_dir
@@ -48,13 +47,10 @@ def main(argv: list[str]) -> None:
     spark = get_spark(app_name=f"snap_plans_{round_name}_{tag}")
     specs = load_all()
     for name, path in paths.items():
-        df = specs[name].builder(spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
+        plan = formatted_plan(specs[name].builder(spark, sf_dir))
         with open(path, "w") as f:
-            f.write(buf.getvalue())
-        print(f"wrote {path} ({len(buf.getvalue())} bytes)")
+            f.write(plan)
+        print(f"wrote {path} ({len(plan)} bytes)")
     spark.stop()
 
 

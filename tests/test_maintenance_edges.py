@@ -95,163 +95,6 @@ def test_compact_apply_all_compact(spark, tmp_path):
     assert got[0][1] == 4  # all four rows landed in the one bin
 
 
-def test_compact_rewrite_target_is_process_scoped(spark, tmp_path):
-    """compact_rewrite's scratch target is keyed by (pid, fixture digest)
-    and overwritten in place: repeated same-process runs reuse ONE dir,
-    two concurrent processes over the same fixture never share a target
-    (one's overwrite can't interleave with the other's read-back), and
-    dirs abandoned by dead processes are reaped while dirs that don't
-    parse as pids are left alone."""
-    import os
-    import subprocess
-    import tempfile
-
-    from multithreaded_mapreduce_library_spark.operators.maintenance import (
-        compact_rewrite,
-    )
-
-    _write_orders(tmp_path, [(1, 1, "O", 10.0), (2, 7, "F", 20.0)])
-    _applied, target = compact_rewrite(spark, str(tmp_path))
-    assert f"pid-{os.getpid()}" in target
-    # same process + same fixture => the SAME deterministic target
-    _applied2, target2 = compact_rewrite(spark, str(tmp_path))
-    assert target2 == target
-
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_compact")
-    # a dir owned by a genuinely dead pid must be reaped on the next run,
-    # an unparseable one must survive (it isn't ours to judge). Derive
-    # the dead pid by fork+waitpid (r13 ADVICE de-flake): the child is
-    # fully reaped before we use its pid, and unlike the old
-    # `sh -c 'echo $$'` shell-out there is no window in which a system
-    # under pid churn recycles it before the next compact_rewrite call —
-    # pids allocate monotonically until the whole space wraps.
-    child = os.fork()
-    if child == 0:
-        os._exit(0)  # pragma: no cover - child exits immediately
-    os.waitpid(child, 0)
-    dead_dir = os.path.join(root, f"pid-{child}")
-    odd_dir = os.path.join(root, "pid-not-a-number")
-    os.makedirs(dead_dir, exist_ok=True)
-    os.makedirs(odd_dir, exist_ok=True)
-    _applied3, _t = compact_rewrite(spark, str(tmp_path))
-    assert not os.path.exists(dead_dir), "dead-process scratch not reaped"
-    assert os.path.exists(odd_dir), "non-pid dir must be left alone"
-    os.rmdir(odd_dir)
-
-
-def test_compact_scratch_owner_markers(spark, tmp_path):
-    """The /proc start-time owner markers (r12/r13 ADVICE): a LIVE pid's
-    dir carrying a MISMATCHED marker is reaped (the recorded owner died
-    and the kernel recycled its pid for the current squatter), a
-    marker-less live pid's dir is kept (conservative pre-marker layout),
-    and _stamp_scratch_owner ADOPTS an inherited stale marker — if this
-    process's pid recycles a crashed owner's dir, the marker is
-    re-stamped to OUR start time so a concurrent reaper never sees
-    recorded != live for an alive process (the r13 ADVICE hazard:
-    deleting a live run's scratch mid-run)."""
-    import os
-    import subprocess
-    import tempfile
-
-    from multithreaded_mapreduce_library_spark.operators.maintenance import (
-        _SCRATCH_OWNER_MARKER,
-        _proc_starttime,
-        _stamp_scratch_owner,
-        compact_rewrite,
-    )
-
-    if _proc_starttime(os.getpid()) is None:
-        import pytest
-
-        pytest.skip("/proc unavailable: marker layer is inert here")
-
-    _write_orders(tmp_path, [(1, 1, "O", 10.0), (2, 7, "F", 20.0)])
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_compact")
-
-    # a live-but-not-ours pid to impersonate dir ownership with
-    squatter = subprocess.Popen(["sleep", "60"])
-    try:
-        mismarked = os.path.join(root, f"pid-{squatter.pid}")
-        os.makedirs(mismarked, exist_ok=True)
-        with open(os.path.join(mismarked, _SCRATCH_OWNER_MARKER), "w") as f:
-            f.write("0")  # boot-time start tick: provably not the sleeper's
-        compact_rewrite(spark, str(tmp_path))
-        assert not os.path.exists(mismarked), (
-            "live pid with mismatched owner marker must be reaped"
-        )
-
-        markerless = os.path.join(root, f"pid-{squatter.pid}")
-        os.makedirs(markerless, exist_ok=True)
-        compact_rewrite(spark, str(tmp_path))
-        assert os.path.exists(markerless), (
-            "marker-less live pid dir must be kept (conservative)"
-        )
-        os.rmdir(markerless)
-    finally:
-        squatter.kill()
-        squatter.wait()
-
-    # adoption: OUR dir carrying a dead predecessor's marker gets
-    # re-stamped to our live start time on the next stamp call
-    ours = os.path.join(root, f"pid-{os.getpid()}")
-    os.makedirs(ours, exist_ok=True)
-    marker = os.path.join(ours, _SCRATCH_OWNER_MARKER)
-    with open(marker, "w") as f:
-        f.write("0")
-    _stamp_scratch_owner(ours)
-    with open(marker) as f:
-        assert f.read().strip() == _proc_starttime(os.getpid()), (
-            "inherited stale marker must be adopted (re-stamped)"
-        )
-
-
-def test_reap_recycled_scratch_double_check_aborts_on_adoption(tmp_path):
-    """The r14 ADVICE residual-TOCTOU closure: the reaper's delete path
-    (_reap_recycled_scratch) re-reads the owner marker IMMEDIATELY before
-    rmtree, so an adoption that landed between the reaper's first
-    recycled-owner read and the delete aborts the reap. Simulated
-    exactly at that seam: (a) a dir whose marker has been re-stamped to
-    the live pid's start time by the time the delete path runs — i.e.
-    the concurrent adoption won the race — must survive and return
-    False; (b) a dir whose marker is still provably stale must be reaped
-    and return True; (c) a marker-less dir stays (conservative)."""
-    import os
-
-    from multithreaded_mapreduce_library_spark.operators.maintenance import (
-        _SCRATCH_OWNER_MARKER,
-        _proc_starttime,
-        _reap_recycled_scratch,
-    )
-
-    if _proc_starttime(os.getpid()) is None:
-        import pytest
-
-        pytest.skip("/proc unavailable: marker layer is inert here")
-
-    # (a) adoption won: marker matches OUR live start time (we play the
-    # recycled-pid adopter); the double-check must abort the reap even
-    # though a first read moments earlier saw a stale marker.
-    adopted = tmp_path / "pid-adopted"
-    adopted.mkdir()
-    (adopted / _SCRATCH_OWNER_MARKER).write_text(_proc_starttime(os.getpid()))
-    assert _reap_recycled_scratch(str(adopted), os.getpid()) is False
-    assert adopted.exists(), "adopted live dir must survive the reap"
-
-    # (b) still stale on the second read: reap proceeds.
-    stale = tmp_path / "pid-stale"
-    stale.mkdir()
-    (stale / _SCRATCH_OWNER_MARKER).write_text("0")
-    assert _reap_recycled_scratch(str(stale), os.getpid()) is True
-    assert not stale.exists(), "provably-recycled dir must be reaped"
-
-    # (c) marker vanished between the reads (e.g. adopter mid-rewrite):
-    # conservative keep.
-    bare = tmp_path / "pid-bare"
-    bare.mkdir()
-    assert _reap_recycled_scratch(str(bare), os.getpid()) is False
-    assert bare.exists(), "marker-less dir must be kept"
-
-
 def _batch_split_ids(want_batch, want_corpus):
     """First `want_batch` ids whose md5 bucket is 0 of INC_SPLIT_MOD and
     first `want_corpus` whose bucket is nonzero — the same split the

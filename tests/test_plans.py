@@ -1054,7 +1054,7 @@ def test_mmr_rerank_distributed_work_is_shortlist_bounded(spark, sf_dir):
     assert pairs.count() <= 20 * 19, "pair space must be shortlist-bounded"
 
 
-def test_compact_apply_rewrite_is_lossless_and_planned_layout(spark, sf_dir):
+def test_compact_apply_rewrite_is_lossless_and_planned_layout(spark, sf_dir, tmp_path):
     """compact_apply must be a PHYSICAL rewrite that (a) loses nothing —
     the round-tripped table is row-identical to the source projection —
     and (b) lands exactly the planned layout: one data file per output
@@ -1068,7 +1068,8 @@ def test_compact_apply_rewrite_is_lossless_and_planned_layout(spark, sf_dir):
     )
     from multithreaded_mapreduce_library_spark.sources import load_table
 
-    applied, target = compact_rewrite(spark, sf_dir)
+    target = str(tmp_path / "out")
+    applied = compact_rewrite(spark, sf_dir, target)
 
     # the routing join itself must BROADCAST the O(#files) mapping onto
     # the row scan — replicate the pre-write frame and pin the node type

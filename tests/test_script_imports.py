@@ -65,12 +65,13 @@ def test_bench_clock_includes_builder(spark):
 
 
 def test_snap_plans_refuses_to_overwrite(monkeypatch, tmp_path):
-    """snap_plans checks every target before starting a session: with one
-    target already present it exits naming that file, leaves it unchanged
-    and never reaches get_spark, so no Spark job runs."""
+    """snap_plans and plan_sweep check their targets before starting a
+    session: with a target already present each exits naming that file,
+    leaves it unchanged and never reaches get_spark, so no Spark job
+    runs."""
     import pytest
 
-    from scripts import snap_plans
+    from scripts import plan_sweep, snap_plans
 
     monkeypatch.setattr(snap_plans, "REPO", str(tmp_path))
     sessions = []
@@ -83,4 +84,13 @@ def test_snap_plans_refuses_to_overwrite(monkeypatch, tmp_path):
         snap_plans.main(["r99", "before", "wordcount", "pricing_summary"])
     assert kept.read_text() == "committed evidence\n"
     assert sorted(os.listdir(kept.parent)) == ["pricing_summary_before.txt"]
+
+    monkeypatch.setattr(plan_sweep, "get_spark", lambda **kw: sessions.append(kw))
+    sweep = tmp_path / "plan_sweep.json"
+    sweep.write_text("{}\n")
+    with pytest.raises(SystemExit, match="plan_sweep.json"):
+        plan_sweep.main([str(sweep)])
+    with pytest.raises(SystemExit, match="Usage"):
+        plan_sweep.main([])
+    assert sweep.read_text() == "{}\n"
     assert not sessions

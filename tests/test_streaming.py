@@ -2088,19 +2088,24 @@ def test_run_to_memory_one_state_store_per_task_slot(spark, sf_dir, monkeypatch)
 def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir, tmp_path, monkeypatch):
     """The session's spark.sql.shuffle.partitions survives run_to_memory
     and run_versioned, after a clean run and after a stream that fails
-    mid-batch; run_versioned leaves no temp dir behind either way."""
+    mid-batch. run_versioned and compact_apply leave no temp dir behind
+    after a clean run or a raising write, and what they return still
+    collects with its dir gone and the session's cache cleared (an
+    eviction cannot send it back to the deleted files)."""
     import tempfile
 
     import pytest
+    from pyspark.sql import DataFrameWriter
     from pyspark.sql import functions as F
 
     from multithreaded_mapreduce_library_spark.operators.events import (
         tumbling_transform,
     )
     from multithreaded_mapreduce_library_spark.operators.maintenance import (
+        compact_apply,
         finalize_agg_state,
     )
-    from multithreaded_mapreduce_library_spark.sources import table_stream
+    from multithreaded_mapreduce_library_spark.sources import load_table, table_stream
     from multithreaded_mapreduce_library_spark.streaming.queries import (
         events_stream,
         mv_sink,
@@ -2127,13 +2132,32 @@ def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir, tmp_path, monk
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
 
         feed = table_stream(spark, sf_dir, "orders")
-        assert run_versioned(feed, v0, mv_sink, finalize_agg_state).count() > 0
+        settled = run_versioned(feed, v0, mv_sink, finalize_agg_state)
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
         assert not list(scratch.iterdir())
+        spark.catalog.clearCache()
+        n_orders = load_table(spark, sf_dir, "orders").count()
+        assert sum(r["n_orders"] for r in settled.collect()) == n_orders
         failing = feed.withColumn("o_custkey", F.raise_error(F.lit("boom")))
         with pytest.raises(Exception, match="boom"):
             run_versioned(failing, v0, mv_sink, finalize_agg_state)
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert not list(scratch.iterdir())
+
+        summary = compact_apply(spark, sf_dir)
+        assert not list(scratch.iterdir())
+        spark.catalog.clearCache()
+        assert sum(r["n_rows"] for r in summary.collect()) == n_orders
+        real_parquet = DataFrameWriter.parquet
+
+        def write_then_raise(self, path, *args, **kwargs):
+            real_parquet(self, path, *args, **kwargs)
+            raise RuntimeError("boom")
+
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "parquet", write_then_raise)
+            with pytest.raises(RuntimeError, match="boom"):
+                compact_apply(spark, sf_dir)
         assert not list(scratch.iterdir())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
