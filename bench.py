@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from multithreaded_mapreduce_library_spark.registry import load_all
-from multithreaded_mapreduce_library_spark.session import get_spark
+from multithreaded_mapreduce_library_spark.session import env_count, get_spark
 
 # Headline set: one representative per operator family (scan+agg, joins,
 # windows, text explode, dedup/LSH, vector search, event-time ops), plus
@@ -159,7 +159,16 @@ def _blas_once() -> float:
 
 def main(names: list[str]) -> None:
     """Time ``names`` (default: HEADLINE plus the ann_serving block)."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from multithreaded_mapreduce_library_spark.sources import default_sf_dir
+
+    sf_dir = default_sf_dir()
+    # best-of-N per query (default 3): the first run of a pipeline pays
+    # one-time whole-stage-codegen compilation (~0.5-1s for the wide LSH
+    # plans), and multi-stage plans (waiting_orders) show ±0.5s
+    # scheduling jitter at local[32] — best-of-3 reports steady-state
+    # cost, which is what scales with data volume. Read before the
+    # session starts, so a bad value fails without a JVM.
+    iters = env_count("SPARK_GRAFT_BENCH_ITERS", 3)
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
@@ -170,12 +179,6 @@ def main(names: list[str]) -> None:
     spark = get_spark(app_name="bench")
     warm_up(spark, specs, sf_dir)
 
-    # best-of-N per query (default 3): the first run of a pipeline pays
-    # one-time whole-stage-codegen compilation (~0.5-1s for the wide LSH
-    # plans), and multi-stage plans (waiting_orders) show ±0.5s
-    # scheduling jitter at local[32] — best-of-3 reports steady-state
-    # cost, which is what scales with data volume.
-    iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
     # Machine-load provenance: every bench dispute in rounds 3-5 turned
     # out to be a loaded box (single loaded runs read 50-100% high vs the
     # quiet-box band in PERF.md). Recording 1/5/15-min loadavg at start

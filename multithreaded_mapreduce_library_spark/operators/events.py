@@ -54,8 +54,8 @@ def json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the "identical results" claim (same pattern as joins._ASOF_ORACLE).
 def tumbling_transform(s: DataFrame) -> DataFrame:
     """Tumbling 1-hour windowed count/sum per event_type over a batch or
-    stream frame: time_tumbling, stream_tumbling and the multi-batch
-    replay test all run this one aggregation."""
+    stream frame: time_tumbling and stream_tumbling both run this one
+    aggregation."""
     return (
         s.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(

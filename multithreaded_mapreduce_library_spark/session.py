@@ -124,8 +124,20 @@ def _conf_dir(path: str | None):
             os.environ["SPARK_CONF_DIR"] = saved
 
 
+def env_count(name: str, default: int) -> int:
+    """The integer >= 1 in environment variable ``name``, or ``default``
+    when it is unset. Any other value raises naming the variable, so a
+    bad override fails before a JVM starts, not inside it."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    if not raw.strip().isdecimal() or int(raw) < 1:
+        raise ValueError(f"{name}={raw!r}: expected an integer >= 1")
+    return int(raw)
+
+
 def default_cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return env_count("SPARK_GRAFT_CPUS", 32)
 
 
 def get_spark(

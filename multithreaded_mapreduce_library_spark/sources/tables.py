@@ -65,8 +65,8 @@ def table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     never split one file across triggers). A fixture-layout change to a
     part-file DIRECTORY fails here with one clear message, not as a run of
     driver hash mismatches. Multi-batch replays are a deliberate act: the
-    test suite drives the streaming ``*_transform`` functions over a split
-    directory with maxFilesPerTrigger=1.
+    test suite runs the streaming builders with this function patched to
+    stream a split directory with maxFilesPerTrigger=1.
     """
     path = table_path(sf_dir, name)
     if not os.path.isfile(path):

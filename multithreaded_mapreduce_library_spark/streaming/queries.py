@@ -18,9 +18,10 @@ per key because the single-file fixture replays as ONE data batch —
 ``sources.table_stream`` hard-asserts that layout so a fixture change
 fails with one clear message instead of a run of hash mismatches. The
 batch-twin exactness tests in tests/test_streaming.py remain as a second,
-oracle-independent anchor, and its multi-batch replay suite drives the
-extracted ``*_transform`` functions over a time-split multi-file source
-(maxFilesPerTrigger=1) to verify REAL cross-batch state transitions.
+oracle-independent anchor, and its multi-batch replay suite runs the
+registered builders with ``table_stream`` patched to a time-split
+multi-file source (maxFilesPerTrigger=1) to verify REAL cross-batch
+state transitions.
 
 Batch twins with full DuckDB oracles live in ``operators/events.py``
 (time_tumbling / time_sliding / sessionize / event_funnel /
@@ -93,19 +94,26 @@ def _one_store_per_slot(spark: SparkSession):
 def run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into a
     memory sink, one state store per task slot (``_one_store_per_slot``),
-    and return the settled result as a batch DataFrame."""
+    and return the settled result as a batch DataFrame.
+
+    The sink's temp view is dropped before returning, also when the
+    stream fails: the returned frame holds the sink, so the settled rows
+    live on the driver only as long as that frame does."""
     spark = stream_df.sparkSession
     name = f"stream_sink_{next(_sink_ids)}"
-    with _one_store_per_slot(spark):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    try:
+        with _one_store_per_slot(spark):
+            q = (
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 @register(
@@ -157,7 +165,7 @@ def stream_sliding_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_transform(s: DataFrame) -> DataFrame:
-    """Watermarked dropDuplicates (shared with the multi-batch test)."""
+    """Watermarked dropDuplicates."""
     return (
         s.withWatermark("ts", "1 hour")
         .dropDuplicates(["event_id"])
@@ -194,7 +202,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def session_transform(s: DataFrame) -> DataFrame:
-    """Session windows + 30m watermark (shared with the multi-batch test)."""
+    """Session windows + 30m watermark."""
     return (
         s.withWatermark("ts", "30 minutes")
         .groupBy(F.session_window("ts", "15 minutes").alias("w"), "user_id")
@@ -239,9 +247,9 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def running_max_transform(s: DataFrame) -> DataFrame:
-    """Per-user running max/count via applyInPandasWithState (shared with
-    the multi-batch test, where state genuinely transitions across
-    batches and each batch re-emits the updated per-user row)."""
+    """Per-user running max/count via applyInPandasWithState; over a
+    multi-batch replay state genuinely transitions across batches and
+    each batch re-emits the updated per-user row."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     s = s.select("user_id", "value")
@@ -296,8 +304,7 @@ def stream_stateful_running_max(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_stream_join_transform(p_events: DataFrame, c_events: DataFrame) -> DataFrame:
     """The watermarked purchase-click interval join over two event
-    streams (shared with the multi-batch test, where join state buffers
-    across micro-batches)."""
+    streams; join state buffers across micro-batches."""
     p = (
         p_events.filter(F.col("event_type") == "purchase")
         .select(
@@ -365,8 +372,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def static_join_transform(s: DataFrame, cust: DataFrame) -> DataFrame:
-    """Broadcast stream-static enrichment + segment aggregation (shared
-    with the multi-batch test)."""
+    """Broadcast stream-static enrichment + segment aggregation."""
     joined = s.join(F.broadcast(cust), s.user_id == cust.c_custkey)
     return joined.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_events"),
@@ -407,9 +413,9 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def funnel_transform(s: DataFrame) -> DataFrame:
-    """The stateful click→purchase attribution funnel (shared with the
-    multi-batch test, where pending clicks committed to state in one
-    micro-batch are attributed by purchases arriving in later batches)."""
+    """The stateful click→purchase attribution funnel: pending clicks
+    committed to state in one micro-batch are attributed by purchases
+    arriving in later batches."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from multithreaded_mapreduce_library_spark.operators.events import FUNNEL_WINDOW_MIN
@@ -888,8 +894,7 @@ def stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_docs_transform(s: DataFrame) -> DataFrame:
     """Stateful streaming dedup membership over a documents stream —
-    the online twin of the batch dedup_exact family (shared with the
-    multi-batch and disorder tests).
+    the online twin of the batch dedup_exact family.
 
     Arrival contract (stated, like the watermark contracts above): the
     FIRST batch in which a content hash appears elects the keeper (min

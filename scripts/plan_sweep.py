@@ -30,6 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from multithreaded_mapreduce_library_spark.plans import formatted_plan
 from multithreaded_mapreduce_library_spark.registry import load_all
 from multithreaded_mapreduce_library_spark.session import get_spark
+from multithreaded_mapreduce_library_spark.sources import default_sf_dir
 
 USAGE = "Usage: python scripts/plan_sweep.py <out.json>"
 
@@ -74,7 +75,7 @@ def main(argv: list[str]) -> None:
             f"refusing to overwrite committed plan evidence: {out_path}"
             " (pick a new path or remove the file)"
         )
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = default_sf_dir()
     spark = get_spark(app_name="plan_sweep")
     specs = load_all()
     sweep: dict[str, dict[str, int]] = {}

@@ -11,6 +11,8 @@ import importlib
 import importlib.util
 import os
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "multithreaded_mapreduce_library_spark"
 
@@ -69,8 +71,6 @@ def test_snap_plans_refuses_to_overwrite(monkeypatch, tmp_path):
     session: with a target already present each exits naming that file,
     leaves it unchanged and never reaches get_spark, so no Spark job
     runs."""
-    import pytest
-
     from scripts import plan_sweep, snap_plans
 
     monkeypatch.setattr(snap_plans, "REPO", str(tmp_path))
@@ -94,3 +94,23 @@ def test_snap_plans_refuses_to_overwrite(monkeypatch, tmp_path):
         plan_sweep.main([])
     assert sweep.read_text() == "{}\n"
     assert not sessions
+
+
+@pytest.mark.parametrize("raw", ["0", "-2", "two", "1.5", ""])
+def test_numeric_env_overrides_reject_bad_values(monkeypatch, raw):
+    """SPARK_GRAFT_CPUS (session.default_cpus) and SPARK_GRAFT_BENCH_ITERS
+    (bench.main) take integers >= 1. Any other value fails naming its
+    variable, and bench.main fails before it reaches get_spark: a 0
+    would otherwise start local[0], or time no iteration and print a
+    non-JSON Infinity."""
+    import bench
+    from multithreaded_mapreduce_library_spark import session
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        session.default_cpus()
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ITERS", raw)
+    monkeypatch.setattr(bench, "get_spark", lambda **kw: pytest.fail("session started"))
+    with pytest.raises(ValueError, match="SPARK_GRAFT_BENCH_ITERS"):
+        bench.main([])

@@ -594,164 +594,184 @@ def test_asof_window_counts_same_timestamp_click(spark, tmp_path):
 
 
 # --- multi-batch replay suite ----------------------------------------------
-# The 8 streaming oracles all settle a single-file fixture that replays as
-# ONE micro-batch (events_stream hard-asserts that layout). These tests are
-# the other half of the story: split the events table into time-ordered
-# part files, replay with maxFilesPerTrigger=1 so availableNow executes
-# SEVERAL data batches, and drive the exact same *_transform logic the
-# gated builders use. Complete/append modes must settle to the same rows
-# as the single-batch replay (the time-ordered split means the final
-# watermark — and therefore the emitted set — is identical); update-mode
-# ops accumulate one row per key per batch, and their per-key FINAL state
-# (the max of the monotone counters) must equal the single-batch settle.
-# This is where cross-batch state transitions — the thing Structured
-# Streaming exists to do — actually happen and get verified.
+# The streaming oracles all settle a single-file fixture that replays as
+# ONE micro-batch (table_stream hard-asserts that layout). These tests are
+# the other half of the story: the `replay` seam runs a registered
+# builder as shipped, with table_stream patched to stream a table split
+# into part files one file per trigger, so availableNow executes SEVERAL
+# data batches. Complete/append modes must settle to the same rows as the
+# single-batch replay (the time-ordered split means the final watermark —
+# and therefore the emitted set — is identical); update-mode builders
+# return one row per key per batch, and their per-key FINAL state (the
+# max of the monotone counters) must equal the single-batch settle. This
+# is where cross-batch state transitions — the thing Structured Streaming
+# exists to do — actually happen and get verified.
 
-import itertools as _it
 import os as _os
 
+import pyarrow as _pa
 import pytest as _pytest
-
-_mb_sink_ids = _it.count()
 
 N_SPLIT_FILES = 3
 
+# pyarrow schemas of the synthetic streams; fixture slices keep their own
+EVENTS = _pa.schema(
+    [
+        ("event_id", _pa.int64()),
+        ("user_id", _pa.int64()),
+        ("event_type", _pa.string()),
+        ("ts", _pa.timestamp("us")),
+        ("value", _pa.float64()),
+        ("props", _pa.string()),
+    ]
+)
+DOCS = _pa.schema([("doc_id", _pa.int64()), ("text", _pa.string())])
 
-@_pytest.fixture(scope="module")
-def events_multi_dir(tmp_path_factory, sf_dir):
-    """events.parquet split into N time-ordered part files via pyarrow —
-    preserving the original physical column types bit-for-bit (the split
-    never round-trips through Spark, so nanos stay nanos)."""
+
+def write_split(root, name, parts, schema=None):
+    """Write table ``name`` under ``root`` as a directory with one parquet
+    file per batch, and return ``root``. A part is a pyarrow table (a
+    fixture slice keeps its stored layout, e.g. events' timestamp[ns]) or
+    a list of row tuples typed by ``schema``. The file source takes files
+    in mtime order at millisecond granularity, so back-to-back writes can
+    tie and arrive in either order; strictly increasing stamped mtimes
+    make the batch order the list order."""
+    import time
+
+    import pyarrow.parquet as pq
+
+    from multithreaded_mapreduce_library_spark.sources.tables import table_path
+
+    path = table_path(str(root), name)
+    _os.makedirs(path)
+    t0 = time.time() - 600
+    for i, part in enumerate(parts):
+        if not isinstance(part, _pa.Table):
+            part = _pa.Table.from_pylist(
+                [dict(zip(schema.names, r)) for r in part], schema=schema
+            )
+        f = _os.path.join(path, f"part-{i:02d}.parquet")
+        pq.write_table(part, f)
+        _os.utime(f, (t0 + 30 * i, t0 + 30 * i))
+    return str(root)
+
+
+def fixture_slices(sf_dir, name, keys=(), n=N_SPLIT_FILES):
+    """Fixture table ``name``, sorted by ``keys`` if any, cut into ``n``
+    contiguous pyarrow slices (the split never round-trips through Spark,
+    so the stored column types survive bit-for-bit)."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    out = tmp_path_factory.mktemp("events_multi")
-    t = pq.read_table(_os.path.join(sf_dir, "events.parquet"))
-    idx = pc.sort_indices(
-        t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
-    )
-    t = t.take(idx)
-    n = t.num_rows
-    bounds = [round(i * n / N_SPLIT_FILES) for i in range(N_SPLIT_FILES + 1)]
-    # FileStreamSource orders files by MILLISECOND-granularity mtime;
-    # back-to-back writes routinely tie within the same millisecond, which
-    # makes batch order a coin flip — and the transitions-delta test below
-    # is arrival-order-dependent (GroupState carries the previous event
-    # across batches). Stamp strictly increasing mtimes well apart so every
-    # consumer of this fixture inherits deterministic time-ordered arrival
-    # (same pattern as the first-arrival dedup tests further down).
-    import time as _time
+    from multithreaded_mapreduce_library_spark.sources.tables import table_path
 
-    t0 = _time.time() - 600
-    for i in range(N_SPLIT_FILES):
-        p = str(out / f"part-{i:02d}.parquet")
-        pq.write_table(
-            t.slice(bounds[i], bounds[i + 1] - bounds[i]),
-            p,
-        )
-        _os.utime(p, (t0 + 30 * i, t0 + 30 * i))
-    return str(out)
+    t = pq.read_table(table_path(sf_dir, name))
+    if keys:
+        t = t.take(pc.sort_indices(t, sort_keys=[(k, "ascending") for k in keys]))
+    bounds = [round(i * t.num_rows / n) for i in range(n + 1)]
+    return [t.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])]
 
 
-def _multi_batch_stream(spark, sf_dir, events_dir):
-    """Multi-file events stream: the table reader's schema pinning and ts
-    normalization (as events_stream), but one file per trigger over the
-    split directory."""
+def _started_queries(monkeypatch):
+    """Record every StreamingQuery that DataStreamWriter.start returns."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        q = start(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    return started
+
+
+def _data_batches(q):
+    return sum(1 for p in q.recentProgress if p.numInputRows > 0)
+
+
+@_pytest.fixture
+def replay(spark, monkeypatch):
+    """The replay seam: ``replay(name, split, sf_dir=split)`` runs
+    registered stream ``name``'s builder over ``sf_dir`` with every table
+    it streams read from its part-file directory under ``split``
+    (``write_split``), one file per trigger, schema-pinned and normalized
+    as ``table_stream`` does. ``events_stream`` and every builder resolve
+    ``table_stream`` from the queries module, so one patch covers all of
+    them; static sides still load from ``sf_dir``. Returns the builder's
+    frame and the one StreamingQuery it ran."""
     from multithreaded_mapreduce_library_spark.sources.tables import (
         _normalize,
         _read_raw,
+        table_path,
+    )
+    from multithreaded_mapreduce_library_spark.streaming import queries
+
+    def run(name, split, sf_dir=None):
+        def split_stream(spark, _sf_dir, table):
+            stream = (
+                spark.readStream.schema(_read_raw(spark, split, table).schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(table_path(split, table))
+            )
+            return _normalize(table, stream)
+
+        with monkeypatch.context() as m:
+            m.setattr(queries, "table_stream", split_stream)
+            started = _started_queries(m)
+            out = SPECS[name].builder(spark, sf_dir or split)
+        (q,) = started
+        return out, q
+
+    return run
+
+
+@_pytest.fixture(scope="module")
+def events_split(tmp_path_factory, sf_dir):
+    """events split into N_SPLIT_FILES (ts, event_id)-ordered part files."""
+    return write_split(
+        tmp_path_factory.mktemp("events_split"),
+        "events",
+        fixture_slices(sf_dir, "events", ("ts", "event_id")),
     )
 
-    schema = _read_raw(spark, sf_dir, "events").schema
-    s = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
+
+@_pytest.fixture(scope="module")
+def docs_split(tmp_path_factory, sf_dir):
+    """documents split into N_SPLIT_FILES doc_id-ordered part files."""
+    return write_split(
+        tmp_path_factory.mktemp("docs_split"),
+        "documents",
+        fixture_slices(sf_dir, "documents", ("doc_id",)),
     )
-    return _normalize("events", s)
 
 
-def _run_multi(stream_df, mode):
-    """run_to_memory twin that also reports how many DATA batches ran —
-    the suite's own guard that the replay was genuinely multi-batch."""
-    spark = stream_df.sparkSession
-    name = f"mb_sink_{next(_mb_sink_ids)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        n_data_batches = sum(
-            1 for p in q.recentProgress if p.numInputRows > 0
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name), n_data_batches
-
-
-def test_multibatch_complete_modes_settle_to_batch(spark, sf_dir, events_multi_dir):
+def test_multibatch_complete_modes_settle_to_batch(spark, sf_dir, events_split, replay):
     """Complete-mode aggs re-emit the full settled set each batch — after
     the last batch the sink holds exactly the single-batch answer, state
     having transitioned through N partial views on the way."""
-    from multithreaded_mapreduce_library_spark.operators.events import (
-        tumbling_transform,
-    )
-    from multithreaded_mapreduce_library_spark.sources import load_table
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        static_join_transform,
-    )
-
-    got, n_batches = _run_multi(
-        tumbling_transform(_multi_batch_stream(spark, sf_dir, events_multi_dir)),
-        "complete",
-    )
-    assert n_batches >= 2, f"replay ran {n_batches} data batches — not multi-batch"
-    assert _rows(got) == _rows(SPECS["stream_tumbling"].builder(spark, sf_dir))
-
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    got, n_batches = _run_multi(
-        static_join_transform(
-            _multi_batch_stream(spark, sf_dir, events_multi_dir), cust
-        ),
-        "complete",
-    )
-    assert n_batches >= 2
-    assert _rows(got) == _rows(SPECS["stream_static_join"].builder(spark, sf_dir))
+    for name in ("stream_tumbling", "stream_static_join"):
+        got, q = replay(name, events_split, sf_dir)
+        n_batches = _data_batches(q)
+        assert n_batches >= 2, f"{name}: replay ran {n_batches} data batches — not multi-batch"
+        assert _rows(got) == _rows(SPECS[name].builder(spark, sf_dir)), name
 
 
-def test_multibatch_append_modes_settle_to_batch(spark, sf_dir, events_multi_dir):
+def test_multibatch_append_modes_settle_to_batch(spark, sf_dir, events_split, replay):
     """Append-mode windows/sessions/dedup: because the split is
     time-ordered, every intermediate watermark only finalizes windows no
     later event can touch, so the union of per-batch emissions equals the
     single-batch settled set — nothing extra, nothing dropped."""
-    from multithreaded_mapreduce_library_spark.operators.events import (
-        sliding_transform,
-    )
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        dedup_transform,
-        session_transform,
-    )
-
-    for transform, gated in (
-        (sliding_transform, "stream_sliding_watermark"),
-        (session_transform, "stream_session"),
-        (dedup_transform, "stream_dedup"),
-    ):
-        got, n_batches = _run_multi(
-            transform(_multi_batch_stream(spark, sf_dir, events_multi_dir)),
-            "append",
-        )
-        assert n_batches >= 2, f"{gated}: only {n_batches} data batches"
-        assert _rows(got) == _rows(SPECS[gated].builder(spark, sf_dir)), gated
+    for name in ("stream_sliding_watermark", "stream_session", "stream_dedup"):
+        got, q = replay(name, events_split, sf_dir)
+        n_batches = _data_batches(q)
+        assert n_batches >= 2, f"{name}: only {n_batches} data batches"
+        assert _rows(got) == _rows(SPECS[name].builder(spark, sf_dir)), name
 
 
-def test_multibatch_update_state_transitions(spark, sf_dir, events_multi_dir):
+def test_multibatch_update_state_transitions(spark, sf_dir, events_split, replay):
     """Update mode is where multi-batch actually differs: each batch emits
     the UPDATED per-key row, so the sink accumulates one row per key per
     touching batch. The per-key final state (max of the monotone
@@ -760,16 +780,8 @@ def test_multibatch_update_state_transitions(spark, sf_dir, events_multi_dir):
     crossed a batch boundary."""
     from pyspark.sql import functions as F
 
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        funnel_transform,
-        running_max_transform,
-    )
-
-    got, n_batches = _run_multi(
-        running_max_transform(_multi_batch_stream(spark, sf_dir, events_multi_dir)),
-        "update",
-    )
-    assert n_batches >= 2
+    got, q = replay("stream_stateful_running_max", events_split, sf_dir)
+    assert _data_batches(q) >= 2
     n_rows = got.count()
     n_users = got.select("user_id").distinct().count()
     assert n_rows > n_users, (
@@ -783,37 +795,38 @@ def test_multibatch_update_state_transitions(spark, sf_dir, events_multi_dir):
         SPECS["stream_stateful_running_max"].builder(spark, sf_dir)
     )
 
-    got, n_batches = _run_multi(
-        funnel_transform(_multi_batch_stream(spark, sf_dir, events_multi_dir)),
-        "update",
-    )
-    assert n_batches >= 2
-    final = got.groupBy("user_id").agg(
-        F.max("n_clicks").alias("n_clicks"),
-        F.max("n_converted").alias("n_converted"),
-    )
+    got, q = replay("stream_funnel", events_split, sf_dir)
+    assert _data_batches(q) >= 2
     # Cross-batch attribution: pending clicks committed to state by an
     # earlier batch are attributed by purchases arriving in a later one —
     # the per-key final totals must equal the single-batch replay (which
     # itself equals the batch event_funnel oracle).
-    assert _rows(final) == _rows(SPECS["stream_funnel"].builder(spark, sf_dir))
+    assert _funnel_totals(got) == _funnel_totals(
+        SPECS["stream_funnel"].builder(spark, sf_dir)
+    )
 
 
-def test_multibatch_stream_stream_join(spark, sf_dir, events_multi_dir):
+def _funnel_totals(got):
+    """stream_funnel's per-user final (n_clicks, n_converted): update mode
+    emits a user once per batch that touches it, and both counters only
+    grow, so the final state is the per-user max."""
+    from pyspark.sql import functions as F
+
+    return {
+        r["user_id"]: (r["n_clicks"], r["n_converted"])
+        for r in got.groupBy("user_id")
+        .agg(F.max("n_clicks").alias("n_clicks"), F.max("n_converted").alias("n_converted"))
+        .collect()
+    }
+
+
+def test_multibatch_stream_stream_join(spark, sf_dir, events_split, replay):
     """Stream-stream join state buffers across batches: clicks from early
     batches must still match purchases arriving in later ones (within the
     watermark bound). The time-ordered split keeps every match inside the
     2h watermark, so the appended set equals the single-batch replay."""
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        stream_stream_join_transform,
-    )
-
-    joined = stream_stream_join_transform(
-        _multi_batch_stream(spark, sf_dir, events_multi_dir),
-        _multi_batch_stream(spark, sf_dir, events_multi_dir),
-    )
-    got, n_batches = _run_multi(joined, "append")
-    assert n_batches >= 2
+    got, q = replay("stream_stream_join", events_split, sf_dir)
+    assert _data_batches(q) >= 2
     assert _rows(got) == _rows(SPECS["stream_stream_join"].builder(spark, sf_dir))
 
 
@@ -823,18 +836,11 @@ def test_events_stream_rejects_multi_file_layout(spark, sf_dir, tmp_path, name):
     (sources.table_stream, under events_stream too): a part-file
     DIRECTORY at <name>.parquet must fail fast with the layout message,
     not surface as a run of oracle hash mismatches."""
-    import pyarrow.parquet as pq
-
     from multithreaded_mapreduce_library_spark.sources import table_stream
 
-    t = pq.read_table(_os.path.join(sf_dir, f"{name}.parquet"))
-    parts = tmp_path / "bad_sf" / f"{name}.parquet"
-    parts.mkdir(parents=True)
-    half = t.num_rows // 2
-    pq.write_table(t.slice(0, half), str(parts / "part-00.parquet"))
-    pq.write_table(t.slice(half), str(parts / "part-01.parquet"))
+    bad_sf = write_split(tmp_path, name, fixture_slices(sf_dir, name, n=2))
     with _pytest.raises(AssertionError, match="single parquet"):
-        table_stream(spark, str(tmp_path / "bad_sf"), name)
+        table_stream(spark, bad_sf, name)
 
 
 def test_table_stream_schema_matches_load_table(spark, sf_dir):
@@ -852,65 +858,41 @@ def test_table_stream_schema_matches_load_table(spark, sf_dir):
     assert isinstance(stream.schema["ts"].dataType, TimestampType)
 
 
-def test_multibatch_funnel_event_time_disorder(spark, tmp_path):
+def test_multibatch_funnel_event_time_disorder(tmp_path, replay):
     """The funnel update loop's c > t keep branch is unreachable in
     ordered replays but load-bearing under cross-batch event-time
     disorder: a click committed to state in batch 1 with a purchase
     arriving in batch 2 at an EARLIER event time. The purchase must not
     attribute the future click (a naive `t - c <= WINDOW` check would:
     t - c is negative, trivially inside the window) and must leave it
-    pending. Batch file order is forced via mtimes."""
+    pending."""
     import datetime as dt
-    import time as _time
 
-    from pyspark.sql import functions as F
-
-    from multithreaded_mapreduce_library_spark.sources.tables import (
-        normalize_events_ts,
-    )
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        funnel_transform,
-    )
-
-    src = tmp_path / "disorder"
-    src.mkdir()
     T = dt.datetime(2024, 6, 1, 12, 0, 0)
-    schema = (
-        "event_id long, user_id long, event_type string, ts timestamp,"
-        " value double, props string"
+    split = write_split(
+        tmp_path,
+        "events",
+        [
+            # batch 1: user 1 clicks at T+2h (far in the "future" of batch
+            # 2's purchase — outside its window even if wrongly attributed)
+            [(1, 1, "click", T + dt.timedelta(hours=2), 1.0, "{}")],
+            # batch 2: user 1 purchase at T — event time BEFORE the
+            # pending click
+            [(2, 1, "purchase", T, 1.0, "{}")],
+        ],
+        EVENTS,
     )
-    # batch 1: user 1 clicks at T+2h (far in the "future" of batch 2's
-    # purchase — outside its window even if wrongly attributed)
-    spark.createDataFrame(
-        [(1, 1, "click", T + dt.timedelta(hours=2), 1.0, "{}")], schema
-    ).coalesce(1).write.parquet(str(src / "f1"))
-    _time.sleep(1.1)  # file source orders same-mtime files arbitrarily
-    # batch 2: user 1 purchase at T — event time BEFORE the pending click
-    spark.createDataFrame(
-        [(2, 1, "purchase", T, 1.0, "{}")], schema
-    ).coalesce(1).write.parquet(str(src / "f2"))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    got, n_batches = _run_multi(funnel_transform(normalize_events_ts(stream)), "update")
-    assert n_batches >= 2, "disorder scenario requires the click and purchase in separate batches"
-    final = got.groupBy("user_id").agg(
-        F.max("n_clicks").alias("n_clicks"),
-        F.max("n_converted").alias("n_converted"),
-    ).collect()
-    assert len(final) == 1
-    r = final[0]
+    got, q = replay("stream_funnel", split)
+    assert _data_batches(q) >= 2, "disorder scenario requires the click and purchase in separate batches"
+    r = _funnel_totals(got)
     # correct: the future click stays pending, nothing converts; the
     # naive branchless loop would report n_converted=1 here
-    assert (r["n_clicks"], r["n_converted"]) == (1, 0), (
+    assert r == {1: (1, 0)}, (
         f"disordered purchase wrongly attributed a future click: {r}"
     )
 
 
-def test_multibatch_funnel_click_side_disorder_within_lateness(spark, tmp_path):
+def test_multibatch_funnel_click_side_disorder_within_lateness(tmp_path, replay):
     """Click-side disorder, the direction the c > t keep branch does NOT
     cover: a future-timestamped click lands in batch 1 alongside an older
     click, and the older click's attributing purchase arrives in batch 2
@@ -921,61 +903,36 @@ def test_multibatch_funnel_click_side_disorder_within_lateness(spark, tmp_path):
     window + lateness beyond it, so the within-allowance purchase still
     attributes. Expected: 2 clicks, 1 conversion."""
     import datetime as dt
-    import time as _time
 
-    from pyspark.sql import functions as F
-
-    from multithreaded_mapreduce_library_spark.sources.tables import (
-        normalize_events_ts,
-    )
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        funnel_transform,
-    )
-
-    src = tmp_path / "click_disorder"
-    src.mkdir()
     T = dt.datetime(2024, 6, 1, 12, 0, 0)
-    schema = (
-        "event_id long, user_id long, event_type string, ts timestamp,"
-        " value double, props string"
-    )
-    # batch 1: click at T, then a click 2h in the future — the future
-    # click pushes the watermark to T+2h; with window=lateness=1h the
-    # expiry cutoff is exactly T, so the first click survives the batch
-    spark.createDataFrame(
+    split = write_split(
+        tmp_path,
+        "events",
         [
-            (1, 1, "click", T, 1.0, "{}"),
-            (2, 1, "click", T + dt.timedelta(hours=2), 1.0, "{}"),
+            # batch 1: click at T, then a click 2h in the future — the
+            # future click pushes the watermark to T+2h; with
+            # window=lateness=1h the expiry cutoff is exactly T, so the
+            # first click survives the batch
+            [
+                (1, 1, "click", T, 1.0, "{}"),
+                (2, 1, "click", T + dt.timedelta(hours=2), 1.0, "{}"),
+            ],
+            # batch 2: purchase at T+30min — 90min behind the watermark but
+            # only 30min after the first click: in-window, must convert it;
+            # the future click is kept pending by the c > t branch
+            [(3, 1, "purchase", T + dt.timedelta(minutes=30), 1.0, "{}")],
         ],
-        schema,
-    ).coalesce(1).write.parquet(str(src / "f1"))
-    _time.sleep(1.1)  # file source orders same-mtime files arbitrarily
-    # batch 2: purchase at T+30min — 90min behind the watermark but only
-    # 30min after the first click: in-window, must convert it; the future
-    # click is kept pending by the c > t branch
-    spark.createDataFrame(
-        [(3, 1, "purchase", T + dt.timedelta(minutes=30), 1.0, "{}")], schema
-    ).coalesce(1).write.parquet(str(src / "f2"))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
+        EVENTS,
     )
-    got, n_batches = _run_multi(funnel_transform(normalize_events_ts(stream)), "update")
-    assert n_batches >= 2, "scenario requires the clicks and purchase in separate batches"
-    final = got.groupBy("user_id").agg(
-        F.max("n_clicks").alias("n_clicks"),
-        F.max("n_converted").alias("n_converted"),
-    ).collect()
-    assert len(final) == 1
-    r = final[0]
-    assert (r["n_clicks"], r["n_converted"]) == (2, 1), (
+    got, q = replay("stream_funnel", split)
+    assert _data_batches(q) >= 2, "scenario requires the clicks and purchase in separate batches"
+    r = _funnel_totals(got)
+    assert r == {1: (2, 1)}, (
         f"watermark expiry lost a click a within-allowance purchase needed: {r}"
     )
 
 
-def test_multibatch_transitions_deltas_sum_to_batch(spark, sf_dir, events_multi_dir):
+def test_multibatch_transitions_deltas_sum_to_batch(spark, sf_dir, events_split, replay):
     """stream_transitions emits per-batch DELTA counts; across the
     time-split multi-file replay the per-(user, pair) SUMS must equal the
     single-batch settle (== the batch oracle). The time-ordered split
@@ -984,15 +941,8 @@ def test_multibatch_transitions_deltas_sum_to_batch(spark, sf_dir, events_multi_
     equality here proves the state really crosses batches."""
     from pyspark.sql import functions as F
 
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        transitions_transform,
-    )
-
-    got, n_batches = _run_multi(
-        transitions_transform(_multi_batch_stream(spark, sf_dir, events_multi_dir)),
-        "update",
-    )
-    assert n_batches >= 2
+    got, q = replay("stream_transitions", events_split, sf_dir)
+    assert _data_batches(q) >= 2
     summed = got.groupBy("user_id", "prev_type", "next_type").agg(
         F.sum("n_transitions").cast("long").alias("n_transitions")
     )
@@ -1003,7 +953,7 @@ def test_multibatch_transitions_deltas_sum_to_batch(spark, sf_dir, events_multi_
     assert got.count() > single.count()
 
 
-def test_multibatch_funnel_purchase_disorder_rescues_old_click(spark, tmp_path):
+def test_multibatch_funnel_purchase_disorder_rescues_old_click(tmp_path, replay):
     """Regression for the purchase-loop drop path: a click made stale by
     an out-of-window purchase in batch 1 must STAY pending (not be
     dropped with the conversion scan), because a disordered purchase
@@ -1012,60 +962,48 @@ def test_multibatch_funnel_purchase_disorder_rescues_old_click(spark, tmp_path):
     the moment the out-of-window purchase scanned it, and the rescue
     purchase found nothing."""
     import datetime as dt
-    import time as _time
 
-    from pyspark.sql import functions as F
-
-    from multithreaded_mapreduce_library_spark.sources.tables import (
-        normalize_events_ts,
-    )
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        funnel_transform,
-    )
-
-    src = tmp_path / "rescue"
-    src.mkdir()
     T = dt.datetime(2024, 6, 1, 12, 0, 0)
-    schema = (
-        "event_id long, user_id long, event_type string, ts timestamp,"
-        " value double, props string"
-    )
-    # batch 1: click at T, then a purchase 70min later — outside the
-    # 60-min window, so it converts nothing; watermark advances to T+70m
-    spark.createDataFrame(
+    split = write_split(
+        tmp_path,
+        "events",
         [
-            (1, 1, "click", T, 1.0, "{}"),
-            (2, 1, "purchase", T + dt.timedelta(minutes=70), 1.0, "{}"),
+            # batch 1: click at T, then a purchase 70min later — outside
+            # the 60-min window, so it converts nothing; watermark
+            # advances to T+70m
+            [
+                (1, 1, "click", T, 1.0, "{}"),
+                (2, 1, "purchase", T + dt.timedelta(minutes=70), 1.0, "{}"),
+            ],
+            # batch 2: disordered purchase at T+15min — only 55min behind
+            # the watermark (inside the 60-min lateness allowance) and
+            # in-window of the click: it must find the click still
+            # pending and convert it
+            [(3, 1, "purchase", T + dt.timedelta(minutes=15), 1.0, "{}")],
         ],
-        schema,
-    ).coalesce(1).write.parquet(str(src / "f1"))
-    _time.sleep(1.1)
-    # batch 2: disordered purchase at T+15min — only 55min behind the
-    # watermark (inside the 60-min lateness allowance) and in-window of
-    # the click: it must find the click still pending and convert it
-    spark.createDataFrame(
-        [(3, 1, "purchase", T + dt.timedelta(minutes=15), 1.0, "{}")], schema
-    ).coalesce(1).write.parquet(str(src / "f2"))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
+        EVENTS,
     )
-    got, n_batches = _run_multi(funnel_transform(normalize_events_ts(stream)), "update")
-    assert n_batches >= 2
-    final = got.groupBy("user_id").agg(
-        F.max("n_clicks").alias("n_clicks"),
-        F.max("n_converted").alias("n_converted"),
-    ).collect()
-    assert len(final) == 1
-    r = final[0]
-    assert (r["n_clicks"], r["n_converted"]) == (1, 1), (
+    got, q = replay("stream_funnel", split)
+    assert _data_batches(q) >= 2
+    r = _funnel_totals(got)
+    assert r == {1: (1, 1)}, (
         f"within-allowance disordered purchase failed to rescue the click: {r}"
     )
 
 
-def test_multibatch_transitions_disorder_retracts_split_pair(spark, tmp_path):
+def _summed_pairs(got, *keys):
+    """Per-(keys, prev_type, next_type) sums of stream_transitions' deltas."""
+    from pyspark.sql import functions as F
+
+    return {
+        tuple(r)[:-1]: r["n"]
+        for r in got.groupBy(*keys, "prev_type", "next_type")
+        .agg(F.sum("n_transitions").cast("long").alias("n"))
+        .collect()
+    }
+
+
+def test_multibatch_transitions_disorder_retracts_split_pair(tmp_path, replay):
     """Cross-batch event-time disorder for stream_transitions (the r7
     ADVICE case): batch 1 carries view@T -> purchase@T+10m (pair
     view->purchase emitted), batch 2 delivers click@T+5m — late but well
@@ -1076,51 +1014,23 @@ def test_multibatch_transitions_disorder_retracts_split_pair(spark, tmp_path):
     pair standing. Summed deltas must equal the batch answer over the
     union of rows."""
     import datetime as dt
-    import time as _time
 
-    from pyspark.sql import functions as F
-
-    from multithreaded_mapreduce_library_spark.sources.tables import (
-        normalize_events_ts,
-    )
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        transitions_transform,
-    )
-
-    src = tmp_path / "trans_disorder"
-    src.mkdir()
     T = dt.datetime(2024, 6, 1, 12, 0, 0)
-    schema = (
-        "event_id long, user_id long, event_type string, ts timestamp,"
-        " value double, props string"
-    )
-    spark.createDataFrame(
+    split = write_split(
+        tmp_path,
+        "events",
         [
-            (1, 1, "view", T, 1.0, "{}"),
-            (2, 1, "purchase", T + dt.timedelta(minutes=10), 1.0, "{}"),
+            [
+                (1, 1, "view", T, 1.0, "{}"),
+                (2, 1, "purchase", T + dt.timedelta(minutes=10), 1.0, "{}"),
+            ],
+            [(3, 1, "click", T + dt.timedelta(minutes=5), 1.0, "{}")],
         ],
-        schema,
-    ).coalesce(1).write.parquet(str(src / "f1"))
-    _time.sleep(1.1)  # file source orders same-mtime files arbitrarily
-    spark.createDataFrame(
-        [(3, 1, "click", T + dt.timedelta(minutes=5), 1.0, "{}")], schema
-    ).coalesce(1).write.parquet(str(src / "f2"))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
+        EVENTS,
     )
-    got, n_batches = _run_multi(
-        transitions_transform(normalize_events_ts(stream)), "update"
-    )
-    assert n_batches >= 2, "disorder scenario requires the late click in its own batch"
-    summed = {
-        (r["prev_type"], r["next_type"]): r["n"]
-        for r in got.groupBy("prev_type", "next_type")
-        .agg(F.sum("n_transitions").cast("long").alias("n"))
-        .collect()
-    }
+    got, q = replay("stream_transitions", split)
+    assert _data_batches(q) >= 2, "disorder scenario requires the late click in its own batch"
+    summed = _summed_pairs(got)
     # net totals == batch answer on the union; the split pair nets to 0
     assert summed.get(("view", "click")) == 1, summed
     assert summed.get(("click", "purchase")) == 1, summed
@@ -1130,58 +1040,30 @@ def test_multibatch_transitions_disorder_retracts_split_pair(spark, tmp_path):
     )
 
 
-def test_multibatch_transitions_beyond_allowance_row_is_dropped(spark, tmp_path):
+def test_multibatch_transitions_beyond_allowance_row_is_dropped(tmp_path, replay):
     """The other side of the lateness contract: a row sorting at or
     before the SETTLED last event (watermark - allowance) is
     late-beyond-allowance and must be dropped without corrupting state
     or totals — batch 1 spans 3h so its first event settles, batch 2's
     row at T-10m precedes it. Totals must remain exactly batch 1's."""
     import datetime as dt
-    import time as _time
 
-    from pyspark.sql import functions as F
-
-    from multithreaded_mapreduce_library_spark.sources.tables import (
-        normalize_events_ts,
-    )
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        transitions_transform,
-    )
-
-    src = tmp_path / "trans_late"
-    src.mkdir()
     T = dt.datetime(2024, 6, 1, 12, 0, 0)
-    schema = (
-        "event_id long, user_id long, event_type string, ts timestamp,"
-        " value double, props string"
-    )
-    spark.createDataFrame(
+    split = write_split(
+        tmp_path,
+        "events",
         [
-            (1, 1, "view", T, 1.0, "{}"),
-            (2, 1, "click", T + dt.timedelta(hours=3), 1.0, "{}"),
+            [
+                (1, 1, "view", T, 1.0, "{}"),
+                (2, 1, "click", T + dt.timedelta(hours=3), 1.0, "{}"),
+            ],
+            [(3, 1, "search", T - dt.timedelta(minutes=10), 1.0, "{}")],
         ],
-        schema,
-    ).coalesce(1).write.parquet(str(src / "f1"))
-    _time.sleep(1.1)
-    spark.createDataFrame(
-        [(3, 1, "search", T - dt.timedelta(minutes=10), 1.0, "{}")], schema
-    ).coalesce(1).write.parquet(str(src / "f2"))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
+        EVENTS,
     )
-    got, n_batches = _run_multi(
-        transitions_transform(normalize_events_ts(stream)), "update"
-    )
-    assert n_batches >= 2
-    summed = {
-        (r["prev_type"], r["next_type"]): r["n"]
-        for r in got.groupBy("prev_type", "next_type")
-        .agg(F.sum("n_transitions").cast("long").alias("n"))
-        .collect()
-    }
+    got, q = replay("stream_transitions", split)
+    assert _data_batches(q) >= 2
+    summed = _summed_pairs(got)
     assert summed == {("view", "click"): 1}, (
         f"late-beyond-allowance row leaked into the totals: {summed}"
     )
@@ -1256,7 +1138,7 @@ def test_checkpoint_restart_restores_transitions_pending_buffer(spark, tmp_path)
     }, f"pending buffer not restored across restart: {got}"
 
 
-def test_multibatch_transitions_random_disorder_sums_to_batch(spark, tmp_path):
+def test_multibatch_transitions_random_disorder_sums_to_batch(tmp_path, replay):
     """Property anchor for the retraction algebra: a synthetic 3-user
     event set spanning 30 minutes (strictly inside the 1-hour allowance,
     so nothing settles and nothing may drop) is shuffled by a SEEDED
@@ -1265,16 +1147,6 @@ def test_multibatch_transitions_random_disorder_sums_to_batch(spark, tmp_path):
     for an arrival order with no relation to event time."""
     import datetime as dt
     import random
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from multithreaded_mapreduce_library_spark.sources.tables import (
-        normalize_events_ts,
-    )
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        transitions_transform,
-    )
 
     T = dt.datetime(2024, 6, 1, 12, 0, 0)
     types = ["view", "click", "search", "purchase"]
@@ -1291,10 +1163,6 @@ def test_multibatch_transitions_random_disorder_sums_to_batch(spark, tmp_path):
         for u in (1, 2, 3)
         for i in range(10)
     ]
-    schema = (
-        "event_id long, user_id long, event_type string, ts timestamp,"
-        " value double, props string"
-    )
     # expected: batch pair counts over the pinned (ts, event_id) order
     expected: dict = {}
     for u in (1, 2, 3):
@@ -1303,32 +1171,14 @@ def test_multibatch_transitions_random_disorder_sums_to_batch(spark, tmp_path):
             k = (u, a[2], b[2])
             expected[k] = expected.get(k, 0) + 1
 
-    src = tmp_path / "rand_disorder"
-    src.mkdir()
     shuffled = rows[:]
     rng.shuffle(shuffled)
-    for i in range(3):
-        spark.createDataFrame(shuffled[i::3], schema).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-        _time.sleep(1.1)  # file source orders same-mtime files arbitrarily
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
+    split = write_split(
+        tmp_path, "events", [shuffled[i::3] for i in range(3)], EVENTS
     )
-    got_df, n_batches = _run_multi(
-        transitions_transform(normalize_events_ts(stream)), "update"
-    )
-    assert n_batches >= 2
-    got = {
-        (r["user_id"], r["prev_type"], r["next_type"]): r["n"]
-        for r in got_df.groupBy("user_id", "prev_type", "next_type")
-        .agg(F.sum("n_transitions").cast("long").alias("n"))
-        .collect()
-        if r["n"] != 0
-    }
+    got_df, q = replay("stream_transitions", split)
+    assert _data_batches(q) >= 2
+    got = {k: n for k, n in _summed_pairs(got_df, "user_id").items() if n != 0}
     assert got == expected, f"disorder sums diverged from batch: {got} != {expected}"
 
 
@@ -1474,100 +1324,53 @@ def test_stream_upsert_checkpoint_restart_applies_once(spark, sf_dir, tmp_path):
 # --- stream_dedup_docs: streaming dedup membership ---------------------------
 
 
-def test_multibatch_dedup_docs_settles_to_batch(spark, sf_dir, tmp_path):
-    """documents split into 3 id-ordered files: the final per-hash state
-    after a genuinely multi-batch replay equals batch dedup_exact."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        dedup_docs_transform,
-    )
-
-    src = tmp_path / "docs_multi"
-    src.mkdir()
-    t = pq.read_table(_os.path.join(sf_dir, "documents.parquet"))
-    t = t.take(pc.sort_indices(t, sort_keys=[("doc_id", "ascending")]))
-    n = t.num_rows
-    bounds = [round(i * n / 3) for i in range(4)]
-    # the settle equality below is arrival-order-independent on a
-    # duplicate-free fixture, but stamp strictly increasing mtimes anyway
-    # (the events_multi_dir convention): back-to-back pyarrow writes can
-    # tie within FileStreamSource's millisecond mtime granularity, and
-    # deterministic id-ordered arrival keeps this robust if a regenerated
-    # fixture ever contains an exact duplicate pair
-    import time as _time
-
-    t0 = _time.time() - 600
-    for i in range(3):
-        p = str(src / f"part-{i:02d}.parquet")
-        pq.write_table(t.slice(bounds[i], bounds[i + 1] - bounds[i]), p)
-        _os.utime(p, (t0 + 30 * i, t0 + 30 * i))
-    schema = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(src))
-    )
-    got, n_batches = _run_multi(dedup_docs_transform(stream), "update")
-    assert n_batches >= 2, f"replay ran {n_batches} data batches — not multi-batch"
-    # update mode accumulates one row per hash per batch it appears in;
-    # copies is monotone, so the final state is the max-copies row per hash
+def _final_keepers(got):
+    """stream_dedup_docs' settled state: update mode emits one row per
+    hash per batch it appears in, and copies is monotone, so the final
+    state is the max-copies row per hash."""
     final = {}
     for r in got.collect():
         prev = final.get(r["content_hash"])
         if prev is None or r["copies"] > prev[1]:
             final[r["content_hash"]] = (r["keeper_id"], r["copies"])
+    return final
+
+
+def test_multibatch_dedup_docs_settles_to_batch(spark, sf_dir, docs_split, replay):
+    """documents split into 3 id-ordered files: the final per-hash state
+    after a genuinely multi-batch replay equals batch dedup_exact."""
+    got, q = replay("stream_dedup_docs", docs_split, sf_dir)
+    n_batches = _data_batches(q)
+    assert n_batches >= 2, f"replay ran {n_batches} data batches — not multi-batch"
     expected = {
         r["content_hash"]: (r["keeper_id"], r["copies"])
         for r in SPECS["dedup_exact"].builder(spark, sf_dir).collect()
     }
-    assert final == expected
+    assert _final_keepers(got) == expected
 
 
-def test_stream_dedup_docs_membership_and_first_arrival(spark, tmp_path):
+def test_stream_dedup_docs_membership_and_first_arrival(tmp_path, replay):
     """The contract proper, on a synthesized duplicate-bearing stream
     (the fixture has no exact duplicates — same situation as
     stream_dedup's unique keys): cross-batch membership (a duplicate
     arriving AFTER its keeper's batch only increments copies) and
     first-arrival-wins under disorder (a SMALLER doc_id arriving later
     does not steal keepership — the already-admitted doc stays keeper)."""
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        dedup_docs_transform,
-    )
-
-    src = tmp_path / "dup_docs"
-    src.mkdir()
-    schema = "doc_id long, text string"
-    spark.createDataFrame(
-        [(10, "alpha"), (11, "beta"), (12, "alpha")], schema
-    ).coalesce(1).write.parquet(str(src / "f0"))
-    spark.createDataFrame(
-        [(2, "alpha"), (13, "gamma"), (14, "beta")], schema
-    ).coalesce(1).write.parquet(str(src / "f1"))
-    # keeper election is arrival-order-dependent and FileStreamSource
-    # orders by modification time — stamp distinct mtimes so back-to-back
-    # writes can't tie within the fs timestamp granularity (the flake the
-    # minhash twin's test hit under full-suite load)
-    import time as _time
-
-    t0 = _time.time() - 120
-    for d, t in ((src / "f0", t0), (src / "f1", t0 + 30)):
-        for root, _dirs, files in _os.walk(str(d)):
-            for f in files:
-                _os.utime(_os.path.join(root, f), (t, t))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    got, n_batches = _run_multi(dedup_docs_transform(stream), "update")
-    assert n_batches == 2, f"expected 2 data batches, ran {n_batches}"
-    final = {}
-    for r in got.collect():
-        prev = final.get(r["content_hash"])
-        if prev is None or r["copies"] > prev[1]:
-            final[r["content_hash"]] = (r["keeper_id"], r["copies"])
     import hashlib
 
+    split = write_split(
+        tmp_path,
+        "documents",
+        [
+            [(10, "alpha"), (11, "beta"), (12, "alpha")],
+            [(2, "alpha"), (13, "gamma"), (14, "beta")],
+        ],
+        DOCS,
+    )
+    got, q = replay("stream_dedup_docs", split)
+    n_batches = _data_batches(q)
+    assert n_batches == 2, f"expected 2 data batches, ran {n_batches}"
+    final = _final_keepers(got)
     h = {s: hashlib.md5(s.encode()).hexdigest() for s in ("alpha", "beta", "gamma")}
     # alpha: keeper 10 (batch-1 min), NOT 2 — first arrival wins; copies 3
     assert final[h["alpha"]] == (10, 3)
@@ -1659,7 +1462,7 @@ def test_multibatch_stream_incremental_agg_settles_to_batch(spark, sf_dir, tmp_p
     ) == truth
 
 
-def test_stream_dedup_minhash_first_arrival_and_multibatch(spark, sf_dir, tmp_path):
+def test_stream_dedup_minhash_first_arrival_and_multibatch(spark, sf_dir, tmp_path, docs_split, replay):
     """The near-dup gate's arrival contract, on a synthesized stream:
     (a) identical texts collide on every band — the first-arrival batch
     elects the bucket keeper; (b) a duplicate arriving in a LATER batch
@@ -1667,57 +1470,25 @@ def test_stream_dedup_minhash_first_arrival_and_multibatch(spark, sf_dir, tmp_pa
     doc_id does NOT steal keepership (same contract as the exact-hash
     twin); (d) an id-ordered multi-batch replay of the fixture settles
     to the single-batch gated answer."""
-    from pyspark.sql import functions as F
 
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        minhash_bands_transform,
-        near_dup_membership_transform,
+    def gate(split, sf=None):
+        out, q = replay("stream_dedup_minhash", split, sf)
+        rows = {r["doc_id"]: (r["is_near_dup"], r["dup_of"]) for r in out.collect()}
+        return rows, _data_batches(q)
+
+    # synthesized disorder stream; keeper election belongs to the first
+    # batch, so this contract is arrival-ORDER-dependent
+    got, n_batches = gate(
+        write_split(
+            tmp_path,
+            "documents",
+            [
+                [(10, "a b c d e"), (11, "p q r s t"), (12, "a b c d e")],
+                [(2, "a b c d e"), (13, "m n o u v")],
+            ],
+            DOCS,
+        )
     )
-
-    def run_gate(src_glob, schema):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_glob)
-        )
-        emitted, n_batches = _run_multi(
-            near_dup_membership_transform(minhash_bands_transform(stream)), "update"
-        )
-        final = emitted.groupBy("doc_id").agg(
-            F.max(F.col("rep") >= 0).alias("is_near_dup"),
-            F.coalesce(F.min(F.when(F.col("rep") >= 0, F.col("rep"))), F.lit(-1))
-            .cast("long")
-            .alias("dup_of"),
-        )
-        return {r["doc_id"]: (r["is_near_dup"], r["dup_of"]) for r in final.collect()}, n_batches
-
-    # Unlike the suite's other multi-batch replays (complete-mode aggs,
-    # monotone update states), THIS contract is arrival-ORDER-dependent:
-    # keeper election belongs to the first batch. FileStreamSource orders
-    # files by modification time, and back-to-back writes can tie within
-    # the filesystem's timestamp granularity under load, flipping batch
-    # order — so stamp each step's files with strictly increasing mtimes.
-    import time as _time
-
-    def _stamp(d, t):
-        for root, _dirs, files in _os.walk(str(d)):
-            for f in files:
-                _os.utime(_os.path.join(root, f), (t, t))
-
-    # synthesized disorder stream
-    src = tmp_path / "near_dup_docs"
-    src.mkdir()
-    schema = "doc_id long, text string"
-    t0 = _time.time() - 120
-    spark.createDataFrame(
-        [(10, "a b c d e"), (11, "p q r s t"), (12, "a b c d e")], schema
-    ).coalesce(1).write.parquet(str(src / "f0"))
-    spark.createDataFrame(
-        [(2, "a b c d e"), (13, "m n o u v")], schema
-    ).coalesce(1).write.parquet(str(src / "f1"))
-    _stamp(src / "f0", t0)
-    _stamp(src / "f1", t0 + 30)
-    got, n_batches = run_gate(str(src / "*"), schema)
     assert n_batches == 2
     assert got[10] == (False, -1)  # batch-1 min elects keeper
     assert got[12] == (True, 10)  # same-batch duplicate
@@ -1725,20 +1496,7 @@ def test_stream_dedup_minhash_first_arrival_and_multibatch(spark, sf_dir, tmp_pa
     assert got[11] == (False, -1) and got[13] == (False, -1)
 
     # id-ordered fixture replay settles to the gated single-batch answer
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    multi = tmp_path / "docs_multi"
-    multi.mkdir()
-    t = pq.read_table(_os.path.join(sf_dir, "documents.parquet"))
-    t = t.take(pc.sort_indices(t, sort_keys=[("doc_id", "ascending")]))
-    bounds = [round(i * t.num_rows / 3) for i in range(4)]
-    for i in range(3):
-        p = str(multi / f"part-{i:02d}.parquet")
-        pq.write_table(t.slice(bounds[i], bounds[i + 1] - bounds[i]), p)
-        _os.utime(p, (t0 + 60 + 10 * i, t0 + 60 + 10 * i))
-    doc_schema = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet")).schema
-    got_multi, n_batches = run_gate(str(multi), doc_schema)
+    got_multi, n_batches = gate(docs_split, sf_dir)
     assert n_batches >= 2
     expected = {
         r["doc_id"]: (r["is_near_dup"], r["dup_of"])
@@ -1764,126 +1522,22 @@ def test_stream_dedup_semantic_equals_batch_incremental(spark, sf_dir):
     assert got == want
 
 
-def test_multibatch_semantic_admission_settles_to_batch(spark, sf_dir, tmp_path):
-    """Arriving batch vectors split into 3 files and replayed one file
-    per trigger: because each admission decision depends only on the
-    (vector, static index) pair, the settled multi-batch state must equal
-    the batch answer regardless of arrival batching."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from multithreaded_mapreduce_library_spark.functions import h31
-    from multithreaded_mapreduce_library_spark.operators.dedup import INC_SPLIT_MOD
-    from multithreaded_mapreduce_library_spark.operators.similarity import (
-        _FX,
-        _SPARK_NORM,
-        _assign_to_cells,
-        _dvec,
-        _lloyd_train,
-        _load_embeddings,
+def test_multibatch_semantic_admission_settles_to_batch(spark, sf_dir, tmp_path, replay):
+    """Embeddings split into 3 id-ordered files and replayed one file per
+    trigger: because each admission decision depends only on the
+    (vector, static index) pair, the settled multi-batch answer must
+    equal the batch answer regardless of arrival batching."""
+    split = write_split(
+        tmp_path, "embeddings", fixture_slices(sf_dir, "embeddings", ("vec_id",))
     )
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        semantic_admission_stream_transform,
-    )
-
-    is_batch = F.pmod(h31(F.col("vec_id").cast("string")), F.lit(INC_SPLIT_MOD)) == 0
-    e = _load_embeddings(spark, str(sf_dir)).select(
-        "vec_id", _dvec("embedding").alias("v")
-    )
-    corpus = e.filter(~is_batch)
-    centroid_rows = _lloyd_train(corpus)
-    idx = (
-        _assign_to_cells(corpus, centroid_rows)
-        .withColumn("norm", F.expr(_SPARK_NORM))
-        .select(
-            F.col("vec_id").alias("od"), F.col("cid").alias("cid_i"),
-            F.col("v").alias("vb"), F.col("norm").alias("norm_b"),
-        )
-    )
-
-    # split ONLY the arriving split into 3 id-ordered files
-    src = tmp_path / "emb_multi"
-    src.mkdir()
-    batch_ids = {r["vec_id"] for r in e.filter(is_batch).select("vec_id").collect()}
-    t = pq.read_table(_os.path.join(str(sf_dir), "embeddings.parquet"))
-    t = t.filter(pc.is_in(t["vec_id"], value_set=__import__("pyarrow").array(sorted(batch_ids))))
-    t = t.take(pc.sort_indices(t, sort_keys=[("vec_id", "ascending")]))
-    n = t.num_rows
-    bounds = [round(i * n / 3) for i in range(4)]
-    # per-vector decisions are stream-static (arrival-order-independent),
-    # but stamp mtimes like every other pyarrow multi-file fixture so the
-    # batch composition of the replay is deterministic run to run
-    import time as _time
-
-    t0 = _time.time() - 600
-    for i in range(3):
-        p = str(src / f"part-{i:02d}.parquet")
-        pq.write_table(t.slice(bounds[i], bounds[i + 1] - bounds[i]), p)
-        _os.utime(p, (t0 + 30 * i, t0 + 30 * i))
-    schema = spark.read.parquet(
-        _os.path.join(str(sf_dir), "embeddings.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    got, n_batches = _run_multi(
-        semantic_admission_stream_transform(stream, centroid_rows, idx), "update"
-    )
+    got, q = replay("stream_dedup_semantic", split, sf_dir)
+    n_batches = _data_batches(q)
     assert n_batches >= 2, f"replay ran {n_batches} data batches — not multi-batch"
-    dec = {}
-    for r in got.groupBy("nd").agg(
-        F.max("n_cell").alias("n_cell"),
-        F.floor(F.max("max_c") * _FX + F.lit(0.5)).cast("long").alias("max_cos_fx"),
-        F.min("dup_raw").alias("dup_raw"),
-    ).collect():
-        dec[r["nd"]] = (r["n_cell"], r["max_cos_fx"], r["dup_raw"])
-    for r in SPECS["dedup_semantic_incremental"].builder(spark, str(sf_dir)).collect():
-        if r["n_cell"] > 0:
-            assert dec[r["vec_id"]] == (
-                r["n_cell"],
-                r["max_cos_fx"],
-                r["dup_of"] if r["is_dup"] else None,
-            ), f"vec {r['vec_id']} diverged"
-        else:
-            assert r["vec_id"] not in dec
+    want = SPECS["dedup_semantic_incremental"].builder(spark, sf_dir)
+    assert _rows(got) == _rows(want)
 
 
 # --- stream_lm_score (landed r18; pins migrated from test_staging.py) ------
-
-
-def _lm_static_model(spark, sf_dir):
-    """Rebuild stream_lm_score's static sides exactly as the builder does:
-    corpus-split bigram counts c2, derived c_ctx c1, and the corpus
-    vocabulary size."""
-    from pyspark.sql import functions as F
-
-    from multithreaded_mapreduce_library_spark.functions import h31, tokens
-    from multithreaded_mapreduce_library_spark.operators.dedup import INC_SPLIT_MOD
-    from multithreaded_mapreduce_library_spark.sources import load_table
-    from multithreaded_mapreduce_library_spark.streaming.queries import _BG_EXPR
-
-    is_batch = (
-        F.pmod(h31(F.col("doc_id").cast("string")), F.lit(INC_SPLIT_MOD)) == 0
-    )
-    d = load_table(spark, str(sf_dir), "documents")
-    toks_c = d.filter(~is_batch).select(tokens("text").alias("t"))
-    vocab_n = (
-        toks_c.select(F.explode("t").alias("w"))
-        .agg(F.count_distinct("w").alias("v"))
-        .collect()[0]["v"]
-    )
-    bgc = (
-        toks_c.filter(F.size("t") >= 2)
-        .select(F.explode(F.expr(_BG_EXPR)).alias("bgs"))
-        .select("bgs.w1", "bgs.w2")
-        .filter(F.col("w1").isNotNull() & F.col("w2").isNotNull())
-    )
-    c2 = bgc.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-    c1 = c2.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    return c2, c1, vocab_n, is_batch
 
 
 def test_stream_lm_score_known_values(spark, tmp_path):
@@ -1916,43 +1570,23 @@ def test_stream_lm_score_known_values(spark, tmp_path):
     assert got == {0: (2, 0.4), 4: (1, 0.333333)}
 
 
-def test_stream_lm_score_microbatch_plan_is_broadcast_model(spark, sf_dir):
+def test_stream_lm_score_microbatch_plan_is_broadcast_model(sf_dir, docs_split, replay):
     """The docstring's per-micro-batch claims, pinned on the EXECUTED
-    micro-batch plan (q.explain after the settled replay): both model
-    joins are BroadcastHashJoin (arriving rows never shuffle for the
-    joins — never a SortMergeJoin carrying the stream side), exactly TWO
-    FileScans total (the arriving split + ONE corpus scan: c_ctx's
-    subtree is a ReusedExchange of the corpus-scale (w1,w2) model agg —
-    the batch twin's r17 exchange-reuse lesson holding inside the
-    micro-batch plan), and the stream side's only exchange requirement
-    is the stateful doc_id aggregation."""
+    micro-batch plan (q.explain after a multi-batch replay of the
+    builder): both model joins are BroadcastHashJoin (arriving rows
+    never shuffle for the joins — never a SortMergeJoin carrying the
+    stream side), exactly TWO FileScans total (the arriving split + ONE
+    corpus scan: c_ctx's subtree is a ReusedExchange of the corpus-scale
+    (w1,w2) model agg — the batch twin's r17 exchange-reuse lesson
+    holding inside the micro-batch plan), and the stream side's only
+    exchange requirement is the stateful doc_id aggregation."""
     import contextlib
     import io
 
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        lm_score_stream_transform,
-        table_stream,
-    )
-
-    c2, c1, vocab_n, is_batch = _lm_static_model(spark, sf_dir)
-    stream = table_stream(spark, str(sf_dir), "documents").filter(is_batch)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            lm_score_stream_transform(stream, c2, c1, vocab_n)
-            .writeStream.format("memory")
-            .queryName("lm_plan_pin_sink")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            q.explain(True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _, q = replay("stream_lm_score", docs_split, sf_dir)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        q.explain(True)
     phys = buf.getvalue().split("== Physical Plan ==")[-1]
     assert phys.count("BroadcastHashJoin") == 2, "both model joins must broadcast"
     assert "SortMergeJoin" not in phys, "the stream side must never sort-merge"
@@ -1964,73 +1598,22 @@ def test_stream_lm_score_microbatch_plan_is_broadcast_model(spark, sf_dir):
     assert "StateStoreSave" in phys, "update-mode keyed agg must be stateful"
 
 
-def test_multibatch_stream_lm_score_settles_to_single_batch(spark, sf_dir, tmp_path):
+def test_multibatch_stream_lm_score_settles_to_single_batch(spark, sf_dir, docs_split, replay):
     """Cross-batch state transitions, the streaming-twin obligation: split
-    the arriving docs into 2 part files, replay with maxFilesPerTrigger=1
-    (several data batches), drive the SAME transform + monoid finalize,
-    and require the result equal the gated single-batch settle. Each doc
-    arrives whole (files split on row boundaries), so update-mode state
-    transitions happen across docs, and the max-merge finalize must be
+    the documents into 3 id-ordered part files, replay the builder with
+    maxFilesPerTrigger=1 (several data batches), and require the result
+    equal the gated single-batch settle. Each doc arrives whole (files
+    split on row boundaries), so update-mode state transitions happen
+    across docs, and the builder's max-merge finalize must be
     batching-invariant."""
-    import time as time_
-
-    import pyarrow.parquet as pq_
-    from pyspark.sql import functions as F
-
-    from multithreaded_mapreduce_library_spark.streaming.queries import (
-        lm_score_stream_transform,
-    )
-
     single = {
         tuple(r)
         for r in SPECS["stream_lm_score"].builder(spark, str(sf_dir)).collect()
     }
     assert single, "fixture must score at least one arriving doc"
-
-    c2, c1, vocab_n, is_batch = _lm_static_model(spark, sf_dir)
-
-    # split documents.parquet into 2 time-ordered part files
-    out = tmp_path / "docs_multi"
-    out.mkdir()
-    t = pq_.read_table(_os.path.join(str(sf_dir), "documents.parquet"))
-    n = t.num_rows
-    t0 = time_.time() - 600
-    for i, (lo, hi) in enumerate([(0, n // 2), (n // 2, n)]):
-        p = str(out / f"part-{i:02d}.parquet")
-        pq_.write_table(t.slice(lo, hi - lo), p)
-        _os.utime(p, (t0 + 30 * i, t0 + 30 * i))
-
-    schema = spark.read.parquet(
-        _os.path.join(str(sf_dir), "documents.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(out))
-        .filter(is_batch)
-    )
-    settled, n_batches = _run_multi(
-        lm_score_stream_transform(stream, c2, c1, vocab_n), "update"
-    )
-    assert n_batches >= 2, "replay must be genuinely multi-batch"
-    fin = settled.groupBy("doc_id").agg(
-        F.max("n_bigrams").cast("long").alias("n_bigrams"),
-        F.max("sum_fx").cast("long").alias("sum_fx"),
-    )
-    multi = {
-        tuple(r)
-        for r in fin.select(
-            "doc_id",
-            "n_bigrams",
-            (
-                F.floor(
-                    F.col("sum_fx").cast("double") / F.col("n_bigrams")
-                    + F.lit(0.5)
-                ) / F.lit(1000000)
-            ).alias("avg_bigram_p"),
-        ).collect()
-    }
-    assert multi == single
+    multi, q = replay("stream_lm_score", docs_split, sf_dir)
+    assert _data_batches(q) >= 2, "replay must be genuinely multi-batch"
+    assert {tuple(r) for r in multi.collect()} == single
 
 
 def test_stream_lm_score_empty_corpus_split(spark, tmp_path):
@@ -2049,22 +1632,6 @@ def test_stream_lm_score_empty_corpus_split(spark, tmp_path):
     assert [f.name for f in got.schema.fields] == [
         "doc_id", "n_bigrams", "avg_bigram_p",
     ]
-
-
-def _started_queries(monkeypatch):
-    """Record every StreamingQuery that DataStreamWriter.start returns."""
-    from pyspark.sql.streaming.readwriter import DataStreamWriter
-
-    started = []
-    start = DataStreamWriter.start
-
-    def recording_start(self, *args, **kwargs):
-        q = start(self, *args, **kwargs)
-        started.append(q)
-        return q
-
-    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
-    return started
 
 
 def test_run_to_memory_one_state_store_per_task_slot(spark, sf_dir, monkeypatch):
@@ -2088,7 +1655,8 @@ def test_run_to_memory_one_state_store_per_task_slot(spark, sf_dir, monkeypatch)
 def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir, tmp_path, monkeypatch):
     """The session's spark.sql.shuffle.partitions survives run_to_memory
     and run_versioned, after a clean run and after a stream that fails
-    mid-batch. run_versioned and compact_apply leave no temp dir behind
+    mid-batch. run_to_memory leaves no stream_sink_* view in the catalog
+    either way, and its clean frame still collects. run_versioned and compact_apply leave no temp dir behind
     after a clean run or a raising write, and what they return still
     collects with its dir gone and the session's cache cleared (an
     eviction cannot send it back to the deleted files)."""
@@ -2122,14 +1690,25 @@ def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir, tmp_path, monk
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "3")
     try:
-        run_to_memory(tumbling_transform(events_stream(spark, sf_dir)), "complete")
+        def sink_views():
+            return [
+                t.name for t in spark.catalog.listTables()
+                if t.name.startswith("stream_sink_")
+            ]
+
+        clean = run_to_memory(
+            tumbling_transform(events_stream(spark, sf_dir)), "complete"
+        )
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert not sink_views()
         failing = tumbling_transform(events_stream(spark, sf_dir)).select(
             "*", F.raise_error(F.lit("boom")).alias("fail")
         )
         with pytest.raises(Exception, match="boom"):
             run_to_memory(failing, "complete")
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert not sink_views()
+        assert len(clean.collect()) == SPECS["time_tumbling"].builder(spark, sf_dir).count()
 
         feed = table_stream(spark, sf_dir, "orders")
         settled = run_versioned(feed, v0, mv_sink, finalize_agg_state)
