@@ -65,30 +65,55 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table_stream(spark, sf_dir, "events")
 
 
+_CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
 @contextlib.contextmanager
 def _one_store_per_slot(spark: SparkSession):
-    """Pin state parallelism (``spark.sql.shuffle.partitions``) to
-    ``defaultParallelism`` for the block, restoring the session's own
-    value afterwards, also when the block fails.
+    """The runner's conf pin: state parallelism and the checkpoint file
+    manager for the block, each restored to the session's own value (or
+    unset) afterwards, also when the block fails.
 
-    A stateful operator gets one HDFS-backed state store per shuffle
-    partition, and every store costs a fixed load + commit + snapshot per
-    micro-batch whatever rows it holds. A 200-partition session would pay
-    that ~200 times per stateful op for a single-file replay (6-11s of pure
-    overhead at sf0.1), and any count above the task slots only queues more
-    fixed-cost tasks behind the slots without adding parallelism. On 4
-    cores, stream_tumbling's run took a median 1.33 s with 16 stores,
-    0.87 s with 4 and 0.76 s with 1, with identical rows (PERF.md, "Fixed
-    per-task cost").
+    State parallelism (``spark.sql.shuffle.partitions``) is pinned to
+    ``defaultParallelism``. A stateful operator gets one HDFS-backed state
+    store per shuffle partition, and every store costs a fixed load +
+    commit + snapshot per micro-batch whatever rows it holds. A
+    200-partition session would pay that ~200 times per stateful op for a
+    single-file replay (6-11s of pure overhead at sf0.1), and any count
+    above the task slots only queues more fixed-cost tasks behind the
+    slots without adding parallelism. On 4 cores, stream_tumbling's run
+    took a median 1.33 s with 16 stores, 0.87 s with 4 and 0.76 s with 1,
+    with identical rows (PERF.md, "Fixed per-task cost").
+
+    The checkpoint file manager is pinned to Spark's FileSystem-based one
+    for the package's throwaway checkpoints. Spark's default for ``file:``
+    paths goes through Hadoop ``FileContext``, whose local rename forks
+    ``readlink`` and ``chmod``: stream_tumbling's four state stores spent
+    a median 335 ms of a 1.02 s run in commit with it and 39 ms of a
+    0.66 s run without (PERF.md, "Fixed per-query cost"). Both managers
+    write a temp file and rename it; a local POSIX rename is atomic, each
+    checkpoint here has one writer, and Spark's checksum manager wraps
+    either. A caller who set the manager class or
+    ``spark.sql.streaming.checkpointLocation`` keeps their own manager.
     """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    conf = spark.conf
+    prev = conf.get("spark.sql.shuffle.partitions")
+    own_ckpt = conf.get(_CKPT_MANAGER, None) is None and (
+        conf.get("spark.sql.streaming.checkpointLocation", None) is None
     )
+    conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
+    if own_ckpt:
+        conf.set(_CKPT_MANAGER, _FS_CKPT_MANAGER)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        conf.set("spark.sql.shuffle.partitions", prev)
+        if own_ckpt:
+            conf.unset(_CKPT_MANAGER)
 
 
 def run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:

@@ -869,29 +869,23 @@ def test_merge_upsert_single_keyed_join(spark, sf_dir):
 def test_graph_pagerank_builds_without_driver_actions(spark, sf_dir):
     """Pin the r7 declarative rewrite: constructing the pagerank plan —
     per-iteration rank frames and the 1-row node-count broadcast
-    included — must launch NO Spark job beyond the two parquet
-    schema-inference reads its load_table calls share with every other
-    builder (the old version ran a driver-side count per build, one
-    extra job). Job groups bracket a bare load_table baseline and the
-    build; explain must execute nothing."""
+    included — must launch NO Spark job (the old version ran a
+    driver-side count per build). Bare load_table calls first put both
+    tables' schemas in the session's cache, so the build's own reads run
+    no inference job either; explain must execute nothing."""
     from multithreaded_mapreduce_library_spark.sources import load_table
 
     sc = spark.sparkContext
-    sc.setJobGroup("pagerank-scan-baseline", "bare source reads")
+    load_table(spark, sf_dir, "lineitem")
+    load_table(spark, sf_dir, "orders")
+    sc.setJobGroup("pagerank-build-audit", "plan construction")
     try:
-        load_table(spark, sf_dir, "lineitem")
-        load_table(spark, sf_dir, "orders")
-        baseline = len(sc.statusTracker().getJobIdsForGroup("pagerank-scan-baseline"))
-        sc.setJobGroup("pagerank-build-audit", "plan construction")
         df = SPECS["graph_pagerank"].builder(spark, sf_dir)
         _ = formatted_plan(df)  # explain must not execute either
         built = len(sc.statusTracker().getJobIdsForGroup("pagerank-build-audit"))
     finally:
         sc.setJobGroup("", "")
-    assert built <= baseline, (
-        f"plan construction launched {built - baseline} driver action(s) "
-        f"beyond the {baseline} scan-metadata jobs"
-    )
+    assert built == 0, f"plan construction launched {built} Spark job(s)"
 
 
 def test_split_contamination_gate_joins_stay_keyed(spark, sf_dir):

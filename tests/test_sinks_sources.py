@@ -4,6 +4,7 @@ and the reference-fidelity per-partition text sink."""
 from __future__ import annotations
 
 import glob
+import itertools
 import os
 
 from pyspark.sql import functions as F
@@ -172,6 +173,104 @@ def test_events_loader_handles_both_ts_layouts(spark, sf_dir, tmp_path):
     a, b = load(us_dir), load(ns_dir)
     assert a == b and len(a) == 2
     assert dict(load_table(spark, str(ns_dir), "events").dtypes)["ts"] == "timestamp"
+
+
+_groups = itertools.count()
+
+
+def _jobs(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"schema-cache-{next(_groups)}"
+    sc.setJobGroup(group, "schema cache audit")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_region(path, n_rows, extra=False):
+    """A small ``region`` table at ``path``; ``extra`` adds r_comment."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {
+        "r_regionkey": pa.array(range(n_rows), type=pa.int64()),
+        "r_name": pa.array([f"r{i}" for i in range(n_rows)]),
+    }
+    if extra:
+        cols["r_comment"] = pa.array(["c"] * n_rows)
+    pq.write_table(pa.table(cols), str(path))
+
+
+def test_schema_inferred_once_per_file_per_session(spark, sf_dir, tmp_path):
+    """The first read of a table file infers its schema (a Spark job); a
+    second load_table and a table_stream of the same file in the same
+    session launch no job. A change to a conf that shapes inference, and
+    a new session from ``spark.newSession()``, infer again."""
+    import shutil
+
+    from multithreaded_mapreduce_library_spark.sources import table_path, table_stream
+
+    shutil.copy(table_path(sf_dir, "orders"), table_path(str(tmp_path), "orders"))
+    d = str(tmp_path)
+    first, cold = _jobs(spark, lambda: load_table(spark, d, "orders"))
+    assert cold >= 1
+    (again, stream), warm = _jobs(
+        spark, lambda: (load_table(spark, d, "orders"), table_stream(spark, d, "orders"))
+    )
+    assert warm == 0
+    assert again.schema == first.schema == stream.schema
+    assert again.count() == load_table(spark, sf_dir, "orders").count()
+
+    key = "spark.sql.parquet.binaryAsString"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        _, conf_changed = _jobs(spark, lambda: load_table(spark, d, "orders"))
+    finally:
+        spark.conf.set(key, prev)
+    assert conf_changed >= 1
+
+    other = spark.newSession()
+    _, fresh = _jobs(spark, lambda: load_table(other, d, "orders"))
+    assert fresh >= 1
+
+
+def test_schema_cache_sees_a_file_rewritten_in_place(spark, tmp_path):
+    """A table file rewritten at the same path with an extra column shows
+    that column on the next load: the cached schema is stamped with the
+    file's size and mtime, not keyed by its path alone."""
+    from multithreaded_mapreduce_library_spark.sources import table_path
+
+    path = table_path(str(tmp_path), "region")
+    _write_region(path, 3)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    _write_region(path, 3, extra=True)
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert [r["r_comment"] for r in df.collect()] == ["c"] * 3
+
+
+def test_split_directory_reads_current_parts(spark, tmp_path):
+    """A table stored as a part-file directory reads every part, and parts
+    rewritten in place (the directory's own stat unchanged) with an extra
+    column show it: a directory's schema is not cached."""
+    from multithreaded_mapreduce_library_spark.sources import table_path
+
+    path = table_path(str(tmp_path), "region")
+    os.makedirs(path)
+    parts = [os.path.join(path, f"part-{i}.parquet") for i in range(2)]
+    for p in parts:
+        _write_region(p, 2)
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"] and df.count() == 4
+    for p in parts:
+        _write_region(p, 3, extra=True)
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert df.count() == 6
 
 
 def test_write_clustered_table_envelopes_and_pruned_read(spark, sf_dir, tmp_path):

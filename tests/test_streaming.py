@@ -1655,7 +1655,11 @@ def test_run_to_memory_one_state_store_per_task_slot(spark, sf_dir, monkeypatch)
 def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir, tmp_path, monkeypatch):
     """The session's spark.sql.shuffle.partitions survives run_to_memory
     and run_versioned, after a clean run and after a stream that fails
-    mid-batch. run_to_memory leaves no stream_sink_* view in the catalog
+    mid-batch. Each run starts its stream under the FileSystem-based
+    checkpoint manager, and the manager class is unset again afterwards;
+    a class the caller set stays in force during the run and after it,
+    and a caller-set checkpointLocation gets no pinned manager.
+    run_to_memory leaves no stream_sink_* view in the catalog
     either way, and its clean frame still collects. run_versioned and compact_apply leave no temp dir behind
     after a clean run or a raising write, and what they return still
     collects with its dir gone and the session's cache cleared (an
@@ -1665,6 +1669,7 @@ def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir, tmp_path, monk
     import pytest
     from pyspark.sql import DataFrameWriter
     from pyspark.sql import functions as F
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
 
     from multithreaded_mapreduce_library_spark.operators.events import (
         tumbling_transform,
@@ -1684,6 +1689,19 @@ def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir, tmp_path, monk
     scratch = tmp_path / "tmp"
     scratch.mkdir()
     monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    manager = "spark.sql.streaming.checkpointFileManagerClass"
+    pinned = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    at_start = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        at_start.append(spark.conf.get(manager, None))
+        return start(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
     v0 = spark.createDataFrame(
         [], "custkey long, cnt long, sum_c long, mx double, mn_d string"
     )
@@ -1696,23 +1714,29 @@ def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir, tmp_path, monk
                 if t.name.startswith("stream_sink_")
             ]
 
+        def restored():
+            return (
+                spark.conf.get("spark.sql.shuffle.partitions") == "3"
+                and spark.conf.get(manager, None) is None
+            )
+
         clean = run_to_memory(
             tumbling_transform(events_stream(spark, sf_dir)), "complete"
         )
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert restored()
         assert not sink_views()
         failing = tumbling_transform(events_stream(spark, sf_dir)).select(
             "*", F.raise_error(F.lit("boom")).alias("fail")
         )
         with pytest.raises(Exception, match="boom"):
             run_to_memory(failing, "complete")
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert restored()
         assert not sink_views()
         assert len(clean.collect()) == SPECS["time_tumbling"].builder(spark, sf_dir).count()
 
         feed = table_stream(spark, sf_dir, "orders")
         settled = run_versioned(feed, v0, mv_sink, finalize_agg_state)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert restored()
         assert not list(scratch.iterdir())
         spark.catalog.clearCache()
         n_orders = load_table(spark, sf_dir, "orders").count()
@@ -1720,8 +1744,26 @@ def test_run_to_memory_restores_shuffle_partitions(spark, sf_dir, tmp_path, monk
         failing = feed.withColumn("o_custkey", F.raise_error(F.lit("boom")))
         with pytest.raises(Exception, match="boom"):
             run_versioned(failing, v0, mv_sink, finalize_agg_state)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert restored()
         assert not list(scratch.iterdir())
+        assert at_start == [pinned] * 4
+
+        own = pinned.replace("FileSystemBased", "FileContextBased")
+        spark.conf.set(manager, own)
+        try:
+            run_to_memory(tumbling_transform(events_stream(spark, sf_dir)), "complete")
+            run_versioned(feed, v0, mv_sink, finalize_agg_state)
+            assert spark.conf.get(manager) == own
+        finally:
+            spark.conf.unset(manager)
+        assert at_start[4:] == [own] * 2
+
+        spark.conf.set("spark.sql.streaming.checkpointLocation", str(tmp_path / "ckpt"))
+        try:
+            run_to_memory(tumbling_transform(events_stream(spark, sf_dir)), "complete")
+        finally:
+            spark.conf.unset("spark.sql.streaming.checkpointLocation")
+        assert at_start[6:] == [None]
 
         summary = compact_apply(spark, sf_dir)
         assert not list(scratch.iterdir())
