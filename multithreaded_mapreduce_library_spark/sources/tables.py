@@ -48,7 +48,8 @@ _INFERENCE_CONFS = (
 )
 
 # session -> {realpath: (stamp, schema)}: one entry per file, so a rewrite
-# replaces its entry and a stopped session takes its entries with it.
+# replaces its entry and a stopped session takes its entries with it. Two
+# threads missing at once both infer and store the same schema.
 _schemas: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
@@ -58,9 +59,10 @@ def _stored_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
 
     Inference is a Spark job (a footer read), paid before any data moves:
     a read of sf0.1 lineitem took a median 0.104 s with it and 0.016 s
-    with the cached schema on 4 cores (PERF.md, "Fixed per-query cost"). An entry is keyed by the file's realpath and stamped with
-    its ``st_size``, ``st_mtime_ns`` and the ``_INFERENCE_CONFS`` values,
-    so a file rewritten in place, or a conf change, infers again. A part
+    with the cached schema on 4 cores (PERF.md, "Fixed per-query cost").
+    An entry is keyed by the file's realpath and stamped with its
+    ``st_size``, ``st_mtime_ns`` and the ``_INFERENCE_CONFS`` values, so
+    a file rewritten in place, or a conf change, infers again. A part
     file directory (the test replay's splits) or a non-local URI is
     inferred on every call: its listing can change while the path stays
     the same. The cache is per ``SparkSession`` object, so
